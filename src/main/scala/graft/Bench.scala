@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query on
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line with per-query and
   * total wall seconds.
@@ -31,9 +29,7 @@ object Bench {
     // scales partition count with data volume.
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
+    val spark = Sessions.builder(s"local[$cpus]", shufflePartitions)
       // mergeable-sketch partials (q142's bloom) legitimately exceed
       // the 1g default ONLY on the 100x scale probes, which also raise
       // SPARK_DRIVER_MEM — so the default rail is DERIVED from the
@@ -52,9 +48,6 @@ object Bench {
             case _ => "4g"
           }
         }))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -44,16 +44,7 @@ object Engine {
       mode: Normalizer.Mode = Normalizer.Strict,
       /** Where to persist the inferred schema YAML (reference dumps next
         * to outdir, main.py:74). None = don't persist. */
-      schemaOutDir: Option[String] = None,
-      /** Output file sizing (the A20 analogue: the reference calibrates
-        * ~12 MB fetch batches, extract_load.py:28-35; for a columnar
-        * sink the equivalent knob is rows per file). None = let the
-        * committer decide. */
-      maxRecordsPerFile: Option[Long] = None,
-      /** Sink format: "parquet" (reference behavior), "orc", or "csv"
-        * (csv writes a header; binary/nested columns are not
-        * csv-representable and will fail — columnar formats preferred). */
-      outputFormat: String = "parquet")
+      schemaOutDir: Option[String] = None)
 
   final case class JobResult(schema: InferredSchema, rowsWritten: Long, outPath: String)
 
@@ -118,9 +109,7 @@ object Engine {
       .observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("rows"))
     val outPath = s"${job.outDir.stripSuffix("/")}/${job.collection}"
-    var writer = normalized.write.mode("overwrite").format(job.outputFormat)
-    job.maxRecordsPerFile.foreach(n => writer = writer.option("maxRecordsPerFile", n))
-    if (job.outputFormat == "csv") writer = writer.option("header", "true")
+    val writer = normalized.write.mode("overwrite").format("parquet")
     job.partitionKey match {
       case Some(k) => writer.partitionBy(k).save(outPath)
       case None    => writer.save(outPath)

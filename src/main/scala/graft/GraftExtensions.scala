@@ -1,10 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
-import graft.functions.{CountInSet, DotProduct, RollingHash, SimHash64, SumStrLen}
 
 /** Session-extension registration of the engine's native expressions —
   * the `SparkSessionExtensions` injection point, so a deployment can
@@ -18,33 +14,10 @@ import graft.functions.{CountInSet, DotProduct, RollingHash, SimHash64, SumStrLe
   *
   * Functions are injected into the analyzer's registry (not temp
   * functions), so they resolve in views, `spark.sql`, and thrift
-  * sessions alike.
+  * sessions alike. Every program's session ([[Sessions]]) is built
+  * with it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[DotProduct].getName, null, name, usage, "", "", "", "", "", "", "scala_udf")
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      info("dot_product", "dot_product(a, b) - dot product of two ARRAY<DOUBLE> (codegen)"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("rolling_hash"),
-      info("rolling_hash", "rolling_hash(tokens, base) - polynomial rolling hash over ARRAY<STRING> (codegen)"),
-      (exprs: Seq[Expression]) => RollingHash(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("count_in_set"),
-      info("count_in_set", "count_in_set(toks, words) - elements of toks contained in the literal word set (codegen)"),
-      (exprs: Seq[Expression]) => CountInSet(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("sum_strlen"),
-      info("sum_strlen", "sum_strlen(toks) - total character count of an ARRAY<STRING> (codegen)"),
-      (exprs: Seq[Expression]) => SumStrLen(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(toks) - per-row 64-bit Charikar simhash over distinct tokens (codegen)"),
-      (exprs: Seq[Expression]) => SimHash64(exprs(0))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    graft.functions.GraftFunctions.table.foreach(ext.injectFunction)
 }

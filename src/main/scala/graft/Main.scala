@@ -1,18 +1,16 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.SparkSession
 
 import graft.normalize.Normalizer
+import graft.sources.Source
 
 /** CLI façade — the A23 surface (reference: mongo2pq/main.py:100-182,
-  * argparse `-u -o -s -d -c -p -S -C -D`). The offline stand-in for a
-  * Mongo URI is a directory of extended-JSON dumps: each `<name>.jsonl`
-  * under `<uri>/<db>/` is one collection (SURVEY.md §7.4.7 — no
-  * connector jar ships with the image; a live URI would swap only the
-  * source factory).
+  * argparse `-u -o -s -d -c -p -S -C -D`). The URI goes through
+  * [[graft.sources.Source]]: a `mongodb://` URI is the live connector,
+  * anything else a directory of extended-JSON dumps where each
+  * `<name>.jsonl` under `<uri>/<db>/` is one collection (SURVEY.md
+  * §7.4.7 — no connector jar ships with the image).
   *
   * Semantics mirrored from the reference:
   *  - no `--db` -> first database found (main.py:33-35);
@@ -63,22 +61,7 @@ object Main {
   }
 
   def run(args: Args): Int = {
-    val root = Paths.get(args.uri.get)
-    if (!Files.isDirectory(root)) {
-      System.err.println(s"ERROR: dump root ${args.uri.get} is not a directory"); return 1
-    }
-    // catalog resolution (A2): db = subdirectory, collection = *.jsonl
-    val dbs = Files.list(root).iterator().asScala.filter(Files.isDirectory(_)).toVector.sortBy(_.toString)
-    val dbDir: Path = args.db.map(root.resolve) getOrElse {
-      dbs.headOption.getOrElse { System.err.println("ERROR: no databases found"); return 1 }
-    }
-    val available = Files.list(dbDir).iterator().asScala
-      .filter(p => p.toString.endsWith(".jsonl") || p.toString.endsWith(".json"))
-      .toVector.sortBy(_.toString)
-    val wanted = if (args.collections.nonEmpty)
-      available.filter(p => args.collections.contains(stem(p)))
-    else available
-
+    val uri = args.uri.get
     // schema files map: stem -> path (main.py:56-58 analogue)
     val schemaFor: Map[String, String] = args.schemas.flatMap { s =>
       val p = Paths.get(s)
@@ -91,20 +74,27 @@ object Main {
       ok
     }
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+    val spark = Sessions.builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .appName("mongo2pqspark")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
-      wanted.foreach { coll =>
-        val name = stem(coll)
-        val result = Engine.run(spark, Engine.JobConfig(
-          input = coll.toString,
+      // catalog resolution (A2): a dump directory or a live MongoDB URI
+      val source = Source(spark, uri)
+      val dbs =
+        try source.listDatabases()
+        catch { case e: java.io.IOException =>
+          System.err.println(s"ERROR: cannot list databases at $uri: $e"); return 1 }
+      val db = args.db.orElse(dbs.headOption).getOrElse {
+        System.err.println("ERROR: no databases found"); return 1
+      }
+      val available = source.listCollections(db)
+      val wanted = if (args.collections.nonEmpty) available.filter(args.collections.contains)
+        else available
+      wanted.foreach { name =>
+        val result = Engine.runCollection(spark, source, db, Engine.JobConfig(
+          input = s"$uri/$db/$name",
           collection = name,
           outDir = args.outdir,
           schemaFile = schemaFor.get(name),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Diagnostic main: prints the formatted physical plan of each named
@@ -25,12 +24,7 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus.toString).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(s"local[$cpus]", shuffle.toString).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val withMetrics = sys.env.contains("SPARK_GRAFT_PLAN_METRICS")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.registry.map(_.name)

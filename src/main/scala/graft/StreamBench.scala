@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.streaming.StreamOps
@@ -24,12 +23,7 @@ object StreamBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val triggers = sys.env.getOrElse("SPARK_GRAFT_STREAM_TRIGGERS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -54,17 +48,19 @@ object StreamBench {
     def drive[T](name: String)(mk: () => (MemoryStream[T], org.apache.spark.sql.streaming.StreamingQuery, Seq[T])): (Double, Int, Double) = {
       spark.sparkContext.setJobDescription(s"streambench: $name")
       val (input, q, batch) = mk()
-      input.addData(batch); q.processAllAvailable() // warmup trigger
-      val t0 = System.nanoTime()
-      var served = 0
-      for (_ <- 1 to triggers) {
-        input.addData(batch)
-        q.processAllAvailable()
-        served += batch.size
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
-      q.stop()
-      (served / secs, served, secs)
+      // a failed trigger must not leave the query running
+      try {
+        input.addData(batch); q.processAllAvailable() // warmup trigger
+        val t0 = System.nanoTime()
+        var served = 0
+        for (_ <- 1 to triggers) {
+          input.addData(batch)
+          q.processAllAvailable()
+          served += batch.size
+        }
+        val secs = (System.nanoTime() - t0) / 1e9
+        (served / secs, served, secs)
+      } finally q.stop()
     }
 
     def noopSink(df: org.apache.spark.sql.DataFrame, name: String) = df

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,15 +6,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // default = cpus (the driver-gate contract); scale probes on the
-      // 10x/100x corpora override, exactly as Bench does
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // shuffle partitions default to cpus (the driver-gate contract);
+    // scale probes on the 10x/100x corpora override, exactly as Bench does
+    val spark = Sessions.builder(s"local[$cpus]",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Iteration aid (driver runs unfiltered): comma-separated query names.

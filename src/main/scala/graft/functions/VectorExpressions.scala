@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
@@ -67,6 +68,19 @@ case class DotProduct(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object DotProduct {
+  /** The expression's loop on plain arrays, for task-local kernels:
+    * strict left-to-right sum over min(len) pairs, so a kernel scores
+    * bit-identically to a plan that calls `dot_product`. */
+  def dot(a: Array[Double], b: Array[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += a(i) * b(i); i += 1 }
+    acc
+  }
 }
 
 /** Intersection cardinality of two SORTED-ascending ARRAY<LONG> sets
@@ -154,35 +168,53 @@ case class IntersectCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration + Column-level API for the engine's native functions. */
+/** The engine's SQL functions: one table, installed two ways — by
+  * [[graft.GraftExtensions]] when a session is built, and by
+  * [[GraftFunctions.register]] on a caller's session that was built
+  * without the extension. */
 object GraftFunctions {
 
-  /** Idempotently register the engine's expressions with a session's
-    * function registry (per-session, cheap to call from every query
-    * builder). */
+  private def fn(name: String, usage: String, cls: Class[_])(
+      build: Seq[Expression] => Expression): (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(cls.getName, null, name, s"$name$usage", "", "", "", "", "", "", "scala_udf"),
+      build)
+
+  /** (name, info, builder) of each expression — the shape
+    * `SparkSessionExtensions.injectFunction` takes. */
+  val table: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    fn("dot_product", "(a, b) - dot product of two ARRAY<DOUBLE> (codegen)",
+      classOf[DotProduct])(e => DotProduct(e(0), e(1))),
+    fn("rolling_hash", "(tokens, base) - polynomial rolling hash over ARRAY<STRING> (codegen)",
+      classOf[RollingHash])(e => RollingHash(e(0), e(1))),
+    fn("count_in_set", "(toks, words) - elements of toks contained in the literal word set (codegen)",
+      classOf[CountInSet])(e => CountInSet(e(0), e(1))),
+    fn("sum_strlen", "(toks) - total character count of an ARRAY<STRING> (codegen)",
+      classOf[SumStrLen])(e => SumStrLen(e(0))),
+    fn("simhash64", "(toks) - per-row 64-bit Charikar simhash over distinct tokens (codegen)",
+      classOf[SimHash64])(e => SimHash64(e(0))),
+    fn("py_norm", "(text, mode) - text through Python's int/float/epoch/iso grammar, NULL where Python raises",
+      classOf[PyNorm])(e => PyNorm(e(0), e(1))),
+    fn("minhash_sig", "(toks) - per-row MinHash minima and distinct 3-gram hash set (codegen)",
+      classOf[MinHashSig])(e => MinHashSig(e(0))),
+    fn("token_tf", "(toks) - distinct (tok, tf) pairs of an ARRAY<STRING> (codegen)",
+      classOf[TokenTf])(e => TokenTf(e(0))),
+    fn("intersect_count", "(a, b) - intersection size of two sorted ARRAY<BIGINT> sets (codegen)",
+      classOf[IntersectCount])(e => IntersectCount(e(0), e(1))))
+
+  /** Install every function the session's registry lacks. A name that
+    * is already there (from the extension, or an earlier call) is left
+    * alone, so this never replaces a function and is cheap to call
+    * from every public entry point that builds plans on a caller's
+    * session. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "count_in_set", exprs => CountInSet(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sum_strlen", exprs => SumStrLen(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "py_norm", exprs => PyNorm(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinHashSig(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_tf", exprs => TokenTf(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "intersect_count", exprs => IntersectCount(exprs(0), exprs(1)), "built-in")
+    val registry = spark.sessionState.functionRegistry
+    table.foreach { case (id, info, build) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, build)
+    }
   }
 
-  /** Sorted-set intersection cardinality (see [[IntersectCount]]);
-    * requires [[register]] on the owning session. */
+  /** Sorted-set intersection cardinality (see [[IntersectCount]]). */
   def intersect_count(a: Column, b: Column): Column =
     call_function("intersect_count", a, b)
 

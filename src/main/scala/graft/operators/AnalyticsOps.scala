@@ -672,7 +672,6 @@ object AnalyticsOps {
     Q("q106_frame_energy",
       (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         embeddings(s, dir)
           .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
           .select($"vec_id", explode(expr("sequence(0, 3)")).as("frame"), $"v")

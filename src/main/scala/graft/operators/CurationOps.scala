@@ -244,7 +244,6 @@ object CurationOps {
     Q("q82_keyword_scores",
       (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val docs = documents(s, dir)
         val tf = Dedup.withToks(docs)
           .select($"doc_id", explode(expr("token_tf(toks)")).as("kv"))
@@ -416,7 +415,6 @@ object CurationOps {
     Q("q88_curation_funnel",
       (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         // ONE corpus pass feeds the whole funnel: the r3 shape scanned
         // the corpus four times and tokenized it twice (once for the
         // minhash signatures, once for the quality formula) and spent
@@ -558,10 +556,6 @@ object CurationOps {
     Q("q116_winnow_overlap",
       (s, dir) => {
         import s.implicits._
-        // r14 (guide §2.6): the winnow fingerprint map (md5 per
-        // 3-gram + window-min) ran serially off the single-row-group
-        // scan; spread the docs first (the q150 discipline — every
-        // consumer hangs off its own exchange anyway)
         // r14 (guide §2.6): the winnow fingerprint map (md5 per
         // 3-gram + window-min) ran serially off the single-row-group
         // scan. sf0.1 is noise-band (min 1.52 -> 1.46) but the serial

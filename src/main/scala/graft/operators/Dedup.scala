@@ -189,7 +189,6 @@ object Dedup {
     * 3.3s), so the layout contract is documented instead of papered
     * over with a shuffle. */
   private def sigFrame(s: SparkSession, dir: String, withSet: Boolean): DataFrame = {
-    GraftFunctions.register(s)
     val flat = col("doc_id") +:
       (if (withSet) Seq(col("q.shs").as("shs")) else Nil) ++:
       (0 until nBands).map(k => col(s"q.mh$k").as(s"mh$k"))
@@ -346,7 +345,6 @@ object Dedup {
     Q("q61_simhash_pairs",
       (s, dir) => {
         import s.implicits._
-        GraftFunctions.register(s)
         // token-less docs are excluded BEFORE banding: simhash64([]) = 0,
         // so every empty/punctuation-only doc would otherwise share one
         // (band, 0) mega-bucket and pair quadratically at hamming 0 —
@@ -839,7 +837,6 @@ object Dedup {
     Q("q177_quality_calibration",
       (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val q = withQuality(withToks(documents(s, dir)))
           .filter($"quality".isNotNull)
           .select($"doc_id", $"lang", $"n_tokens", $"quality")
@@ -893,7 +890,6 @@ object Dedup {
     Q("q184_preference_pairs",
       (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val q = withQuality(withToks(documents(s, dir)))
           .filter($"quality".isNotNull)
           .select($"doc_id", $"quality")
@@ -1211,7 +1207,6 @@ object Dedup {
     * and the ratios are undefined (0/0) for them — at 100 TB empty
     * docs DO occur. Map-only per row. */
   private[operators] def qualityScores(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     withQuality(withToks(documents(s, dir)))
       .filter(col("quality").isNotNull)
       .select(col("doc_id"), col("n_tokens"), col("quality"))
@@ -1221,7 +1216,7 @@ object Dedup {
     * empty or token-less docs, where the ratios are 0/0-undefined) to
     * a frame carrying `text` + `toks` — the single source of the q30
     * formula, shared by [[qualityScores]] and q88's one-pass funnel
-    * frame. Callers must have registered [[GraftFunctions]]. */
+    * frame. */
   private[operators] def withQuality(df: DataFrame): DataFrame =
     df.withColumn("wne", array_remove(col("toks"), ""))
       .withColumn("n_tokens", size(col("wne")).cast(LongType))

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.GraftFunctions
-
 /** Remaining SURVEY.md §2 surface: distinct partition values (A5),
   * SQL grouping sets, schema-merged union (the data-level analogue of
   * Schema.merge/A10 across files), approximate distinct (HLL++),
@@ -625,7 +623,6 @@ object Extras {
     Q("q43_rolling_fingerprint",
       (s, dir) => {
         import s.implicits._
-        GraftFunctions.register(s)
         TextAnalysis.withToksNe(documents(s, dir))
           .select($"doc_id", expr("rolling_hash(toks_ne, 31L)").as("fp"))
           .orderBy($"doc_id")
@@ -658,7 +655,6 @@ object Extras {
     Q("q63_simhash64",
       (s, dir) => {
         import s.implicits._
-        GraftFunctions.register(s)
         TextAnalysis.withToksNe(documents(s, dir))
           .select($"doc_id", expr("simhash64(toks_ne)").as("simhash"))
           .orderBy($"doc_id")

@@ -179,7 +179,6 @@ object RetrievalOps {
     * q145's sparse scoring and q201's hashed-feature doc vectors. */
   private def docTf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     Dedup.withToks(documents(s, dir))
       .select($"doc_id", size($"toks").as("dl"),
         explode(expr("token_tf(toks)")).as("kv"))
@@ -431,7 +430,6 @@ object RetrievalOps {
     Q("q147_bpe_pairs",
       (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val vocab = Dedup.withToks(documents(s, dir))
           .select(explode(expr("token_tf(toks)")).as("kv"))
           .groupBy($"kv.tok".as("tok")).agg(sum($"kv.tf").as("cnt"))
@@ -481,7 +479,6 @@ object RetrievalOps {
     Q("q148_bpe_train",
       (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         var vocab = Dedup.withToks(documents(s, dir))
           .select(explode(expr("token_tf(toks)")).as("kv"))
           .groupBy($"kv.tok".as("tok")).agg(sum($"kv.tf").as("cnt"))
@@ -543,7 +540,6 @@ object RetrievalOps {
     Q("q149_importance_weights",
       (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val docs = documents(s, dir)
         val tf = Dedup.withToks(docs)
           .select($"doc_id", $"source", ($"lang" === "en").as("is_tgt"),
@@ -1080,7 +1076,6 @@ object RetrievalOps {
     Q("q206_bm25_staleness",
       (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val frozenSrcs = (0 to 4).map(i => s"src$i")
         val docs = documents(s, dir)
         val constsO = Dedup.withToks(docs.filter($"source".isin(frozenSrcs: _*)))
@@ -1422,7 +1417,6 @@ object RetrievalOps {
         // DuckDB's multiply-then-round systematically disagree
         // (measured: -0.300968 vs -0.300969). The margin itself stays
         // on the grid — same argmax, unambiguous rounding.
-        def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
         var selected = Vector.empty[(Int, Long, Double, Double)]
         var remaining = rel.keySet
         for (k <- 1 to 5 if remaining.nonEmpty) {

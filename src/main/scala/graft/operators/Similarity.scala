@@ -33,7 +33,6 @@ object Similarity {
     * bit-identical to the higher-order-function fold but ~an order of
     * magnitude faster (no CodegenFallback per element). */
   private def prepared(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     embeddings(s, dir)
       .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
       .withColumn("nrm", sqrt(expr("dot_product(v, v)")))
@@ -285,7 +284,6 @@ object Similarity {
   private def mediaIvfIndex(s: SparkSession, dir: String): (DataFrame, DataFrame, Long) =
     SessionMemo.get(s, s"media-ivf:$dir") {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val m = graft.multimodal.Multimodal
       val png = m.synthGridPng(Extras.mediaGridParams(s, dir), g = 8, cellPx = 4)
       val e = m.imageFeatures(png, grid = 8).toDF()
@@ -949,6 +947,37 @@ object Similarity {
     c < 0 || (c == 0 && a._1 < b._1)
   }
 
+  /** The task-local NSW best-first beam, shared by the batch serve's
+    * broadcast-local path and [[graft.streaming.StreamOps.nswServeStream]].
+    * Each of `rounds` rounds expands the `beam` best not-yet-expanded
+    * visited nodes in (cosr DESC, id ASC) order and scores their
+    * neighbours; a node is expanded at most once, `qid` is never
+    * added through an edge, and ids missing from `nodes` are skipped
+    * like the batch inner join. Scores are the batch contract:
+    * `r6(dot / (na * nb))`. Returns every visited node as
+    * (id, cosr, round added), entries as round 0, in insertion order;
+    * the caller picks its own entries. */
+  private[graft] def nswBeam(qid: Long, qv: Array[Double], na: Double, entries: Seq[Long],
+      nodes: Map[Long, (Array[Double], Double)], adj: Map[Long, Array[Long]],
+      beam: Int, rounds: Int): Seq[(Long, Double, Int)] = {
+    def score(id: Long): Option[Double] =
+      nodes.get(id).map { case (bv, nb) => r6(graft.functions.DotProduct.dot(qv, bv) / (na * nb)) }
+    val visited = scala.collection.mutable.LinkedHashMap.empty[Long, (Double, Int)]
+    entries.foreach(id => if (!visited.contains(id)) score(id).foreach(c => visited(id) = (c, 0)))
+    var expanded = Set.empty[Long]
+    for (r <- 1 to rounds) {
+      val frontier = visited.iterator
+        .collect { case (id, (c, _)) if !expanded(id) => (id, c) }
+        .toSeq.sortWith(cosrDescIdAsc)
+        .take(beam).map(_._1)
+      expanded ++= frontier
+      frontier.flatMap(f => adj.getOrElse(f, Array.empty[Long]))
+        .filter(id => id != qid && !visited.contains(id)).distinct
+        .foreach(id => score(id).foreach(c => visited(id) = (c, r)))
+    }
+    visited.iterator.map { case (id, (c, r)) => (id, c, r) }.toSeq
+  }
+
   /** Broadcast-local beam: collects the frozen artifacts ONCE at plan
     * time (every collect limit-guarded — oversize falls back, never
     * OOMs the driver), broadcasts them explicitly (the v1Bloom
@@ -960,12 +989,9 @@ object Similarity {
     * (measured ~5.7 s/serve at sf0.1, data volume negligible — the
     * local-mode job floor, see OPTIMIZATION_r13.md).
     *
-    * Arithmetic is the batch contract verbatim, so the frames are
-    * bit-identical to [[nswBeamRoundsDist]]'s: sequential-fold dot
-    * ([[graft.functions.DotProduct]]'s exact loop), 1e-6 HALF_UP
-    * round before every decision, (cosr desc, id asc) frontier order,
-    * expand-once, self excluded at expansion, ids absent from the
-    * corpus frame dropped exactly like the inner join. */
+    * The beam itself is [[nswBeam]], whose arithmetic is the batch
+    * contract verbatim, so the frames are bit-identical to
+    * [[nswBeamRoundsDist]]'s. */
   private def nswBeamRoundsLocal(q: DataFrame, entry: DataFrame,
                                  gedges: DataFrame, corpus: DataFrame): Option[DataFrame] = {
     val s = q.sparkSession
@@ -987,49 +1013,13 @@ object Similarity {
     val ent: Map[Long, Array[Long]] = entryRows.groupBy(_.getLong(0))
       .map { case (qid, rs) => qid -> rs.map(_.getLong(1)) }
     val bc = s.sparkContext.broadcast((nds, adj, ent))
-    val (beam, rounds) = (NswBeam, NswRounds)
     val perNode = q.select($"qid", $"av", $"na").as[(Long, Seq[Double], Double)]
       .mapPartitions { it =>
         val (nodes, ad, entries) = bc.value
-        // round(x, 6) semantics: HALF_UP on finite, identity on NaN/Inf
-        def r6(x: Double): Double =
-          if (java.lang.Double.isFinite(x))
-            BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          else x
-        it.flatMap { case (qid, av0, na) =>
-          val av = av0.toArray
-          def dot(b: Array[Double]): Double = {
-            val n = math.min(av.length, b.length)
-            var acc = 0.0; var i = 0
-            while (i < n) { acc += av(i) * b(i); i += 1 }
-            acc
-          }
-          // id -> (cosr, round added); insertion-ordered for stable emission
-          val visited = scala.collection.mutable.LinkedHashMap.empty[Long, (Double, Int)]
-          entries.getOrElse(qid, Array.empty[Long]).foreach { id =>
-            nodes.get(id).foreach { case (bv, nb) =>
-              if (!visited.contains(id)) visited(id) = (r6(dot(bv) / (na * nb)), 0)
-            }
-          }
-          var expanded = Set.empty[Long]
-          var r = 1
-          while (r <= rounds) {
-            val frontier = visited.iterator
-              .collect { case (id, (c, _)) if !expanded(id) => (id, c) }
-              .toSeq.sortWith(cosrDescIdAsc)
-              .take(beam).map(_._1)
-            expanded ++= frontier
-            val fresh = frontier
-              .flatMap(f => ad.getOrElse(f, Array.empty[Long]))
-              .filter(id => id != qid && !visited.contains(id)).distinct
-            fresh.foreach { id =>
-              nodes.get(id).foreach { case (bv, nb) =>
-                visited(id) = (r6(dot(bv) / (na * nb)), r)
-              }
-            }
-            r += 1
-          }
-          visited.iterator.map { case (id, (c, ar)) => (qid, id, c, ar) }
+        it.flatMap { case (qid, av, na) =>
+          nswBeam(qid, av.toArray, na, entries.getOrElse(qid, Array.empty[Long]).toSeq,
+              nodes, ad, NswBeam, NswRounds)
+            .map { case (id, c, ar) => (qid, id, c, ar) }
         }
       }.toDF("qid", "cid", "cosr", "add_round")
       .localCheckpoint(true)
@@ -1579,7 +1569,6 @@ object Similarity {
     Q("q118_label_centroid_overlap",
       (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val dims = embeddings(s, dir)
           .select($"label", posexplode(expr("transform(embedding, x -> CAST(x AS DOUBLE))")))
           .toDF("label", "dim", "x")
@@ -2875,7 +2864,6 @@ object Similarity {
         require(simRows.length <= 380, s"sim frame exceeded its bound: ${simRows.length}")
         val rel = candRows.map(r => r.getLong(0) -> r.getDouble(1)).toMap
         val sim = simRows.map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-        def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
         var selected = Vector.empty[(Int, Long, Double, Double)]
         var remaining = rel.keySet
         for (k <- 1 to 5 if remaining.nonEmpty) {

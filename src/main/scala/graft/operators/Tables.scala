@@ -18,8 +18,15 @@ import org.apache.spark.sql.types._
   */
 object Tables {
 
-  def apply(s: SparkSession, dir: String, name: String): DataFrame =
+  /** Every registry query opens its data here, so this is where the
+    * engine's SQL functions get installed on a caller's session that
+    * was built without [[graft.GraftExtensions]]. (Wrapping each
+    * query's build function instead would hide the operator module
+    * that defines it from anything that inspects the function.) */
+  def apply(s: SparkSession, dir: String, name: String): DataFrame = {
+    graft.functions.GraftFunctions.register(s)
     s.read.parquet(s"$dir/$name.parquet")
+  }
 
   def lineitem(s: SparkSession, dir: String): DataFrame = apply(s, dir, "lineitem")
   def orders(s: SparkSession, dir: String): DataFrame   = apply(s, dir, "orders")
@@ -65,6 +72,15 @@ object Tables {
 
   def davgSql(expr: String, scale: Int = 4): String =
     s"CAST(SUM(CAST($expr AS DECIMAL(30,$scale))) AS DOUBLE) / COUNT($expr)"
+
+  /** Spark's `round(x, 6)` on the driver or inside a task: HALF_UP on
+    * finite doubles; NaN and ±Inf pass through (a zero-norm vector's
+    * cosine is NaN). The task-local kernels round with it before every
+    * decision so they decide exactly as the SQL plans do. */
+  def r6(x: Double): Double =
+    if (java.lang.Double.isFinite(x))
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    else x
 }
 
 /** One registered operator: the Spark implementation plus (when the

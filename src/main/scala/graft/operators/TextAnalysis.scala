@@ -44,7 +44,6 @@ object TextAnalysis {
     * quality). */
   private[operators] def qualityScored(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val stopEn = stoplists.head._2
     // r14 NEGATIVE RESULT (guide §2.6): spreading the docs here to
     // parallelize the ~0.5 s serial regex/stoplist stage was measured
@@ -93,7 +92,6 @@ object TextAnalysis {
     * tokenizer/hash the filter applies online. */
   private[graft] def nbHashedTf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val stopEn = stoplists.head._2
     withToksNe(documents(s, dir))
       .filter(length($"text") > 0 && size($"toks_ne") > 0)
@@ -127,7 +125,6 @@ object TextAnalysis {
     Q("q29_lang_id",
       (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         // one pass, all codegen: five hash-set probe loops per row
         // (CountInSet) instead of five CodegenFallback HOF filters —
         // zero shuffle beyond the final ORDER BY
@@ -276,7 +273,6 @@ object TextAnalysis {
     Q("q193_code_switching",
       (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val L = 10
         val langs = stoplists.map(_._1)
         // q191's aligned blocks, as token ARRAYS (the same

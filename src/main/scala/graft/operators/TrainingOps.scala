@@ -48,7 +48,6 @@ object TrainingOps {
     * the state because prefix/rare and both verify sides re-read it. */
   private def ppState(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s) // intersect_count in the verify stage
     val dshH = Dedup.shingles(documents(s, dir))
       .select($"doc_id", xxhash64($"s").as("sh")).distinct()
       .localCheckpoint(true)
@@ -194,7 +193,6 @@ object TrainingOps {
     Q("q70_ngram_jaccard",
       (s, dir) => {
         import s.implicits._
-        GraftFunctions.register(s) // intersect_count in the verify stage
         // r4: the whole index pipeline runs on 64-bit shingle hashes —
         // the distinct, the df count, the inverted-index self-join and
         // the set verify all exchange (id, int64) rows, never shingle
@@ -422,7 +420,6 @@ object TrainingOps {
     Q("q76_incremental_dedup",
       (s, dir) => {
         import s.implicits._
-        GraftFunctions.register(s)
         val docs = documents(s, dir)
           .withColumn("grp", expr("try_cast(substring(source, 4, 100) AS INT)"))
         val sims = TextAnalysis.withToksNe(docs)

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.schema.InferredSchema
-
 /** Reader for MongoDB extended-JSON dumps (`mongoexport` JSONL) — the
   * offline stand-in for the reference's live-Mongo source
   * (mongo2pq/mongo.py:15-18; SURVEY.md §7.4.7: no connector jar ships
@@ -55,10 +53,11 @@ object ExtendedJsonSource {
           case _          => c.getField("$binary").cast(BinaryType)
         }
       }
-      else {
-        // plain nested document: unwrap recursively
-        struct(fields.map(f => unwrap(c.getField(f.name), f.dataType).alias(f.name)).toIndexedSeq: _*)
-      }
+      else
+        // plain nested document: unwrap recursively; an absent one stays
+        // null (struct() of nulls would fabricate a row, as in textUnwrap)
+        when(c.isNull, lit(null)).otherwise(struct(
+          fields.map(f => unwrap(c.getField(f.name), f.dataType).alias(f.name)).toIndexedSeq: _*))
     case ArrayType(et, _) =>
       et match {
         case _: StructType | _: ArrayType => transform(c, x => unwrap(x, et))
@@ -72,13 +71,6 @@ object ExtendedJsonSource {
     val raw = spark.read.json(path)
     raw.select(raw.schema.fields.map(f => unwrap(col(f.name), f.dataType).alias(f.name)).toIndexedSeq: _*)
   }
-
-  /** Read with a target [[InferredSchema]]: wrappers unwrapped, then the
-    * normalize projection is expected to be applied by the caller (the
-    * engine pipeline keeps read and normalize as separate stages, like
-    * the reference's cursor -> create_record_batch split,
-    * mongo2pq/extract_load.py:69-84). */
-  def read(spark: SparkSession, path: String, schema: InferredSchema): DataFrame = read(spark, path)
 
   // ---- streaming-side unwrap -----------------------------------------
   //
@@ -160,7 +152,7 @@ object ExtendedJsonSource {
         // ("1.5") falls back to the truncating double path (json
         // infers double, ANSI double->long truncates); genuinely
         // non-numeric text still raises, matching the batch/reference
-        // ValueError. Caller must have GraftFunctions.register'd.
+        // ValueError. Engine.runStreaming installs py_norm.
         val txt = coalesce(numLong, numInt, numDouble, c)
         val pyInt = call_function("py_norm", txt, lit("int"))
         when(pyInt.isNotNull, pyInt.cast(LongType))

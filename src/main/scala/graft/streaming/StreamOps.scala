@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.DotProduct.dot
+import graft.operators.Tables.r6
+
 /** Structured Streaming operator surface [EXT] (SURVEY.md §2B streaming
   * rows). The reference's "streaming" is only incremental cursor
   * batching (mongo2pq/extract_load.py:69-74); these are the real
@@ -310,6 +313,7 @@ object StreamOps {
       docs: DataFrame,
       textCol: String = "text",
       watermarkDelay: String = "10 minutes"): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
     val withFp = withFingerprint(docs, textCol, "simhash")
     val deduped = withFp
       .filter(col("simhash").isNotNull)
@@ -323,12 +327,10 @@ object StreamOps {
     * routing rule). The single source of truth for the streaming
     * side's tokenize+fingerprint, shared by [[fingerprintDedup]],
     * [[dedupAgainstIndex]] and [[incrementalIndexedDedup]]. */
-  private def withFingerprint(df: DataFrame, textCol: String, fpCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
+  private def withFingerprint(df: DataFrame, textCol: String, fpCol: String): DataFrame =
     df.withColumn("__fp_toks", array_remove(split(lower(col(s"`$textCol`")), "\\W+"), ""))
       .withColumn(fpCol, when(size(col("__fp_toks")) > 0, expr("simhash64(__fp_toks)")))
       .drop("__fp_toks")
-  }
 
   /** Stream-static enrichment join: the static side is broadcast per
     * micro-batch, so the stream never shuffles. */
@@ -455,6 +457,8 @@ object StreamOps {
       reportPath: Option[String] = None,
       srcCol: String = "source"): org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.expressions.Window
+    // the stream runs on a clone of this session, taken at start()
+    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -802,8 +806,7 @@ object StreamOps {
       val keptTok = asc.iterator.drop(i).map(_._2._2).sum
       val thr = if (i < asc.length) asc(i)._1 / 100.0 else 1.01
       QualityYieldRow(source, n, d, thr, n - dropped, keptTok,
-        BigDecimal(keptTok.toDouble / math.max(totTok, 1L))
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+        r6(keptTok.toDouble / math.max(totTok, 1L)))
     }
   }
 
@@ -907,6 +910,8 @@ object StreamOps {
       stream: DataFrame,
       centroids: DataFrame,
       maxCentroids: Int = 1 << 17): DataFrame = {
+    // installs the functions itself: layerbench's serve lanes call it
+    // directly, not only through the public serves below
     graft.functions.GraftFunctions.register(stream.sparkSession)
     val rows = centroids.select(col("cid"), col("cv"), col("cc"))
       .limit(maxCentroids + 1).collect()
@@ -1193,12 +1198,6 @@ object StreamOps {
       .filter(col("qid") =!= col("cid2"))
       .select(col("qid"), col("qv"), col("cid2"), col("cv2"))
       .as[(Long, Seq[Double], Long, Seq[Double])]
-    def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    def dot(a: Seq[Double], b: Seq[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < a.length) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
     cand.groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (qid: Long, rows: Iterator[(Long, Seq[Double], Long, Seq[Double])],
@@ -1214,22 +1213,17 @@ object StreamOps {
   private def mmrFold(qid: Long,
                       cs: Vector[(Long, Seq[Double], Long, Seq[Double])],
                       k: Int, shortlist: Int): Vector[MmrHit] = {
-    def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    def dot(a: Seq[Double], b: Seq[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < a.length) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
     if (cs.isEmpty) Vector.empty
     else {
-      val qv = cs.head._2
+      val qv = cs.head._2.toArray
       val nq = math.sqrt(dot(qv, qv))
-      val scored = cs.map { case (_, _, id, cv) =>
+      val scored = cs.map { case (_, _, id, cv0) =>
+        val cv = cv0.toArray
         (id, cv, r6(dot(qv, cv) / (nq * math.sqrt(dot(cv, cv)))))
       }.sortBy { case (id, _, rel) => (-rel, id) }.take(shortlist)
       val rel = scored.map(c => c._1 -> c._3).toMap
       val vecs = scored.map(c => c._1 -> c._2).toMap
-      def cos(a: Seq[Double], b: Seq[Double]) =
+      def cos(a: Array[Double], b: Array[Double]) =
         r6(dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))))
       var selected = Vector.empty[MmrHit]
       var remaining = rel.keySet
@@ -1403,8 +1397,6 @@ object StreamOps {
     val crow = consts.select(col("ng"), col("nb")).collect()
     require(crow.length == 1, "NB consts must be exactly one row")
     val (ng, nbTot) = (crow(0).getLong(0), crow(0).getLong(1))
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val cgb = mrows.map(r => r.getInt(0) -> r.getLong(1)).toMap
     val cbb = mrows.map(r => r.getInt(0) -> r.getLong(2)).toMap
     val w: Array[Double] = Array.tabulate(256) { b =>
@@ -1451,8 +1443,9 @@ object StreamOps {
     * medoid anchors + routing centroids, the batch builder's output):
     * each arriving query descends the routing layer (nearest-2 cells,
     * the batch d2 contract), seeds the beam with those cells' anchors,
-    * runs the SAME expand-once beam (`rounds` rounds × beam best
-    * unexpanded, adjacency-bounded) and emits its top-`k`
+    * runs the SAME expand-once beam ([[graft.operators.Similarity.nswBeam]]:
+    * `rounds` rounds × beam best unexpanded, adjacency-bounded) and
+    * emits its top-`k`
     * (qid, rank, vec_id, cosine) — stateless append, map-only: no
     * state store, no per-trigger shuffle; replays serve identically
     * (freezing is structural — the artifacts are captured before the
@@ -1488,21 +1481,16 @@ object StreamOps {
       s"graph corpus exceeds $maxNodes nodes — shard the graph and fan " +
         "out per-shard serves for indexes this large")
     require(nodeRows.nonEmpty, "empty graph corpus")
-    def dot(a: Seq[Double], b: Seq[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < a.length) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
-    val nodes: Map[Long, (Seq[Double], Double)] = nodeRows.map { r =>
-      val v = r.getSeq[Double](1)
+    val nodes: Map[Long, (Array[Double], Double)] = nodeRows.map { r =>
+      val v = r.getSeq[Double](1).toArray
       r.getLong(0) -> ((v, math.sqrt(dot(v, v))))
     }.toMap
     val adj: Map[Long, Array[Long]] = edges.select(col("src"), col("dst"))
       .collect().groupBy(_.getLong(0))
       .map { case (src, rs) => src -> rs.map(_.getLong(1)).sorted }
-    val cents: Array[(Long, Seq[Double], Double)] =
+    val cents: Array[(Long, Array[Double], Double)] =
       centroids.select(col("cid"), col("cv"), col("cc")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
     val anchorByCell: Map[Long, Array[Long]] =
       anchors.select(col("cell"), col("cid")).collect()
         .groupBy(_.getLong(0))
@@ -1511,46 +1499,19 @@ object StreamOps {
     queries.select(col("qid"), col("v")).as[(Long, Seq[Double])]
       .mapPartitions { it =>
         val (nds, ad, cs, anc) = bc.value
-        // round(x, 6) semantics: HALF_UP on finite, identity on NaN/Inf
-        def r6(x: Double) =
-          if (java.lang.Double.isFinite(x))
-            BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          else x
-        it.flatMap { case (qid, qv) =>
+        it.flatMap { case (qid, qv0) =>
+          val qv = qv0.toArray
           val vv = dot(qv, qv)
-          val na = math.sqrt(vv)
-          // ids referenced by edges/anchors but absent from the corpus
-          // frame are SKIPPED — the batch serve's inner-join-on-cid
-          // semantics (and no NoSuchElementException on inconsistent
-          // caller artifacts); r6 passes non-finite through like
-          // Spark's round(), so a zero-norm vector cannot throw either
-          def score(id: Long): Option[Double] = nds.get(id).map {
-            case (v, nb) => r6(dot(qv, v) / (na * nb))
-          }
           val top2 = cs.map { case (cid, cv, cc) =>
             (r6(vv - 2.0 * dot(qv, cv) + cc), cid)
           }.sorted.take(2).map(_._2)
+          // the stream's entry rule: the two cells' anchors, minus the
+          // query itself
           val entries = top2.flatMap(c => anc.getOrElse(c, Array.empty[Long]))
-            .filter(_ != qid).distinct
-          var visited: Map[Long, Double] =
-            entries.flatMap(id => score(id).map(id -> _)).toMap
-          var expanded = Set.empty[Long]
-          var r = 0
-          while (r < rounds) {
-            // (cosr DESC, cid ASC) under Spark's DoubleType total
-            // order (NaN largest) — a plain sortBy(-c) diverges from
-            // the batch window on NaN scores (r14, ADVICE)
-            val frontier = visited.iterator
-              .filterNot { case (id, _) => expanded(id) }
-              .toSeq.sortWith(graft.operators.Similarity.cosrDescIdAsc)
-              .take(beam).map(_._1)
-            expanded ++= frontier
-            val fresh = frontier.flatMap(f => ad.getOrElse(f, Array.empty[Long]))
-              .filter(id => id != qid && !visited.contains(id)).distinct
-            visited ++= fresh.flatMap(id => score(id).map(id -> _))
-            r += 1
-          }
-          visited.toSeq.sortWith(graft.operators.Similarity.cosrDescIdAsc).take(k)
+            .filter(_ != qid).distinct.toSeq
+          graft.operators.Similarity.nswBeam(qid, qv, math.sqrt(vv), entries, nds, ad, beam, rounds)
+            .map { case (id, c, _) => (id, c) }
+            .sortWith(graft.operators.Similarity.cosrDescIdAsc).take(k)
             .zipWithIndex.map { case ((id, c), i) => NswHit(qid, i + 1, id, c) }
         }
       }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
 /** Restart driver for the TRUE same-checkpoint streaming recovery
@@ -21,12 +20,7 @@ object StreamRestartDrive {
     require(args.length == 3,
       "usage: StreamRestartDrive <srcDir> <checkpointDir> <statePath>")
     val Array(srcDir, checkpoint, statePath) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.Sessions.builder("local[2]", "2").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val schema = StructType(Seq(
       StructField("key", StringType),

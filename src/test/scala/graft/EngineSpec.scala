@@ -59,21 +59,19 @@ class EngineSpec extends SparkSuite {
     assert(yaml.name == "telemetry")
   }
 
-  test("orc and csv sinks round-trip through the same pipeline") {
-    val out = Files.createTempDirectory("fmt").toString
-    val orc = Engine.run(spark, Engine.JobConfig(
-      input = res("telemetry.jsonl"), collection = "t_orc",
-      outDir = out, samples = 0, outputFormat = "orc"))
-    assert(orc.rowsWritten == 5)
-    assert(spark.read.orc(orc.outPath).schema("flap_orientation").dataType ==
-      org.apache.spark.sql.types.FloatType)
-
-    val csv = Engine.run(spark, Engine.JobConfig(
-      input = res("telemetry.jsonl"), collection = "t_csv",
-      outDir = out, samples = 0, outputFormat = "csv"))
-    assert(csv.rowsWritten == 5)
-    val back = spark.read.option("header", "true").csv(csv.outPath)
-    assert(back.columns.contains("flap_orientation"))
+  test("an absent nested sub-document loads as null, as the stream path loads it") {
+    val dir = Files.createTempDirectory("nested")
+    val in = dir.resolve("orders.jsonl")
+    Files.write(in, java.util.Arrays.asList(
+      """{"_id": {"$oid": "65a1"}, "n": 1, "cust": {"name": "ann", "since": {"$date": 0}}}""",
+      """{"_id": {"$oid": "65a2"}, "n": 2}"""))
+    val result = Engine.run(spark, Engine.JobConfig(
+      input = in.toString, collection = "orders", outDir = dir.resolve("out").toString, samples = 0))
+    val back = spark.read.parquet(result.outPath)
+    val byN = back.collect().map(r => r.getAs[Long]("n") -> r).toMap
+    assert(!byN(1L).isNullAt(byN(1L).fieldIndex("cust")))
+    assert(byN(2L).isNullAt(byN(2L).fieldIndex("cust")),
+      s"absent sub-document became ${byN(2L).get(byN(2L).fieldIndex("cust"))}")
   }
 
   test("schema file loads when valid; parse failure falls back to inference (main.py:59-70)") {

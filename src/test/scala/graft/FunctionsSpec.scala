@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftFunctions, RollingHash}
+import graft.functions.RollingHash
 import graft.schema.{SchemaAggregator, SchemaYaml}
 
 /** Specs for the engine's native expressions (codegen dot product,
@@ -11,7 +11,6 @@ class FunctionsSpec extends SparkSuite {
 
   test("dot_product matches the higher-order-function fold bit-for-bit") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(
       (Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)),
       (Seq(0.1, 0.2), Seq(0.3, 0.7)),
@@ -28,7 +27,6 @@ class FunctionsSpec extends SparkSuite {
 
   test("intersect_count equals array_intersect cardinality on sorted sets (incl. empty/disjoint)") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(
       (Seq(1L, 3L, 5L, 9L), Seq(2L, 3L, 5L, 10L)), // partial overlap
       (Seq(1L, 2L), Seq(3L, 4L)),                  // disjoint
@@ -43,7 +41,6 @@ class FunctionsSpec extends SparkSuite {
   }
 
   test("intersect_count stays inside whole-stage codegen") {
-    GraftFunctions.register(spark)
     val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .selectExpr("sort_array(transform(embedding, x -> CAST(x * 1000 AS BIGINT))) AS v")
       .selectExpr("intersect_count(v, v) AS c")
@@ -54,7 +51,6 @@ class FunctionsSpec extends SparkSuite {
 
   test("minhash_sig emits the shingle set SORTED ascending (intersect_count precondition)") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val sets = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr("split(lower(text), '\\\\W+') AS toks")
       .where(size($"toks") >= 3)
@@ -65,7 +61,6 @@ class FunctionsSpec extends SparkSuite {
   }
 
   test("dot_product stays inside whole-stage codegen") {
-    GraftFunctions.register(spark)
     // needs a real scan: a local relation is folded at plan time
     val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .selectExpr("transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
@@ -80,7 +75,6 @@ class FunctionsSpec extends SparkSuite {
   }
 
   test("py_norm stays inside whole-stage codegen and matches the Python grammars") {
-    GraftFunctions.register(spark)
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr("CAST(doc_id AS STRING) AS s")
       .selectExpr("py_norm(s, 'int') AS n", "py_norm(s, 'iso') AS d")
@@ -92,7 +86,6 @@ class FunctionsSpec extends SparkSuite {
 
   test("count_in_set matches the IN-list HOF filter; sum_strlen matches the fold") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(
       Seq("the", "cat", "and", "the", "dog"),
       Seq("x", "", "THE"), // case-sensitive like IN; empty never matches
@@ -113,7 +106,6 @@ class FunctionsSpec extends SparkSuite {
   }
 
   test("count_in_set and sum_strlen stay inside whole-stage codegen") {
-    GraftFunctions.register(spark)
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr("array_remove(split(lower(text), '\\\\W+'), '') AS toks")
       .selectExpr(
@@ -126,7 +118,6 @@ class FunctionsSpec extends SparkSuite {
 
   test("simhash64: distinct-token set semantics, reference fold parity, codegen") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(
       (1L, Seq("alpha", "beta", "gamma")),
       (2L, Seq("beta", "alpha", "gamma", "alpha", "")), // reorder + dup + empty: same set
@@ -158,7 +149,6 @@ class FunctionsSpec extends SparkSuite {
 
   test("token_tf: matches explode+groupBy multiset, skips empties/nulls, codegen") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // unit semantics: dup counting, empty + null skipped, first-occurrence order
     val rows = Seq((1L, Seq("b", "a", "", "b", null, "a", "b")))
       .toDF("id", "toks")
@@ -184,7 +174,6 @@ class FunctionsSpec extends SparkSuite {
 
   test("rolling_hash: deterministic, position-sensitive, interpreted == codegen") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(
       (1L, Seq("a", "b", "c")),
       (2L, Seq("c", "b", "a")), // same bag, different order

@@ -60,3 +60,49 @@ class NswLocalParitySpec extends SparkSuite {
     assert(out.nonEmpty)
   }
 }
+
+/** Pins the streaming NSW serve's rows on a hand-built graph whose
+  * corpus holds a zero vector (every cosine against it is NaN, which
+  * sorts first in the frontier) and whose edges point at an id the
+  * corpus does not hold (skipped, like the batch inner join). The
+  * expected rows were produced by the serve before it shared its beam
+  * with the batch path, so they pin that the shared kernel keeps the
+  * stream's entry rule, frontier order, self exclusion and ranking. */
+class NswStreamFixtureSpec extends SparkSuite {
+  test("nswServeStream rows on a NaN-scoring, dangling-edge fixture are pinned") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val corpus = Seq(
+      (1L, Seq(1.0, 0.0)), (2L, Seq(0.8, 0.6)), (3L, Seq(0.0, 1.0)),
+      (4L, Seq(0.0, 0.0)), (5L, Seq(-1.0, 0.0)), (6L, Seq(0.6, -0.8)),
+      (7L, Seq(0.3, 0.2))).toDF("vec_id", "v")
+    val centroids = Seq((100L, Seq(1.0, 0.0), 1.0), (101L, Seq(0.0, 1.0), 1.0),
+      (102L, Seq(-1.0, 0.0), 1.0)).toDF("cid", "cv", "cc")
+    val anchors = Seq((100L, 1L), (100L, 7L), (101L, 3L), (102L, 5L)).toDF("cell", "cid")
+    // 99 is not in the corpus
+    val edges = Seq((1L, 2L), (1L, 4L), (2L, 3L), (2L, 99L), (3L, 4L), (3L, 5L),
+      (4L, 6L), (5L, 6L), (6L, 1L), (7L, 99L), (7L, 2L), (99L, 5L)).toDF("src", "dst")
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Double])]
+    val q = graft.streaming.StreamOps.nswServeStream(input.toDF().toDF("qid", "v"),
+        corpus, centroids, edges, anchors, k = 3, beam = 2, rounds = 2)
+      .writeStream.format("memory").queryName("nsw_fixture").outputMode("append").start()
+    try {
+      // qid 1 is also a corpus id (excluded as its own entry and
+      // neighbour); qid 40 is a zero query (every cosine NaN)
+      input.addData((1L, Seq(1.0, 0.1)), (40L, Seq(0.0, 0.0)), (41L, Seq(0.2, 0.9)),
+        (42L, Seq(-0.5, -0.5)))
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.table("nsw_fixture").as[graft.streaming.StreamOps.NswHit].collect()
+      .sortBy(h => (h.qid, h.rank)).toSeq
+    val nan = Double.NaN
+    val expected = Seq(
+      (1L, 1, 4L, nan), (1L, 2, 7L, 0.883116), (1L, 3, 2L, 0.855732),
+      (40L, 1, 1L, nan), (40L, 2, 2L, nan), (40L, 3, 3L, nan),
+      (41L, 1, 4L, nan), (41L, 2, 3L, 0.976187), (41L, 3, 2L, 0.759257),
+      (42L, 1, 4L, nan), (42L, 2, 5L, 0.707107), (42L, 3, 6L, 0.141421))
+    // toString compares NaN equal to NaN
+    assert(got.map(h => (h.qid, h.rank, h.vec_id, h.cosine.toString)) ==
+      expected.map { case (q, r, id, c) => (q, r, id, c.toString) }, got.mkString("\n"))
+  }
+}

@@ -95,6 +95,10 @@ class ScaleSpec extends SparkSuite {
         "rolling_hash(array('a', 'b'), 31L) AS h").first()
       assert(r.getDouble(0) == 11.0)
       assert(r.getLong(1) != 0L)
+      // the whole table, not only the two called above
+      graft.functions.GraftFunctions.table.foreach { case (id, _, _) =>
+        assert(s2.sessionState.functionRegistry.functionExists(id), id)
+      }
     } finally {
       s2.stop()
       SparkSession.clearActiveSession()

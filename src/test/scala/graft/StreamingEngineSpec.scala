@@ -42,7 +42,6 @@ class StreamingEngineSpec extends SparkSuite {
     import org.apache.spark.sql.functions.col
     import graft.sources.ExtendedJsonSource
     import graft.types.AType
-    graft.functions.GraftFunctions.register(spark) // textUnwrap uses py_norm
     val df = Seq("42", "1.5", "-2.75", "", """{"$numberLong": "8589934592"}""").toDF("n")
     val out = df.select(ExtendedJsonSource.textUnwrap(col("n"), AType.AInt64).as("v"))
       .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
@@ -63,7 +62,6 @@ class StreamingEngineSpec extends SparkSuite {
     import org.apache.spark.sql.functions.col
     import graft.sources.ExtendedJsonSource
     import graft.types.AType
-    graft.functions.GraftFunctions.register(spark)
     // underscored, Unicode-digit, and Unicode-whitespace-padded ints —
     // all valid Python int() literals the batch path accepts via
     // py_norm/parsePythonInt (ADVICE r2: these threw on the stream path)

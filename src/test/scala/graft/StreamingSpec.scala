@@ -281,7 +281,6 @@ class StreamingSpec extends SparkSuite {
   test("streaming dedup against a static fingerprint index drops near-identical docs") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val textA = (1 to 30).map(i => s"tok$i").mkString(" ")
     val textB = (1 to 30).map(i => s"other$i").mkString(" ")
     val fpA = Seq(textA).toDF("text")
