@@ -125,14 +125,13 @@ object Engine {
     *
     * The schema must be known up front (streams can't be sampled
     * retroactively): pass one inferred/loaded via the batch path from a
-    * seed of documents. Wrapper-capable scalars are parsed as raw text
-    * and unwrapped with [[ExtendedJsonSource.textUnwrap]] — so `$oid`/
-    * `$numberLong`/`$date`/`$binary` documents land identically to the
-    * batch path, including wrappers nested inside struct/array columns
-    * (parse types and unwrap recurse; r4 — previously a documented
-    * limitation). Then the normalize projection is the same
-    * `Normalizer.columns` call as batch: same falsy-drop, casts and
-    * renames.
+    * seed of documents. The reader parses each document once against
+    * that schema, every non-string leaf as VARIANT at any depth
+    * ([[ExtendedJsonSource.streamParseType]]), and
+    * [[ExtendedJsonSource.unwrapVariant]] reads the batch path's typed
+    * value out of each leaf. Then the normalize projection is the
+    * same `Normalizer.columns` call as batch: same falsy-drop, casts
+    * and renames.
     */
   def runStreaming(
       spark: SparkSession,
@@ -142,10 +141,8 @@ object Engine {
       checkpoint: String,
       mode: Normalizer.Mode = Normalizer.Strict,
       partitionKey: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    // read raw lines, parse per the *pre-rename* source schema: wrapper-
-    // capable scalars as text (ExtendedJsonSource.streamParseType), then
-    // recover the typed value per column before normalizing
-    graft.functions.GraftFunctions.register(spark) // textUnwrap uses py_norm
+    // parse per the *pre-rename* source schema
+    graft.functions.GraftFunctions.register(spark) // unwrapVariant uses py_norm
     val inverse = schema.renameMap.map(_.swap)
     val srcNames = schema.fields.map { case (n, t) => (inverse.getOrElse(n, n), t) }
     val srcFields = srcNames.map { case (sn, t) =>
@@ -155,8 +152,8 @@ object Engine {
       .schema(org.apache.spark.sql.types.StructType(srcFields))
       .json(inputDir)
     val unwrapped = raw.select(srcNames.map { case (sn, t) =>
-      ExtendedJsonSource.textUnwrap(org.apache.spark.sql.functions.col(
-        s"`${sn.replace("`", "``")}`"), t).alias(sn)
+      ExtendedJsonSource.unwrapVariant(sn, org.apache.spark.sql.functions.col(
+        s"`${sn.replace("`", "``")}`"), t, mode).alias(sn)
     }: _*)
     val normalized = Normalizer(schema, unwrapped, mode)
     val writer = normalized.writeStream

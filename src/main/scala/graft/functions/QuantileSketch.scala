@@ -111,19 +111,6 @@ final class QSketchState(val k: Int) extends Serializable {
     }
     sorted.last._1
   }
-
-  /** Exact rank (count of values ≤ x, by retained weight) — the test
-    * hook that checks estimates against the certified bound. */
-  def weightedRankOf(x: Double): Long = {
-    var r = 0L
-    var l = 0
-    while (l < levels.length) {
-      val w = 1L << l
-      levels(l).foreach(v => if (v <= x) r += w)
-      l += 1
-    }
-    r
-  }
 }
 
 /** Spark Aggregator: doubles in, `(n, err_bound, q…)` struct out.

@@ -221,10 +221,6 @@ object GraftFunctions {
   def dot_product(a: Column, b: Column): Column = call_function("dot_product", a, b)
   def rolling_hash(tokens: Column, base: Column): Column = call_function("rolling_hash", tokens, base)
 
-  /** Cast any numeric array to ARRAY<DOUBLE> (the kernels' input type). */
-  def as_doubles(c: Column): Column =
-    org.apache.spark.sql.functions.transform(c, x => x.cast(org.apache.spark.sql.types.DoubleType))
-
   /** L2 norm via the codegen kernel. */
   def l2_norm(v: Column): Column =
     org.apache.spark.sql.functions.sqrt(dot_product(v, v))

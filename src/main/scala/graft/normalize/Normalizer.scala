@@ -81,8 +81,10 @@ object Normalizer {
 
   /** Lenient cast mirroring the reference cast table
     * (schema.py:123-158). Spark's `cast` already covers most pairs; the
-    * special cases are spelled out. */
-  private def castTo(srcName: String, c: Column, srcType: DataType, target: AType, mode: Mode): Column = {
+    * special cases are spelled out. With `srcType` StringType this is
+    * the Python-grammar text cast, which the streaming reader also
+    * applies to its string values. */
+  private[graft] def castTo(srcName: String, c: Column, srcType: DataType, target: AType, mode: Mode): Column = {
     (target, mode) match {
       case (ABool, Compat) =>
         // cast_boolean bug: any non-bool input -> false (schema.py:128-135)
@@ -114,8 +116,8 @@ object Normalizer {
         srcType match {
           case StringType if m == Compat => pyCast(srcName, c, "epoch", TimestampType)
           case StringType =>
-            val epoch = expr(s"py_norm(${quoted(srcName)}, 'epoch')")
-            val iso = expr(s"py_norm(${quoted(srcName)}, 'iso')")
+            val epoch = pyNorm(c, "epoch")
+            val iso = pyNorm(c, "iso")
             when(epoch.isNotNull, epoch.cast(DoubleType).cast(TimestampType))
               .when(iso.isNotNull, iso.cast(TimestampType))
               .otherwise(castError(srcName, "epoch-or-iso", c).cast(TimestampType))
@@ -180,7 +182,7 @@ object Normalizer {
     * normalized literal (overflow still raises, like pyarrow's
     * RecordBatch build). */
   private def pyCast(srcName: String, c: Column, mode: String, to: DataType): Column = {
-    val norm = expr(s"py_norm(${quoted(srcName)}, '$mode')")
+    val norm = pyNorm(c, mode)
     // epoch mode renders NUMERIC seconds: route through DOUBLE, since a
     // string->timestamp cast would parse datetime text instead
     val casted =
@@ -188,6 +190,9 @@ object Normalizer {
       else norm.cast(to)
     when(norm.isNotNull, casted).otherwise(castError(srcName, mode, c).cast(to))
   }
+
+  private def pyNorm(c: Column, mode: String): Column =
+    call_function("py_norm", c, lit(mode))
 
   private def castError(srcName: String, mode: String, c: Column): Column =
     raise_error(format_string(

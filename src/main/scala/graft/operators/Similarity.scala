@@ -1118,7 +1118,7 @@ object Similarity {
         .drop("nqid", "ncid")
     }
     tomb.foreach { t =>
-      v = v.join(t.select($"cid", lit(1).as("dead")), Seq("cid"), "left")
+      v = v.join(broadcast(t.select($"cid", lit(1).as("dead"))), Seq("cid"), "left")
     }
     val live = if (tomb.isDefined) $"dead".isNull else lit(true)
     val perRound = v.join(broadcast(rounds), $"add_round" <= $"round")

@@ -1,7 +1,5 @@
 package graft.schema
 
-import org.apache.spark.sql.types.{StructField, StructType}
-
 import graft.types.AType
 
 /** Ordered field->type schema with the reference's merge / config
@@ -76,14 +74,8 @@ final case class InferredSchema(
     }
     InferredSchema(name, cur.toVector, renameMap ++ renames)
   }
-
-  def toStructType: StructType =
-    StructType(fields.map { case (n, t) => StructField(n, t.sparkType) })
 }
 
 object InferredSchema {
   def empty(name: String): InferredSchema = InferredSchema(name, Vector.empty)
-
-  def fromStructType(name: String, st: StructType): InferredSchema =
-    InferredSchema(name, st.fields.toVector.map(f => f.name -> AType.fromSpark(f.dataType)))
 }

@@ -66,8 +66,7 @@ object SchemaInference {
       docs: Dataset[String],
       name: String,
       samples: Int = 20000,
-      nowEpochSec: Double = System.currentTimeMillis() / 1000.0,
-      seed: Long = 42L): InferredSchema = {
+      nowEpochSec: Double = System.currentTimeMillis() / 1000.0): InferredSchema = {
     val rdd = docs.rdd
     val sampled =
       if (samples <= 0) rdd

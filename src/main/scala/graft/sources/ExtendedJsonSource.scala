@@ -1,8 +1,14 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.VariantVal
+
+import graft.normalize.Normalizer
+import graft.types.AType
 
 /** Reader for MongoDB extended-JSON dumps (`mongoexport` JSONL) — the
   * offline stand-in for the reference's live-Mongo source
@@ -14,7 +20,9 @@ import org.apache.spark.sql.types._
   * its extended-JSON shape; a post-projection unwraps the BSON scalar
   * wrappers (`$oid`, `$date`, `$numberLong`, `$numberInt`,
   * `$numberDouble`, `$binary`) into flat Spark columns. Parsing and
-  * unwrap both run inside codegen — no UDF, no driver loop.
+  * unwrap both run inside codegen — no UDF, no driver loop. The
+  * streaming reader parses against a known schema instead, non-string
+  * leaves as VARIANT, and unwraps to the same values ([[unwrapVariant]]).
   */
 object ExtendedJsonSource {
 
@@ -55,7 +63,7 @@ object ExtendedJsonSource {
       }
       else
         // plain nested document: unwrap recursively; an absent one stays
-        // null (struct() of nulls would fabricate a row, as in textUnwrap)
+        // null (struct() of nulls would fabricate a row)
         when(c.isNull, lit(null)).otherwise(struct(
           fields.map(f => unwrap(c.getField(f.name), f.dataType).alias(f.name)).toIndexedSeq: _*))
     case ArrayType(et, _) =>
@@ -75,126 +83,99 @@ object ExtendedJsonSource {
   // ---- streaming-side unwrap -----------------------------------------
   //
   // A stream can't be schema-inferred per batch, so the streaming reader
-  // parses wrapper-capable scalars as STRING (Spark's JSON parser
-  // stringifies an object/number token when the declared field type is
-  // StringType) and these expressions recover the typed value: a BSON
-  // wrapper is parsed out of the raw text with `from_json` (null when
-  // the text isn't that wrapper shape), falling back to the plain
-  // scalar. The output types match what the batch path's `spark.read
-  // .json` + [[unwrap]] produce, so `Normalizer` behaves identically
-  // downstream. Nested struct/array columns RECURSE: their
-  // wrapper-capable scalar leaves also parse as raw text (Spark's
-  // JSON parser stringifies any token declared StringType at any
-  // depth) and unwrap element-wise via `transform`/per-field structs
-  // — r3's "wrappers inside nested columns are not unwrapped"
-  // limitation is closed (StreamingEngineSpec pins it).
+  // parses each document once, against the engine's own schema
+  // (streamParseType), and
+  // unwrapVariant turns each parsed leaf into the value the batch path
+  // (`spark.read.json` + unwrap + `Normalizer`) produces, in the
+  // schema's own Spark type; `Normalizer` then behaves identically
+  // downstream. Non-string leaves parse as VARIANT at any depth, so a
+  // number, a BSON wrapper or a text value is read typed out of the
+  // parsed value by path (`$['$numberLong']`, `$['$date']`, ...). String
+  // leaves parse as STRING: Spark's JSON reader then gives every token
+  // the text the batch reader gives it (a number token's own text, say
+  // `1e3`, which a variant no longer holds).
 
-  private def jsonField(c: Column, schemaDDL: String, path: Seq[String]): Column =
-    path.foldLeft(from_json(c, org.apache.spark.sql.types.DataType.fromDDL(schemaDDL)
-      .asInstanceOf[StructType]))(_.getField(_))
+  /** The streaming parse type for a target lattice type: STRING for a
+    * string, VARIANT for any other scalar; lists and structs recurse. */
+  def streamParseType(t: AType): DataType = t match {
+    case AType.AString     => StringType
+    case AType.AList(e)    => ArrayType(streamParseType(e))
+    case AType.AStruct(fs) =>
+      StructType(fs.map { case (n, ft) => StructField(n, streamParseType(ft)) }.toArray)
+    case _ => VariantType
+  }
 
-  /** The streaming parse type for a target lattice type: wrapper-capable
-    * scalars arrive as raw text — at ANY nesting depth; bools parse
-    * natively; lists/structs recurse. */
-  def streamParseType(t: graft.types.AType): DataType = {
-    import graft.types.AType._
-    t match {
-      case ABool => BooleanType
-      case AList(e) => ArrayType(streamParseType(e))
-      case AStruct(fs) => StructType(fs.map { case (n, ft) =>
-        org.apache.spark.sql.types.StructField(n, streamParseType(ft))
-      }.toArray)
-      case _ => StringType
+  /** BSON wrapper values read by path out of a parsed variant; each is
+    * NULL when `v` is not that wrapper. */
+  private final class Wrapper(v: Column) {
+    def get(key: String, to: String = "string"): Column = try_variant_get(v, s"$$['$$$key']", to)
+    /** `$date` is epoch millis (a number or `{"$numberLong": text}`) or ISO text. */
+    def date: Column = {
+      val millis = coalesce(try_variant_get(v, "$['$date']['$numberLong']", "bigint"), get("date", "bigint"))
+      when(millis.isNotNull, (millis / lit(1000.0)).cast(TimestampType))
+        .otherwise(get("date").cast(TimestampType))
+    }
+    def bytes: Column = unbase64(coalesce(try_variant_get(v, "$['$binary']['base64']", "string"), get("binary")))
+    /** The text the batch path's unwrap-then-cast-to-string gives. */
+    def text: Column = coalesce(get("oid"), get("numberLong"), get("numberInt"), get("numberDouble"),
+      date.cast(StringType), bytes.cast(StringType))
+  }
+
+  /** The text of a VARIANT string value, NULL for any other value, read
+    * as UTF-8. Spark's own reads of a variant string (`variant_get`,
+    * casts, `to_json`) decode it with the JVM's default charset
+    * (`VariantUtil.getString`, Spark 4.1.2), which turns non-ASCII text
+    * into U+FFFD under a non-UTF-8 locale. */
+  private val variantText = udf { (v: VariantVal) =>
+    import org.apache.spark.types.variant.VariantUtil._
+    if (v == null) null
+    else {
+      val b = v.getValue
+      val info = (b(0) >> BASIC_TYPE_BITS) & TYPE_INFO_MASK
+      (b(0) & BASIC_TYPE_MASK) match {
+        case SHORT_STR => new String(b, 1, info, UTF_8)
+        case PRIMITIVE if info == LONG_STR => new String(b, 1 + U32_SIZE, readUnsigned(b, 1, U32_SIZE), UTF_8)
+        case _ => null
+      }
     }
   }
 
-  /** Unwrap a text-parsed streaming column into the same Spark type the
-    * batch reader produces for target type `t` (see table in [[read]]). */
-  def textUnwrap(raw: Column, t: graft.types.AType): Column = {
-    import graft.types.AType._
-    // Empty text is falsy in the batch path (Normalizer drops it before
-    // any cast); null it here so the ANSI casts below can't throw on it.
-    // `def`, not `val`: only valid on the string-parsed branches (a bool
-    // or nested column would fail analysis comparing against '').
-    def c: Column = when(raw === lit(""), lit(null)).otherwise(raw)
-    def numLong: Column   = jsonField(c, "`$numberLong` STRING", Seq("$numberLong"))
-    def numInt: Column    = jsonField(c, "`$numberInt` STRING", Seq("$numberInt"))
-    def numDouble: Column = jsonField(c, "`$numberDouble` STRING", Seq("$numberDouble"))
+  /** A column parsed as [[streamParseType]]`(t)`, typed as the batch
+    * path types it: `t`'s Spark type. A text value takes the batch's
+    * StringType cast (`Normalizer.castTo`: the Python grammar; `''` is
+    * falsy); numbers and BSON wrappers are read typed, as the batch's
+    * `spark.read.json` reads them (a float token as DOUBLE, so a
+    * fraction in an int column truncates). `name` labels cast errors. */
+  def unwrapVariant(name: String, v: Column, t: AType, mode: Normalizer.Mode): Column = {
+    import AType._
     t match {
-      case AString =>
-        // a STRING target still receives wrapper-shaped values when the
-        // lattice widened a mixed column to string (e.g. an empty array
-        // unifying a $numberLong list to AList(AString)): unwrap every
-        // scalar wrapper to the same text the batch path's
-        // unwrap-then-cast-to-string produces, then fall back to the
-        // raw text for plain strings
-        val dateTxt = coalesce(
-          jsonField(c, "`$date` STRUCT<`$numberLong`: STRING>", Seq("$date", "$numberLong")),
-          jsonField(c, "`$date` STRING", Seq("$date")))
-        val wrapperTs = when(dateTxt.rlike("^[+-]?[0-9]+$"),
-            (dateTxt.cast(LongType) / lit(1000.0)).cast(TimestampType))
-          .otherwise(dateTxt.cast(TimestampType))
-        val b64 = coalesce(
-          jsonField(c, "`$binary` STRUCT<base64: STRING, subType: STRING>", Seq("$binary", "base64")),
-          jsonField(c, "`$binary` STRING", Seq("$binary")))
-        coalesce(
-          jsonField(c, "`$oid` STRING", Seq("$oid")),
-          numLong, numInt, numDouble,
-          when(dateTxt.isNotNull, wrapperTs.cast(StringType)),
-          when(b64.isNotNull, unbase64(b64).cast(StringType)),
-          c)
-      case AInt8 | AInt16 | AInt32 | AInt64 | AUInt8 | AUInt16 | AUInt32 | AUInt64 =>
-        // batch parse type for plain JSON ints is LongType. Normalize
-        // through the PYTHON int grammar first (py_norm: underscores,
-        // Unicode digits, Unicode-whitespace stripping) so the
-        // streaming path accepts exactly what the batch path's
-        // py_norm/parsePythonInt accepts. A non-Python-int text value
-        // ("1.5") falls back to the truncating double path (json
-        // infers double, ANSI double->long truncates); genuinely
-        // non-numeric text still raises, matching the batch/reference
-        // ValueError. Engine.runStreaming installs py_norm.
-        val txt = coalesce(numLong, numInt, numDouble, c)
-        val pyInt = call_function("py_norm", txt, lit("int"))
-        when(pyInt.isNotNull, pyInt.cast(LongType))
-          .otherwise(txt.cast(DoubleType).cast(LongType))
-      case AFloat16 | AFloat32 | AFloat64 =>
-        // same Python-grammar routing ('1_0.5', 'inf', Unicode spaces);
-        // the fallback ANSI cast keeps the raise-on-garbage parity
-        val txt = coalesce(numDouble, numLong, numInt, c)
-        val pyFloat = call_function("py_norm", txt, lit("float"))
-        when(pyFloat.isNotNull, pyFloat.cast(DoubleType))
-          .otherwise(txt.cast(DoubleType))
-      case ADate32 | ADate64 | ATimestampS =>
-        // $date is epoch-millis (number or {"$numberLong": text}) or ISO
-        // text; plain values keep their raw text for Normalizer's
-        // epoch-seconds-else-ISO string path (same as the batch parse).
-        val dateTxt = coalesce(
-          jsonField(c, "`$date` STRUCT<`$numberLong`: STRING>", Seq("$date", "$numberLong")),
-          jsonField(c, "`$date` STRING", Seq("$date")))
-        val wrapperTs = when(dateTxt.rlike("^[+-]?[0-9]+$"),
-            (dateTxt.cast(LongType) / lit(1000.0)).cast(TimestampType))
-          .otherwise(dateTxt.cast(TimestampType))
-        val plainTs = when(c.rlike("^[+-]?[0-9]+(\\.[0-9]+)?$"),
-            c.cast(DoubleType).cast(TimestampType))
-          .otherwise(c.cast(TimestampType))
-        when(dateTxt.isNotNull, wrapperTs).otherwise(plainTs)
-      case ABinary =>
-        val b64 = coalesce(
-          jsonField(c, "`$binary` STRUCT<base64: STRING, subType: STRING>", Seq("$binary", "base64")),
-          jsonField(c, "`$binary` STRING", Seq("$binary")))
-        when(b64.isNotNull, unbase64(b64)).otherwise(c.cast(BinaryType))
-      case AList(e) =>
-        // element-wise unwrap; parse type recursed, so elements are raw
-        // text (or nested shapes) and the scalar branches above apply
-        transform(raw, x => textUnwrap(x, e))
+      case AList(e) => transform(v, x => unwrapVariant(s"$name[]", x, e, mode))
       case AStruct(fs) =>
-        // per-field unwrap; a null struct stays null (struct() of nulls
-        // would fabricate a non-null row the batch path never produces)
-        when(raw.isNull, lit(null))
-          .otherwise(struct(fs.map { case (n, ft) =>
-            textUnwrap(raw.getField(n), ft).alias(n)
-          }: _*))
-      case _ => raw // bool — parsed natively
+        // a null sub-document stays null, as on the batch path
+        when(v.isNull, lit(null)).otherwise(struct(fs.map { case (n, ft) =>
+          unwrapVariant(s"$name.$n", v.getField(n), ft, mode).alias(n)
+        }: _*))
+      case AString =>
+        // only a BSON wrapper's text is parsed a second time, to unwrap it
+        coalesce(new Wrapper(try_parse_json(when(v.startsWith("{"), v))).text, v)
+      case _ =>
+        val w = new Wrapper(v)
+        val text = variantText(v)
+        val number = try_variant_get(v, "$", "double") // NULL unless a number
+        val typed = t match {
+          case ABool => try_variant_get(v, "$", "boolean")
+          case ABinary => w.bytes
+          case ADate32 | ADate64 | ATimestampS =>
+            coalesce(w.date, number.cast(TimestampType)).cast(t.sparkType)
+          case _ if isFloat(t) =>
+            coalesce(number, w.get("numberDouble", "double"), w.get("numberLong", "double"),
+              w.get("numberInt", "double")).cast(t.sparkType)
+          case _ => // ints
+            coalesce(when(number.isNotNull, variant_get(v, "$", "bigint")), w.get("numberLong", "bigint"),
+              w.get("numberInt", "bigint"), w.get("numberDouble", "double").cast(LongType)).cast(t.sparkType)
+        }
+        when(text.isNull, typed)
+          .when(text =!= "", Normalizer.castTo(name, text, StringType, t, mode))
     }
   }
 }

@@ -98,39 +98,6 @@ object StreamOps {
       watermarkDelay: String = "10 minutes"): DataFrame =
     sessionAggBody(dedupWithinWatermark(events, keyCols, watermarkDelay), gap)
 
-  final case class SessionEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
-  final case class SessionState(nEvents: Long, total: Double, lastTs: Long)
-  final case class SessionSummary(user_id: Long, n_events: Long, total_value: Double)
-
-  /** Custom state machine via flatMapGroupsWithState: per-user running
-    * session summary, emitted on processing-time timeout. Demonstrates
-    * the arbitrary-stateful path (KeyValueGroupedDataset) the built-in
-    * windows can't express. */
-  def sessionSummaries(
-      events: Dataset[SessionEvent],
-      timeoutMs: Long = 1000L): Dataset[SessionSummary] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionSummary](
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-        (userId: Long, rows: Iterator[SessionEvent], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(SessionSummary(userId, s.nEvents, s.total))
-          } else {
-            val prev = state.getOption.getOrElse(SessionState(0L, 0.0, 0L))
-            val buf = rows.foldLeft(prev) { (acc, e) =>
-              SessionState(acc.nEvents + 1, acc.total + e.value, math.max(acc.lastTs, e.ts.getTime))
-            }
-            state.update(buf)
-            state.setTimeoutDuration(timeoutMs)
-            Iterator.empty
-          }
-      }
-  }
-
   final case class PackDoc(source: String, doc_id: Long, n_tokens: Long)
   final case class PackState(offset: Long)
   final case class PackSpan(source: String, chunk: Long, doc_id: Long,

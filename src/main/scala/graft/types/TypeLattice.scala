@@ -55,6 +55,8 @@ object TypeLattice {
     * digits — `1_`, `_1`, `1__2` all raise ValueError in `int()`/
     * `float()`, so they must fall through to string here too. */
   private val pyDigits = """\d(?:_?\d)*"""
+  private val pyInt     = s"""[+-]?$pyDigits""".r
+  private val pyFloat   = s"""[+-]?(?:$pyDigits(?:\\.(?:$pyDigits)?)?|\\.$pyDigits)(?:e[+-]?$pyDigits)?""".r
 
   /** Python numerics accept any Unicode DECIMAL digit (category Nd),
     * e.g. int("٥٤٣") == 543; fold those to ASCII so the ASCII-digit
@@ -96,7 +98,7 @@ object TypeLattice {
     * schema.py:362-371). */
   private[graft] def parsePythonInt(s: String): Option[BigInt] = {
     val t = asciiDigits(pythonStrip(s))
-    if (t.matches(s"""[+-]?$pyDigits""")) Some(BigInt(t.replace("_", ""))) else None
+    if (pyInt.matches(t)) Some(BigInt(t.replace("_", ""))) else None
   }
 
   /** Python `float(str)`: decimal/scientific notation plus inf/nan
@@ -109,7 +111,7 @@ object TypeLattice {
       case "-inf" | "-infinity"                      => Some(Double.NegativeInfinity)
       case "nan" | "+nan" | "-nan"                   => Some(Double.NaN)
       case _ =>
-        if (!t.matches(s"""[+-]?(?:$pyDigits(?:\\.(?:$pyDigits)?)?|\\.$pyDigits)(?:e[+-]?$pyDigits)?"""))
+        if (!pyFloat.matches(t))
           None
         else try Some(java.lang.Double.parseDouble(t.replace("_", "")))
         catch { case _: NumberFormatException => None }

@@ -37,41 +37,39 @@ class StreamingEngineSpec extends SparkSuite {
       org.apache.spark.sql.types.FloatType)
   }
 
-  test("textUnwrap numeric parity: fractional text truncates, wrappers parse, empty nulls") {
+  /** `unwrapVariant` over JSON tokens, as the streaming reader parses them. */
+  private def unwrapTokens(tokens: Seq[String], t: graft.types.AType) = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    import graft.sources.ExtendedJsonSource
+    import org.apache.spark.sql.functions.{col, parse_json}
+    tokens.toDF("n").select(graft.sources.ExtendedJsonSource.unwrapVariant(
+      "n", parse_json(col("n")), t, graft.normalize.Normalizer.Strict).as("v"))
+  }
+
+  test("unwrapVariant numeric parity: float tokens truncate, wrappers parse, empty nulls") {
     import graft.types.AType
-    val df = Seq("42", "1.5", "-2.75", "", """{"$numberLong": "8589934592"}""").toDF("n")
-    val out = df.select(ExtendedJsonSource.textUnwrap(col("n"), AType.AInt64).as("v"))
-      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
-    // "1.5" truncates like the batch path (json infers double; ANSI
-    // double->long truncates) instead of crashing the stream; ""
+    val out = unwrapTokens(Seq("42", "1.5", "-2.75", "\"\"", """{"$numberLong": "8589934592"}"""),
+      AType.AInt64).collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+    // a float token truncates like the batch path (json infers double;
+    // ANSI double->long truncates) instead of crashing the stream; ""
     // is falsy -> null; wrappers unwrap
     assert(out.toSeq == Seq(Some(42L), Some(1L), Some(-2L), None, Some(8589934592L)))
     // genuinely non-numeric text still raises (reference ValueError parity)
     val err = intercept[Throwable] {
-      Seq("abc").toDF("n")
-        .select(ExtendedJsonSource.textUnwrap(col("n"), AType.AInt64).as("v")).collect()
+      unwrapTokens(Seq("\"abc\""), AType.AInt64).collect()
     }
     assert(err.isInstanceOf[org.apache.spark.SparkThrowable], err.getClass.getName)
   }
 
-  test("textUnwrap accepts Python literal grammar numerics like the batch py_norm path") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    import graft.sources.ExtendedJsonSource
+  test("unwrapVariant accepts Python literal grammar numerics like the batch py_norm path") {
     import graft.types.AType
     // underscored, Unicode-digit, and Unicode-whitespace-padded ints —
     // all valid Python int() literals the batch path accepts via
-    // py_norm/parsePythonInt (ADVICE r2: these threw on the stream path)
-    val ints = Seq("1_0", "٤٢", "  42  ").toDF("n")
-      .select(ExtendedJsonSource.textUnwrap(col("n"), AType.AInt64).as("v"))
+    // py_norm/parsePythonInt
+    val ints = unwrapTokens(Seq("1_0", "٤٢", "  42  ").map(s => s"\"$s\""), AType.AInt64)
       .collect().map(_.getLong(0))
     assert(ints.toSeq == Seq(10L, 42L, 42L))
-    val floats = Seq("1_0.5", "inf", "-Infinity", "nan", "1e3").toDF("n")
-      .select(ExtendedJsonSource.textUnwrap(col("n"), AType.AFloat64).as("v"))
-      .collect().map(_.getDouble(0))
+    val floats = unwrapTokens(Seq("1_0.5", "inf", "-Infinity", "nan", "1e3").map(s => s"\"$s\""),
+      AType.AFloat64).collect().map(_.getDouble(0))
     assert(floats(0) == 10.5 && floats(1).isPosInfinity &&
       floats(2).isNegInfinity && floats(3).isNaN && floats(4) == 1000.0)
   }
@@ -123,7 +121,7 @@ class StreamingEngineSpec extends SparkSuite {
   test("streaming unwraps wrappers NESTED in struct/array columns like the batch path") {
     // the r3 documented limitation, now closed: wrapper scalars inside
     // arrays and sub-documents unwrap on the stream path via recursed
-    // parse types + element-wise textUnwrap
+    // VARIANT parse types + element-wise unwrapVariant
     val in = Files.createTempDirectory("nestwrap")
     val out = Files.createTempDirectory("nestwrapout").toString
     val ckpt = Files.createTempDirectory("nestwrapckpt").toString
