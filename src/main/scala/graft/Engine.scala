@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -16,10 +16,11 @@ import graft.sources.ExtendedJsonSource
   *
   * Execution shape at scale: schema inference is a bounded
   * sample + treeAggregate (only the schema returns to the driver); the
-  * load itself is a single shuffle-free map stage — scan, normalize
-  * projection and `partitionBy` write all pipeline inside one codegen
-  * stage per task, so the job scales linearly with input splits on any
-  * cluster size. The reference's per-partition writer fan-out
+  * load itself is a single shuffle-free map stage over one scan of the
+  * input — the parse against that schema ([[ExtendedJsonSource]], the
+  * reader the stream uses too), normalize projection and `partitionBy`
+  * write all pipeline inside one codegen stage per task, so the job
+  * scales linearly with input splits on any cluster size. The reference's per-partition writer fan-out
   * (extract_load.py:46-56) is subsumed by Spark's file committer.
   */
 object Engine {
@@ -49,9 +50,9 @@ object Engine {
   final case class JobResult(schema: InferredSchema, rowsWritten: Long, outPath: String)
 
   def run(spark: SparkSession, job: JobConfig): JobResult =
-    runWith(spark, job,
+    runWith(job,
       inferSchema = SchemaInference.inferFile(spark, job.input, job.collection, job.samples),
-      raw = ExtendedJsonSource.read(spark, job.input))
+      read = ExtendedJsonSource.read(spark, job.input, _, job.mode))
 
   /** Source-agnostic EL: the same pipeline fed from any [[graft.sources.Source]]
     * (dump directory or live MongoDB connector) — a reference user's
@@ -61,16 +62,16 @@ object Engine {
       source: graft.sources.Source,
       db: String,
       job: JobConfig): JobResult =
-    runWith(spark, job,
+    runWith(job,
       inferSchema = SchemaInference.infer(
         source.rawDocuments(db, job.collection), job.collection, job.samples),
-      raw = source.read(db, job.collection))
+      read = source.read(db, job.collection, _, job.mode))
 
+  /** `read` gets the post-config schema: the load parses against it. */
   private def runWith(
-      spark: SparkSession,
       job: JobConfig,
       inferSchema: => InferredSchema,
-      raw: => org.apache.spark.sql.DataFrame): JobResult = {
+      read: InferredSchema => DataFrame): JobResult = {
     // 1. schema: load (with fallback) or infer — reference main.py:55-74
     val loaded: Option[InferredSchema] = job.schemaFile.flatMap { f =>
       try Some(SchemaYaml.loadFile(f))
@@ -105,7 +106,7 @@ object Engine {
     // must not collide on the observation name
     val obs = new org.apache.spark.sql.Observation(
       s"graft.rows_written.${java.util.UUID.randomUUID()}")
-    val normalized = Normalizer(withConfig, raw, job.mode)
+    val normalized = Normalizer(withConfig, read(withConfig), job.mode)
       .observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("rows"))
     val outPath = s"${job.outDir.stripSuffix("/")}/${job.collection}"
@@ -125,13 +126,9 @@ object Engine {
     *
     * The schema must be known up front (streams can't be sampled
     * retroactively): pass one inferred/loaded via the batch path from a
-    * seed of documents. The reader parses each document once against
-    * that schema, every non-string leaf as VARIANT at any depth
-    * ([[ExtendedJsonSource.streamParseType]]), and
-    * [[ExtendedJsonSource.unwrapVariant]] reads the batch path's typed
-    * value out of each leaf. Then the normalize projection is the
-    * same `Normalizer.columns` call as batch: same falsy-drop, casts
-    * and renames.
+    * seed of documents. The stream reads as the batch load does: the
+    * same parse schema ([[ExtendedJsonSource.parseSchema]]), the same
+    * [[ExtendedJsonSource.unwrap]] and the same `Normalizer` call.
     */
   def runStreaming(
       spark: SparkSession,
@@ -141,21 +138,8 @@ object Engine {
       checkpoint: String,
       mode: Normalizer.Mode = Normalizer.Strict,
       partitionKey: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    // parse per the *pre-rename* source schema
-    graft.functions.GraftFunctions.register(spark) // unwrapVariant uses py_norm
-    val inverse = schema.renameMap.map(_.swap)
-    val srcNames = schema.fields.map { case (n, t) => (inverse.getOrElse(n, n), t) }
-    val srcFields = srcNames.map { case (sn, t) =>
-      org.apache.spark.sql.types.StructField(sn, ExtendedJsonSource.streamParseType(t))
-    }
-    val raw = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(srcFields))
-      .json(inputDir)
-    val unwrapped = raw.select(srcNames.map { case (sn, t) =>
-      ExtendedJsonSource.unwrapVariant(sn, org.apache.spark.sql.functions.col(
-        s"`${sn.replace("`", "``")}`"), t, mode).alias(sn)
-    }: _*)
-    val normalized = Normalizer(schema, unwrapped, mode)
+    val parsed = spark.readStream.schema(ExtendedJsonSource.parseSchema(schema)).json(inputDir)
+    val normalized = Normalizer(schema, ExtendedJsonSource.unwrap(parsed, schema, mode), mode)
     val writer = normalized.writeStream
       .format("parquet")
       .option("path", outPath)

@@ -15,13 +15,15 @@ object Verify {
     // Iteration aid (driver runs unfiltered): comma-separated query names.
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
+    val failures = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      .flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> String.valueOf(e.getMessage))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -39,6 +41,10 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/failures.json"), failures
+      .map { case (name, msg) => s"""{"name": ${q(name)}, "message": ${q(msg)}}""" }
+      .mkString(s"""{"count": ${failures.size}, "failures": [""", ",", "]}"))
+    println(s"[verify] ${failures.size} failed")
     spark.stop()
   }
 }

@@ -200,7 +200,9 @@ object GraftFunctions {
     fn("token_tf", "(toks) - distinct (tok, tf) pairs of an ARRAY<STRING> (codegen)",
       classOf[TokenTf])(e => TokenTf(e(0))),
     fn("intersect_count", "(a, b) - intersection size of two sorted ARRAY<BIGINT> sets (codegen)",
-      classOf[IntersectCount])(e => IntersectCount(e(0), e(1))))
+      classOf[IntersectCount])(e => IntersectCount(e(0), e(1))),
+    fn("bson_unwrap", "(v, type[, on_string]) - an extended-JSON VARIANT leaf read as type; a string is on_string",
+      classOf[BsonUnwrap])(BsonUnwrap.build))
 
   /** Install every function the session's registry lacks. A name that
     * is already there (from the extension, or an earlier call) is left

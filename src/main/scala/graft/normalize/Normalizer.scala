@@ -82,8 +82,8 @@ object Normalizer {
   /** Lenient cast mirroring the reference cast table
     * (schema.py:123-158). Spark's `cast` already covers most pairs; the
     * special cases are spelled out. With `srcType` StringType this is
-    * the Python-grammar text cast, which the streaming reader also
-    * applies to its string values. */
+    * the Python-grammar text cast, which the EL reader
+    * (`ExtendedJsonSource`) applies to its string values. */
   private[graft] def castTo(srcName: String, c: Column, srcType: DataType, target: AType, mode: Mode): Column = {
     (target, mode) match {
       case (ABool, Compat) =>
@@ -146,9 +146,9 @@ object Normalizer {
       case (AStruct(fs), _) =>
         srcType match {
           case st: StructType =>
-            // Spark struct casts are POSITIONAL, but parsed field order
-            // (spark.read.json sorts alphabetically) need not match the
-            // inferred order (first-seen) — align BY NAME recursively;
+            // Spark struct casts are POSITIONAL, but an input's field
+            // order (a connector's schema, a caller's frame) need not match
+            // the inferred order (first-seen) — align BY NAME recursively;
             // a source field absent from the parse is null
             val aligned = struct(fs.map { case (n, ft) =>
               st.fields.find(_.name == n) match {

@@ -965,11 +965,14 @@ object Similarity {
     val visited = scala.collection.mutable.LinkedHashMap.empty[Long, (Double, Int)]
     entries.foreach(id => if (!visited.contains(id)) score(id).foreach(c => visited(id) = (c, 0)))
     var expanded = Set.empty[Long]
-    for (r <- 1 to rounds) {
+    var growing = true
+    for (r <- 1 to rounds if growing) {
       val frontier = visited.iterator
         .collect { case (id, (c, _)) if !expanded(id) => (id, c) }
         .toSeq.sortWith(cosrDescIdAsc)
         .take(beam).map(_._1)
+      // an empty frontier adds nothing, so no later round can either
+      growing = frontier.nonEmpty
       expanded ++= frontier
       frontier.flatMap(f => adj.getOrElse(f, Array.empty[Long]))
         .filter(id => id != qid && !visited.contains(id)).distinct

@@ -2,8 +2,9 @@ package graft.schema
 
 import graft.types.AType
 
-/** Ordered field->type schema with the reference's merge / config
-  * semantics (mongo2pq/schema.py:17-84). Immutable; every operation
+/** Ordered field->type schema with the reference's config semantics
+  * (mongo2pq/schema.py:17-84; the merge is
+  * [[SchemaInference.combine]]). Immutable; every operation
   * returns a new schema. Field order is load-bearing: the rename
   * collision suffix `_N` is assigned in schema field order
   * (schema.py:76-79, SURVEY.md §7.4.5).
@@ -14,20 +15,6 @@ final case class InferredSchema(
     renameMap: Map[String, String] = Map.empty) {
 
   def fieldMap: Map[String, AType] = fields.toMap
-
-  /** Field-wise unification merge (mongo2pq/schema.py:34-53):
-    * shared fields unify through the lattice, fields unique to either
-    * side are kept; `this` side's order wins, new fields append. */
-  def merge(other: InferredSchema): InferredSchema = {
-    require(name == other.name, "You can only merge two schemas with the same name")
-    val otherMap = other.fields.toMap
-    val merged = fields.map { case (n, t) =>
-      n -> otherMap.get(n).map(o => if (o == t) t else AType.unify(t, o)).getOrElse(t)
-    }
-    val mine = fields.map(_._1).toSet
-    val appended = other.fields.filterNot { case (n, _) => mine(n) }
-    InferredSchema(name, merged ++ appended, renameMap ++ other.renameMap)
-  }
 
   /** Apply config rules for this collection (mongo2pq/schema.py:55-84):
     * per field, at most one retype (first matching rule whose type
@@ -74,8 +61,4 @@ final case class InferredSchema(
     }
     InferredSchema(name, cur.toVector, renameMap ++ renames)
   }
-}
-
-object InferredSchema {
-  def empty(name: String): InferredSchema = InferredSchema(name, Vector.empty)
 }

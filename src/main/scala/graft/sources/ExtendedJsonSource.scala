@@ -1,13 +1,11 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets.UTF_8
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.VariantVal
 
 import graft.normalize.Normalizer
+import graft.schema.InferredSchema
 import graft.types.AType
 
 /** Reader for MongoDB extended-JSON dumps (`mongoexport` JSONL) — the
@@ -16,166 +14,88 @@ import graft.types.AType
   * with the image, so the live path is a trait implemented by this
   * file-based source).
   *
-  * Strategy: `spark.read.json` parses the raw lines with every leaf as
-  * its extended-JSON shape; a post-projection unwraps the BSON scalar
-  * wrappers (`$oid`, `$date`, `$numberLong`, `$numberInt`,
-  * `$numberDouble`, `$binary`) into flat Spark columns. Parsing and
-  * unwrap both run inside codegen — no UDF, no driver loop. The
-  * streaming reader parses against a known schema instead, non-string
-  * leaves as VARIANT, and unwraps to the same values ([[unwrapVariant]]).
+  * One reader serves the batch load and the stream. Each document is
+  * parsed once, against the engine's own schema ([[parseSchema]]:
+  * source names, post-config types), every non-string leaf as VARIANT
+  * and every string leaf as STRING at any depth. [[unwrap]] then types
+  * each leaf with one `bson_unwrap` call ([[graft.functions.BsonUnwrap]]),
+  * which reads the variant's type header once: numbers and bools are
+  * read typed, BSON scalar wrappers (`$oid`, `$date`, `$numberLong`,
+  * `$numberInt`, `$numberDouble`, `$binary`) through their key, and
+  * text, read as UTF-8, takes `Normalizer`'s Python-grammar cast.
+  * Parse and unwrap run inside codegen — no UDF, no driver loop, no
+  * second pass over the input.
   */
 object ExtendedJsonSource {
 
-  /** The wrapper-struct shapes `spark.read.json` produces for extended
-    * JSON scalars, matched structurally. */
-  private def unwrap(c: Column, dt: DataType): Column = dt match {
-    case StructType(fields) =>
-      val names = fields.map(_.name).toSet
-      val wrapperKeys = Set("$oid", "$numberLong", "$numberInt", "$numberDouble", "$date", "$binary")
-      if (names.size > 1 && names.forall(wrapperKeys) && !names.contains("$binary") && !names.contains("$date"))
-        // mixed wrapper shapes across documents (e.g. _id is $oid in some
-        // rows, $numberLong in others): spark.read.json unions the struct
-        // fields; take whichever wrapper the row carries, as a string —
-        // the lattice unifies mixed scalars to string anyway (schema.py:303)
-        coalesce(fields.map(f => c.getField(f.name).cast(StringType)).toIndexedSeq: _*)
-      else if (names == Set("$oid")) c.getField("$oid")
-      else if (names == Set("$numberLong")) c.getField("$numberLong").cast(LongType)
-      else if (names == Set("$numberInt")) c.getField("$numberInt").cast(IntegerType)
-      else if (names == Set("$numberDouble")) c.getField("$numberDouble").cast(DoubleType)
-      else if (names.contains("$date")) {
-        val d = fields.find(_.name == "$date").get
-        d.dataType match {
-          case LongType   => (c.getField("$date") / lit(1000.0)).cast(TimestampType)
-          case StringType => c.getField("$date").cast(TimestampType)
-          case StructType(inner) if inner.exists(_.name == "$numberLong") =>
-            (c.getField("$date").getField("$numberLong").cast(LongType) / lit(1000.0)).cast(TimestampType)
-          case _ => c.getField("$date").cast(TimestampType)
-        }
-      }
-      else if (names.contains("$binary")) {
-        val b = fields.find(_.name == "$binary").get
-        b.dataType match {
-          case StructType(inner) if inner.exists(_.name == "base64") =>
-            unbase64(c.getField("$binary").getField("base64"))
-          case StringType => unbase64(c.getField("$binary"))
-          case _          => c.getField("$binary").cast(BinaryType)
-        }
-      }
-      else
-        // plain nested document: unwrap recursively; an absent one stays
-        // null (struct() of nulls would fabricate a row)
-        when(c.isNull, lit(null)).otherwise(struct(
-          fields.map(f => unwrap(c.getField(f.name), f.dataType).alias(f.name)).toIndexedSeq: _*))
-    case ArrayType(et, _) =>
-      et match {
-        case _: StructType | _: ArrayType => transform(c, x => unwrap(x, et))
-        case _                            => c
-      }
-    case _ => c
-  }
-
-  /** Read a JSONL dump; BSON wrappers unwrapped, column order as parsed. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.json(path)
-    raw.select(raw.schema.fields.map(f => unwrap(col(f.name), f.dataType).alias(f.name)).toIndexedSeq: _*)
-  }
-
-  // ---- streaming-side unwrap -----------------------------------------
-  //
-  // A stream can't be schema-inferred per batch, so the streaming reader
-  // parses each document once, against the engine's own schema
-  // (streamParseType), and
-  // unwrapVariant turns each parsed leaf into the value the batch path
-  // (`spark.read.json` + unwrap + `Normalizer`) produces, in the
-  // schema's own Spark type; `Normalizer` then behaves identically
-  // downstream. Non-string leaves parse as VARIANT at any depth, so a
-  // number, a BSON wrapper or a text value is read typed out of the
-  // parsed value by path (`$['$numberLong']`, `$['$date']`, ...). String
-  // leaves parse as STRING: Spark's JSON reader then gives every token
-  // the text the batch reader gives it (a number token's own text, say
-  // `1e3`, which a variant no longer holds).
-
-  /** The streaming parse type for a target lattice type: STRING for a
-    * string, VARIANT for any other scalar; lists and structs recurse. */
-  def streamParseType(t: AType): DataType = t match {
+  /** The parse type for a target lattice type: STRING for a string,
+    * VARIANT for any other scalar; lists and structs recurse. A string
+    * leaf parses as STRING so that Spark's JSON reader keeps each
+    * token's own text (a number's `1e3`, a sub-document's JSON), which
+    * a variant no longer holds. */
+  def parseType(t: AType): DataType = t match {
     case AType.AString     => StringType
-    case AType.AList(e)    => ArrayType(streamParseType(e))
+    case AType.AList(e)    => ArrayType(parseType(e))
     case AType.AStruct(fs) =>
-      StructType(fs.map { case (n, ft) => StructField(n, streamParseType(ft)) }.toArray)
+      StructType(fs.map { case (n, ft) => StructField(n, parseType(ft)) }.toArray)
     case _ => VariantType
   }
 
-  /** BSON wrapper values read by path out of a parsed variant; each is
-    * NULL when `v` is not that wrapper. */
-  private final class Wrapper(v: Column) {
-    def get(key: String, to: String = "string"): Column = try_variant_get(v, s"$$['$$$key']", to)
-    /** `$date` is epoch millis (a number or `{"$numberLong": text}`) or ISO text. */
-    def date: Column = {
-      val millis = coalesce(try_variant_get(v, "$['$date']['$numberLong']", "bigint"), get("date", "bigint"))
-      when(millis.isNotNull, (millis / lit(1000.0)).cast(TimestampType))
-        .otherwise(get("date").cast(TimestampType))
-    }
-    def bytes: Column = unbase64(coalesce(try_variant_get(v, "$['$binary']['base64']", "string"), get("binary")))
-    /** The text the batch path's unwrap-then-cast-to-string gives. */
-    def text: Column = coalesce(get("oid"), get("numberLong"), get("numberInt"), get("numberDouble"),
-      date.cast(StringType), bytes.cast(StringType))
+  /** `schema`'s fields under their source (pre-rename) names. */
+  private def sourceFields(schema: InferredSchema): Seq[(String, AType)] = {
+    val inverse = schema.renameMap.map(_.swap)
+    schema.fields.map { case (n, t) => (inverse.getOrElse(n, n), t) }
   }
 
-  /** The text of a VARIANT string value, NULL for any other value, read
-    * as UTF-8. Spark's own reads of a variant string (`variant_get`,
-    * casts, `to_json`) decode it with the JVM's default charset
-    * (`VariantUtil.getString`, Spark 4.1.2), which turns non-ASCII text
-    * into U+FFFD under a non-UTF-8 locale. */
-  private val variantText = udf { (v: VariantVal) =>
-    import org.apache.spark.types.variant.VariantUtil._
-    if (v == null) null
-    else {
-      val b = v.getValue
-      val info = (b(0) >> BASIC_TYPE_BITS) & TYPE_INFO_MASK
-      (b(0) & BASIC_TYPE_MASK) match {
-        case SHORT_STR => new String(b, 1, info, UTF_8)
-        case PRIMITIVE if info == LONG_STR => new String(b, 1 + U32_SIZE, readUnsigned(b, 1, U32_SIZE), UTF_8)
-        case _ => null
-      }
-    }
+  /** The schema documents are parsed against: source names, [[parseType]]s. */
+  def parseSchema(schema: InferredSchema): StructType =
+    StructType(sourceFields(schema).map { case (n, t) => StructField(n, parseType(t)) })
+
+  /** Documents parsed as [[parseSchema]]`(schema)`, each column typed as
+    * `schema` types it (its Spark type), under its source name — the
+    * input `Normalizer` expects. */
+  def unwrap(parsed: DataFrame, schema: InferredSchema, mode: Normalizer.Mode): DataFrame = {
+    graft.functions.GraftFunctions.register(parsed.sparkSession)
+    parsed.select(sourceFields(schema).map { case (n, t) =>
+      unwrapVariant(n, col(s"`${n.replace("`", "``")}`"), t, mode).alias(n)
+    }: _*)
   }
 
-  /** A column parsed as [[streamParseType]]`(t)`, typed as the batch
-    * path types it: `t`'s Spark type. A text value takes the batch's
-    * StringType cast (`Normalizer.castTo`: the Python grammar; `''` is
-    * falsy); numbers and BSON wrappers are read typed, as the batch's
-    * `spark.read.json` reads them (a float token as DOUBLE, so a
-    * fraction in an int column truncates). `name` labels cast errors. */
+  /** Read a JSONL dump against `schema` (see [[unwrap]]). */
+  def read(spark: SparkSession, path: String, schema: InferredSchema, mode: Normalizer.Mode): DataFrame =
+    unwrap(spark.read.schema(parseSchema(schema)).json(path), schema, mode)
+
+  /** A column parsed as [[parseType]]`(t)`, typed as `t`'s Spark type.
+    * Text takes the StringType cast (`Normalizer.castTo`: the Python
+    * grammar; `''` is falsy); numbers and BSON wrappers are read typed
+    * (a fraction in an int column truncates). `name` labels cast
+    * errors. */
   def unwrapVariant(name: String, v: Column, t: AType, mode: Normalizer.Mode): Column = {
     import AType._
     t match {
       case AList(e) => transform(v, x => unwrapVariant(s"$name[]", x, e, mode))
       case AStruct(fs) =>
-        // a null sub-document stays null, as on the batch path
+        // an absent sub-document stays null (struct() of nulls would fabricate one)
         when(v.isNull, lit(null)).otherwise(struct(fs.map { case (n, ft) =>
           unwrapVariant(s"$name.$n", v.getField(n), ft, mode).alias(n)
         }: _*))
       case AString =>
         // only a BSON wrapper's text is parsed a second time, to unwrap it
-        coalesce(new Wrapper(try_parse_json(when(v.startsWith("{"), v))).text, v)
+        coalesce(bsonUnwrap(try_parse_json(when(v.startsWith("{"), v)), StringType), v)
       case _ =>
-        val w = new Wrapper(v)
-        val text = variantText(v)
-        val number = try_variant_get(v, "$", "double") // NULL unless a number
-        val typed = t match {
-          case ABool => try_variant_get(v, "$", "boolean")
-          case ABinary => w.bytes
-          case ADate32 | ADate64 | ATimestampS =>
-            coalesce(w.date, number.cast(TimestampType)).cast(t.sparkType)
-          case _ if isFloat(t) =>
-            coalesce(number, w.get("numberDouble", "double"), w.get("numberLong", "double"),
-              w.get("numberInt", "double")).cast(t.sparkType)
-          case _ => // ints
-            coalesce(when(number.isNotNull, variant_get(v, "$", "bigint")), w.get("numberLong", "bigint"),
-              w.get("numberInt", "bigint"), w.get("numberDouble", "double").cast(LongType)).cast(t.sparkType)
+        val to = t match {
+          case ABool => BooleanType
+          case ABinary => BinaryType
+          case ADate32 | ADate64 | ATimestampS => TimestampType
+          case _ if isFloat(t) => DoubleType
+          case _ => LongType
         }
-        when(text.isNull, typed)
-          .when(text =!= "", Normalizer.castTo(name, text, StringType, t, mode))
+        val text = bsonUnwrap(v, StringType)
+        bsonUnwrap(v, to, when(text =!= "", Normalizer.castTo(name, text, StringType, t, mode).cast(to)))
+          .cast(t.sparkType)
     }
   }
+
+  private def bsonUnwrap(v: Column, to: DataType, onString: Column*): Column =
+    call_function("bson_unwrap", v +: lit(to.simpleString) +: onString: _*)
 }

@@ -5,6 +5,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
+import graft.normalize.Normalizer
+import graft.schema.{InferredSchema, SchemaInference}
+
 /** Document-collection source abstraction (A1/A2,
   * mongo2pq/mongo.py:15-18 + main.py:33-37).
   *
@@ -20,7 +23,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *
   * Both expose collections two ways: raw JSON documents (for schema
   * inference, which is defined over documents) and a parsed DataFrame
-  * (for the normalize/load path).
+  * (for the normalize/load path). A dump is parsed once, against the
+  * schema the load normalizes to ([[ExtendedJsonSource]]); the
+  * connector returns typed BSON columns, which `Normalizer` casts.
   */
 trait Source {
   /** Databases available at this source (A2: reference defaults to the
@@ -30,8 +35,10 @@ trait Source {
   def listCollections(db: String): Seq[String]
   /** A collection as raw extended-JSON document strings. */
   def rawDocuments(db: String, collection: String): Dataset[String]
-  /** A collection as a parsed DataFrame (BSON wrappers unwrapped). */
-  def read(db: String, collection: String): DataFrame
+  /** A collection as a parsed DataFrame (BSON wrappers unwrapped), read
+    * for `schema` (post-config) in `mode`: the input of
+    * `Normalizer(schema, _, mode)`. */
+  def read(db: String, collection: String, schema: InferredSchema, mode: Normalizer.Mode): DataFrame
 }
 
 /** Extended-JSON dump directories: `<root>/<db>/<collection>.jsonl`. */
@@ -58,8 +65,12 @@ final class DumpSource(spark: SparkSession, root: String) extends Source {
   override def rawDocuments(db: String, collection: String): Dataset[String] =
     spark.read.textFile(pathOf(db, collection))
 
-  override def read(db: String, collection: String): DataFrame =
-    ExtendedJsonSource.read(spark, pathOf(db, collection))
+  override def read(db: String, collection: String, schema: InferredSchema, mode: Normalizer.Mode): DataFrame =
+    ExtendedJsonSource.read(spark, pathOf(db, collection), schema, mode)
+
+  /** Read against the schema inferred from a sample (the default size). */
+  def read(db: String, collection: String): DataFrame =
+    read(db, collection, SchemaInference.infer(rawDocuments(db, collection), collection), Normalizer.Strict)
 }
 
 /** Live MongoDB over the Spark connector. Requires
@@ -174,7 +185,11 @@ final class MongoSource(spark: SparkSession, uri: String, checkConnection: Boole
     read(db, collection).toJSON.as[String]
   }
 
-  override def read(db: String, collection: String): DataFrame = {
+  /** The connector's typed columns; `schema` is `Normalizer`'s to apply. */
+  override def read(db: String, collection: String, schema: InferredSchema, mode: Normalizer.Mode): DataFrame =
+    read(db, collection)
+
+  def read(db: String, collection: String): DataFrame = {
     requireConnector()
     spark.read.format("mongodb")
       .option("connection.uri", uri)

@@ -74,6 +74,65 @@ class EngineSpec extends SparkSuite {
       s"absent sub-document became ${byN(2L).get(byN(2L).fieldIndex("cust"))}")
   }
 
+  test("a field widened to string next to sub-documents holds their JSON, batch and stream alike") {
+    // a null widens the field to string (TypeLattice.inferJson); the one
+    // reader parses it as STRING, so a sub-document keeps its JSON text,
+    // as written, on both paths (the schema-less read wrote `{1, x}`)
+    val dir = Files.createTempDirectory("widened")
+    val in = Files.createDirectory(dir.resolve("in")).resolve("docs.jsonl")
+    Files.write(in, java.util.Arrays.asList(
+      """{"_id": 1, "s": {"a": 1, "b": "x"}}""",
+      """{"_id": 2, "s": {"a": 2, "b": null}}""",
+      """{"_id": 3, "s": null}"""))
+    val batch = Engine.run(spark, Engine.JobConfig(
+      input = in.toString, collection = "docs", outDir = dir.resolve("batch").toString, samples = 0))
+    assert(batch.schema.fieldMap("s") == graft.types.AType.AString)
+    val streamOut = dir.resolve("stream").toString
+    val q = Engine.runStreaming(spark, in.getParent.toString, batch.schema, streamOut,
+      dir.resolve("ckpt").toString)
+    try q.processAllAvailable() finally q.stop()
+    def texts(path: String) = spark.read.parquet(path).orderBy("_id").select("s").collect()
+      .map(r => Option(r.getString(0))).toSeq
+    val json = Seq(Some("""{"a": 1, "b": "x"}"""), Some("""{"a": 2, "b": null}"""), None)
+    assert(texts(batch.outPath) == json)
+    assert(texts(streamOut) == json)
+  }
+
+  test("Engine.run reads its input once") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicLong
+    import org.apache.spark.scheduler._
+    val dir = Files.createTempDirectory("readonce")
+    val in = dir.resolve("docs.jsonl")
+    Files.write(in, (0 until 2000).map { i =>
+      s"""{"_id": {"$$oid": "${f"$i%024x"}"}, "n": {"$$numberLong": "$i"}, "at": {"$$date": ${i * 3600000L}}, """ +
+        s""""x": ${i * 0.25}, "ok": ${i % 2 == 0}, "note": "document $i of a dump read once by the load"}"""
+    }.mkString("", "\n", "\n").getBytes("UTF-8"))
+    val bytesRead = new AtomicLong
+    val marker = new CountDownLatch(1)
+    @volatile var markerJob = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("readonce.marker") != null) markerJob = e.jobId
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) bytesRead.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = if (e.jobId == markerJob) marker.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Engine.run(spark, Engine.JobConfig(
+        input = in.toString, collection = "docs", outDir = dir.resolve("out").toString, samples = 100))
+      // listener events arrive in order: once a later job has ended,
+      // every task of the load has been counted
+      spark.sparkContext.setLocalProperty("readonce.marker", "1")
+      try spark.range(1).count() finally spark.sparkContext.setLocalProperty("readonce.marker", null)
+      assert(marker.await(60, TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val size = Files.size(in)
+    assert(bytesRead.get < 1.5 * size, s"read ${bytesRead.get} bytes of a $size-byte input")
+    assert(bytesRead.get >= size, s"read ${bytesRead.get} bytes of a $size-byte input")
+  }
+
   test("schema file loads when valid; parse failure falls back to inference (main.py:59-70)") {
     val out = Files.createTempDirectory("engine2").toString
     val good = Engine.run(spark, Engine.JobConfig(

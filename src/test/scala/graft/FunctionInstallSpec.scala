@@ -6,9 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** A caller's own session — built without [[GraftExtensions]] and with
   * no `GraftFunctions.register` call — must still run the engine: the
   * public entry points install its functions on it. Registry queries
-  * cover eight functions; py_norm, which only the EL normalize step
-  * calls, goes through `Normalizer.apply`. The plans together must
-  * call all nine. */
+  * cover eight functions; py_norm and bson_unwrap, which only the EL
+  * path calls, go through `Normalizer.apply` and the EL read
+  * (`ExtendedJsonSource.read`). The plans together must call all ten. */
 class FunctionInstallSpec extends AnyFunSuite {
 
   test("registry queries run on a session built without the extension") {
@@ -23,7 +23,7 @@ class FunctionInstallSpec extends AnyFunSuite {
       .getOrCreate()
     try {
       val names = graft.functions.GraftFunctions.table.map(_._1.funcName)
-      assert(names.size == 9)
+      assert(names.size == 10)
       assert(names.forall(n => !bare.sessionState.functionRegistry
         .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n))),
         "a bare session must start without the engine's functions")
@@ -35,10 +35,15 @@ class FunctionInstallSpec extends AnyFunSuite {
       val normalized = graft.normalize.Normalizer(
         graft.schema.InferredSchema("t", Vector("n" -> graft.types.AType.AInt64)), text)
       assert(normalized.as[Long].collect().toSeq == Seq(42L))
+      val dump = java.nio.file.Files.createTempFile("bare", ".jsonl")
+      java.nio.file.Files.writeString(dump, "{\"n\": {\"$numberLong\": \"42\"}}\n{\"n\": \" 4_2 \"}\n")
+      val read = graft.sources.ExtendedJsonSource.read(bare, dump.toString,
+        graft.schema.InferredSchema("t", Vector("n" -> graft.types.AType.AInt64)), graft.normalize.Normalizer.Strict)
+      assert(read.as[Long].collect().toSeq == Seq(42L, 42L))
       val plans = (built.map { case (q, df) =>
         assert(df.count() > 0, s"$q returned no rows")
         df.queryExecution.analyzed.toString
-      } :+ normalized.queryExecution.analyzed.toString).mkString("\n")
+      } ++ Seq(normalized, read).map(_.queryExecution.analyzed.toString)).mkString("\n")
       val unused = names.filterNot(n => plans.contains(s"$n("))
       assert(unused.isEmpty, s"nothing above calls $unused")
     } finally {

@@ -96,6 +96,9 @@ class ScaleSpec extends SparkSuite {
       assert(r.getDouble(0) == 11.0)
       assert(r.getLong(1) != 0L)
       // the whole table, not only the two called above
+      assert(graft.functions.GraftFunctions.table.map(_._1.funcName).toSet == Set("dot_product",
+        "rolling_hash", "count_in_set", "sum_strlen", "simhash64", "py_norm", "minhash_sig", "token_tf",
+        "intersect_count", "bson_unwrap"))
       graft.functions.GraftFunctions.table.foreach { case (id, _, _) =>
         assert(s2.sessionState.functionRegistry.functionExists(id), id)
       }

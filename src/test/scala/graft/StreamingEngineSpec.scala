@@ -37,12 +37,56 @@ class StreamingEngineSpec extends SparkSuite {
       org.apache.spark.sql.types.FloatType)
   }
 
-  /** `unwrapVariant` over JSON tokens, as the streaming reader parses them. */
+  /** `unwrapVariant` over JSON tokens, as the EL reader parses them: one
+    * `bson_unwrap` call per leaf, no UDF. */
   private def unwrapTokens(tokens: Seq[String], t: graft.types.AType) = {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, parse_json}
-    tokens.toDF("n").select(graft.sources.ExtendedJsonSource.unwrapVariant(
+    val df = tokens.toDF("n").select(graft.sources.ExtendedJsonSource.unwrapVariant(
       "n", parse_json(col("n")), t, graft.normalize.Normalizer.Strict).as("v"))
+    val exprs = df.queryExecution.analyzed.expressions.flatMap(_.collect { case e => e })
+    assert(exprs.exists(_.isInstanceOf[graft.functions.BsonUnwrap]) &&
+      !exprs.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF]))
+    df
+  }
+
+  test("bson_unwrap reads numbers, wrappers and UTF-8 text; on_string only for strings") {
+    // one row per token; 'bigint' and 'double' reads, and the raw text
+    val tokens = Seq("42", "1.5", "-2.75", "\"\"", "\"δέλτα\"", "true", "null", "[1]", """{"a": 1}""",
+      """{"$numberLong": "8589934592"}""", """{"$numberInt": "7"}""", """{"$numberDouble": "2.5"}""",
+      """{"$oid": "65a1b2c3d4e5f60718293a4b"}""")
+    import spark.implicits._
+    val rows = tokens.toDF("n").selectExpr(
+      "bson_unwrap(parse_json(n), 'bigint') AS i", "bson_unwrap(parse_json(n), 'double') AS d",
+      "bson_unwrap(parse_json(n), 'string') AS s", "bson_unwrap(parse_json(n), 'boolean') AS b")
+      .collect().map(r => (Option(r.get(0)), Option(r.get(1)), Option(r.get(2)), Option(r.get(3))))
+    // a string, a bool, a JSON null, an array or a plain sub-document
+    // reads as NULL into 'bigint'
+    assert(rows.map(_._1).toSeq == Seq(Some(42L), Some(1L), Some(-2L), None, None, None, None, None, None,
+      Some(8589934592L), Some(7L), Some(2L), None))
+    assert(rows.map(_._2).toSeq.take(3) == Seq(Some(42.0), Some(1.5), Some(-2.75)) && rows(11)._2 == Some(2.5))
+    assert(rows.map(_._3).toSeq == Seq(None, None, None, Some(""), Some("δέλτα"), None, None, None, None,
+      Some("8589934592"), Some("7"), Some("2.5"), Some("65a1b2c3d4e5f60718293a4b")))
+    assert(rows(5)._4 == Some(true) && rows.indices.filter(_ != 5).forall(i => rows(i)._4.isEmpty))
+    // $date (millis, {$numberLong}, ISO) and $binary ({base64}, legacy text)
+    val dates = Seq("""{"$date": 1709287200123}""", """{"$date": {"$numberLong": "1709287200123"}}""",
+      """{"$date": "2024-03-01T10:00:00.123Z"}""").toDF("n")
+      .selectExpr("bson_unwrap(parse_json(n), 'timestamp')").collect()
+    assert(dates.map(_.getTimestamp(0).toInstant.toString).toSeq == Seq.fill(3)("2024-03-01T10:00:00.123Z"))
+    // a number read as a timestamp is epoch seconds, in any number shape
+    val epochs = Seq("1709287200", "1709287200.5", "1.7092872005E9").toDF("n")
+      .selectExpr("bson_unwrap(parse_json(n), 'timestamp')").collect().map(_.getTimestamp(0).toInstant.toString)
+    assert(epochs.toSeq == Seq("2024-03-01T10:00:00Z", "2024-03-01T10:00:00.500Z", "2024-03-01T10:00:00.500Z"))
+    val blobs = Seq("""{"$binary": {"base64": "aGVsbG8=", "subType": "00"}}""",
+      """{"$binary": "aGVsbG8=", "$type": "00"}""").toDF("n")
+      .selectExpr("bson_unwrap(parse_json(n), 'binary')").collect().map(r => new String(r.getAs[Array[Byte]](0)))
+    assert(blobs.toSeq == Seq("hello", "hello"))
+    // on_string is evaluated for a string value only, so an error there
+    // does not fire for the numbers of the same column
+    val q = "bson_unwrap(parse_json(n), 'bigint', CAST(raise_error('on_string') AS BIGINT))"
+    assert(Seq("1", "2.5", """{"$numberLong": "3"}""").toDF("n").selectExpr(q).as[Long].collect().toSeq ==
+      Seq(1L, 2L, 3L))
+    intercept[org.apache.spark.SparkThrowable](Seq("1", "\"x\"").toDF("n").selectExpr(q).collect())
   }
 
   test("unwrapVariant numeric parity: float tokens truncate, wrappers parse, empty nulls") {
