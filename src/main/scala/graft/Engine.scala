@@ -52,7 +52,7 @@ object Engine {
   def run(spark: SparkSession, job: JobConfig): JobResult =
     runWith(job,
       inferSchema = SchemaInference.inferFile(spark, job.input, job.collection, job.samples),
-      read = ExtendedJsonSource.read(spark, job.input, _, job.mode))
+      load = s => ExtendedJsonSource.normalize(ExtendedJsonSource.read(spark, job.input, s, job.mode), s))
 
   /** Source-agnostic EL: the same pipeline fed from any [[graft.sources.Source]]
     * (dump directory or live MongoDB connector) — a reference user's
@@ -65,13 +65,13 @@ object Engine {
     runWith(job,
       inferSchema = SchemaInference.infer(
         source.rawDocuments(db, job.collection), job.collection, job.samples),
-      read = source.read(db, job.collection, _, job.mode))
+      load = source.load(db, job.collection, _, job.mode))
 
-  /** `read` gets the post-config schema: the load parses against it. */
+  /** `load` gets the post-config schema and gives the normalized rows. */
   private def runWith(
       job: JobConfig,
       inferSchema: => InferredSchema,
-      read: InferredSchema => DataFrame): JobResult = {
+      load: InferredSchema => DataFrame): JobResult = {
     // 1. schema: load (with fallback) or infer — reference main.py:55-74
     val loaded: Option[InferredSchema] = job.schemaFile.flatMap { f =>
       try Some(SchemaYaml.loadFile(f))
@@ -106,9 +106,8 @@ object Engine {
     // must not collide on the observation name
     val obs = new org.apache.spark.sql.Observation(
       s"graft.rows_written.${java.util.UUID.randomUUID()}")
-    val normalized = Normalizer(withConfig, read(withConfig), job.mode)
-      .observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("rows"))
+    val normalized = load(withConfig).observe(obs, org.apache.spark.sql.functions.count(
+      org.apache.spark.sql.functions.lit(1)).as("rows"))
     val outPath = s"${job.outDir.stripSuffix("/")}/${job.collection}"
     val writer = normalized.write.mode("overwrite").format("parquet")
     job.partitionKey match {
@@ -128,7 +127,8 @@ object Engine {
     * retroactively): pass one inferred/loaded via the batch path from a
     * seed of documents. The stream reads as the batch load does: the
     * same parse schema ([[ExtendedJsonSource.parseSchema]]), the same
-    * [[ExtendedJsonSource.unwrap]] and the same `Normalizer` call.
+    * [[ExtendedJsonSource.unwrap]] and the same
+    * [[ExtendedJsonSource.normalize]].
     */
   def runStreaming(
       spark: SparkSession,
@@ -139,7 +139,7 @@ object Engine {
       mode: Normalizer.Mode = Normalizer.Strict,
       partitionKey: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
     val parsed = spark.readStream.schema(ExtendedJsonSource.parseSchema(schema)).json(inputDir)
-    val normalized = Normalizer(schema, ExtendedJsonSource.unwrap(parsed, schema, mode), mode)
+    val normalized = ExtendedJsonSource.normalize(ExtendedJsonSource.unwrap(parsed, schema, mode), schema)
     val writer = normalized.writeStream
       .format("parquet")
       .option("path", outPath)

@@ -3,129 +3,110 @@ package graft.functions
 import java.math.RoundingMode
 import java.time.ZoneId
 
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.SparkException
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BoundReference, Cast, ConditionalExpression,
-  Expression, GenericInternalRow, Literal, TimeZoneAwareExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TimeZoneAwareExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 import org.apache.spark.types.variant.VariantUtil._
 import org.apache.spark.unsafe.types.{UTF8String, VariantVal}
 
-/** `bson_unwrap(v, type[, on_string])`: one extended-JSON leaf, parsed as
+/** `bson_unwrap(v, type[, name])`: one extended-JSON leaf, parsed as
   * VARIANT, read as `type` ('boolean', 'bigint', 'double', 'timestamp',
   * 'binary' or 'string'). The value's type header is read once and
   * dispatches:
   *
   *  - a number is read as 'bigint', 'double' or 'timestamp' (a fraction
   *    truncates into 'bigint', as Spark's ANSI cast does; 'timestamp'
-  *    takes epoch seconds), a bool as 'boolean';
+  *    takes epoch seconds), and as 'boolean' it is true when it is 1, as
+  *    `Normalizer` casts a number; a bool is read as 'boolean', or as 1
+  *    or 0;
   *  - an object with a single BSON wrapper key — `$oid`, `$numberLong`,
   *    `$numberInt`, `$numberDouble`, `$date` (epoch millis, ISO text or
   *    `{"$numberLong": millis}`) or `$binary` (`{"base64": …}`, or text
-  *    beside a legacy `$type`) — is read through that key; 'string'
-  *    gives the text of `$oid` and the `$number*` wrappers;
-  *  - a string is `on_string` (NULL when absent), which is evaluated
-  *    only then; as 'string' it is the string itself.
+  *    beside a legacy `$type`) — is read through that key;
+  *  - a string, or a JSON null, is NULL: the EL reader sends text to
+  *    `Normalizer`'s Python-grammar cast.
   *
-  * Anything else — a JSON null, an array, a plain sub-document, a
-  * wrapper that does not read as `type` — is NULL; malformed wrapper
-  * text (`{"$numberLong": "x"}`) raises.
+  * Any other value — an array, a plain sub-document, a wrapper that
+  * does not read as `type`, malformed wrapper text — raises a cast error
+  * that names column `name`, as a bad row crashes the reference's
+  * extract. As 'string' the read is a string's own text or the text of
+  * `$oid` and the `$number*` wrappers, and NULL for anything else: the
+  * caller keeps that value's JSON.
   *
   * Strings are read as their UTF-8 bytes: Spark 4.1.2's own variant
   * string reads (`VariantUtil.getString`, so `variant_get`, casts and
   * `to_json`) decode with the JVM's default charset, which turns
   * non-ASCII text into U+FFFD under a non-UTF-8 locale.
   *
-  * Codegen is one call, so the EL read stays inside WholeStageCodegen;
-  * `on_string`, which may read only the variant, is evaluated
-  * interpreted in the string branch.
+  * Codegen is one static call, so the EL read stays inside
+  * WholeStageCodegen.
   */
-case class BsonUnwrap(child: Expression, onString: Expression, to: DataType,
-    timeZoneId: Option[String] = None)
-    extends BinaryExpression with TimeZoneAwareExpression with ConditionalExpression {
+case class BsonUnwrap(child: Expression, to: DataType, name: String, timeZoneId: Option[String] = None)
+    extends UnaryExpression with TimeZoneAwareExpression {
 
-  override def left: Expression = child
-  override def right: Expression = onString
   override def dataType: DataType = to
   override def nullable: Boolean = true
   override def prettyName: String = "bson_unwrap"
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == VariantType && BsonUnwrap.types.contains(to) && onString.dataType == to &&
-        onString.transform { case e if e.semanticEquals(child) => Literal(null, VariantType) }.references.isEmpty)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bson_unwrap cannot read ${child.dataType} as $to, with an on_string that reads only the variant")
+    if (child.dataType == VariantType && BsonUnwrap.types.contains(to)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"bson_unwrap cannot read ${child.dataType} as $to")
 
-  // on_string runs for string values only: subexpression elimination
-  // must not hoist it in front of the dispatch
-  override def alwaysEvaluatedInputs: Seq[Expression] = Seq(child)
-  override def withNewAlwaysEvaluatedInputs(in: Seq[Expression]): BsonUnwrap = copy(child = in.head)
-  override def branchGroups: Seq[Seq[Expression]] = Nil
   override def withTimeZone(tz: String): BsonUnwrap = copy(timeZoneId = Option(tz))
 
-  /** on_string over a row that holds only the variant: it is evaluated
-    * interpreted, for string values only. Inlining its code (the Python
-    * cast is large) into every leaf's code made the whole-stage method
-    * too big for the JIT to compile: a 300k-document lineitem dump read
-    * to a noop sink on local[4] took 1.7 s that way, 1.15 s this way. */
-  @transient private lazy val onStringOfVariant: Expression =
-    onString.transform { case e if e.semanticEquals(child) => BoundReference(0, VariantType, nullable = true) }
+  /** `v` read as `to`, as Catalyst holds the value, or NULL. */
+  def unwrap(v: VariantVal): AnyRef = BsonUnwrap.read(v, to, name, zoneId)
 
-  /** `v` read as `to`, or on_string for a string value. */
-  def unwrap(v: VariantVal): Any = BsonUnwrap.read(v, to, zoneId) match {
-    case BsonUnwrap.OnString => onStringOfVariant.eval(new GenericInternalRow(Array[Any](v)))
-    case r => r
-  }
-
-  override def eval(input: InternalRow): Any = child.eval(input) match {
-    case v: VariantVal => unwrap(v)
-    case _ => null
-  }
+  override def nullSafeEval(v: Any): Any = unwrap(v.asInstanceOf[VariantVal])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("bsonUnwrap", this)
-    val (v, r) = (child.genCode(ctx), ctx.freshName("read"))
-    ev.copy(code = code"""
-      |${v.code}
-      |boolean ${ev.isNull} = true;
-      |${CodeGenerator.javaType(to)} ${ev.value} = ${CodeGenerator.defaultValue(to)};
-      |if (!${v.isNull}) {
-      |  Object $r = $self.unwrap(${v.value});
-      |  ${ev.isNull} = $r == null;
-      |  if ($r != null) ${ev.value} = (${CodeGenerator.boxedType(to)}) $r;
-      |}""".stripMargin)
+    val (self, r) = (ctx.addReferenceObj("bsonUnwrap", this), ctx.freshName("read"))
+    nullSafeCodeGen(ctx, ev, v =>
+      s"""
+         |Object $r = $self.unwrap($v);
+         |${ev.isNull} = $r == null;
+         |if ($r != null) ${ev.value} = (${CodeGenerator.boxedType(to)}) $r;
+       """.stripMargin)
   }
 
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(child = newLeft, onString = newRight)
+  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
 }
 
 object BsonUnwrap {
   private val types = Seq(BooleanType, LongType, DoubleType, TimestampType, BinaryType, StringType)
 
-  /** The SQL function's builder: `type` is a literal type name. */
-  def build(args: Seq[Expression]): BsonUnwrap = {
-    val to = DataType.fromDDL(args(1).eval().toString)
-    BsonUnwrap(args(0), Cast(args.lift(2).getOrElse(Literal(null)), to), to)
+  /** The SQL function's builder: `type` and `name` are literals. */
+  def build(args: Seq[Expression]): BsonUnwrap =
+    BsonUnwrap(args(0), DataType.fromDDL(args(1).eval().toString), args.lift(2).fold("?")(_.eval().toString))
+
+  /** `v` read as `to`, as Catalyst holds the value, or NULL. */
+  def read(v: VariantVal, to: DataType, name: String, zone: ZoneId): AnyRef = {
+    val (b, meta) = (v.getValue, v.getMetadata)
+    getType(b, 0) match {
+      case Type.NULL => null
+      case Type.STRING => if (to == StringType) text(b, 0) else null
+      case Type.OBJECT if to == StringType => wrapperText(b, meta)
+      case _ if to == StringType => null
+      case _ =>
+        val r = try value(b, meta, 0, to, zone)
+          catch { case _: NumberFormatException | _: ArithmeticException | _: IllegalArgumentException => null }
+        if (r != null) r
+        else throw new SparkException("USER_RAISED_EXCEPTION", Map("errorMessage" ->
+          s"ValueError: cannot read ${v.toJson(zone)} as ${to.simpleString} for column $name"), null)
+    }
   }
 
-  /** What [[read]] returns for a string value read as anything but a string. */
-  val OnString: AnyRef = new Object
-
-  /** `v` read as `to`, as Catalyst holds the value; NULL, or [[OnString]]. */
-  def read(v: VariantVal, to: DataType, zone: ZoneId): AnyRef = {
-    val b = v.getValue
-    if (getType(b, 0) == Type.STRING && to != StringType) OnString else value(b, v.getMetadata, 0, to, zone)
-  }
-
+  /** The value at `pos` read as `to` (not 'string'); NULL when it does not read. */
   private def value(b: Array[Byte], meta: Array[Byte], pos: Int, to: DataType, zone: ZoneId): AnyRef =
     getType(b, pos) match {
-      case Type.STRING => if (to == StringType) text(b, pos) else null
-      case Type.BOOLEAN => if (to == BooleanType) Boolean.box(getBoolean(b, pos)) else null
+      case Type.BOOLEAN => to match {
+        case BooleanType => Boolean.box(getBoolean(b, pos))
+        case LongType | DoubleType => fromDouble(if (getBoolean(b, pos)) 1 else 0, to)
+        case _ => null
+      }
       case Type.LONG => if (to == LongType) Long.box(getLong(b, pos)) else fromDouble(getLong(b, pos).toDouble, to)
       case Type.DECIMAL =>
         if (to == LongType) Long.box(getDecimal(b, pos).setScale(0, RoundingMode.DOWN).longValueExact)
@@ -141,36 +122,38 @@ object BsonUnwrap {
     case LongType if math.floor(d) <= Long.MaxValue && math.ceil(d) >= Long.MinValue => Long.box(d.toLong)
     case LongType => throw new ArithmeticException(s"$d is out of range for BIGINT")
     case DoubleType => Double.box(d)
+    case BooleanType => Boolean.box(d == 1)
     case TimestampType if !d.isNaN && !d.isInfinite => Long.box((d * 1000000L).toLong)
     case _ => null
   }
 
   private def wrapper(b: Array[Byte], meta: Array[Byte], pos: Int, to: DataType, zone: ZoneId): AnyRef = {
     val (key, at) = wrapperField(b, meta, pos)
-    if (key == null) return null
-    val inner = getType(b, at)
+    lazy val inner = getType(b, at)
     key match {
-      case "$oid" => if (to == StringType && inner == Type.STRING) text(b, at) else null
       case "$date" if to == TimestampType =>
-        // ISO text in the session zone, or epoch millis through the double
-        // arithmetic of Spark's `(millis / 1000.0)` timestamp cast
-        if (inner == Type.STRING) DateTimeUtils.stringToTimestamp(text(b, at), zone).map(Long.box)
-          .getOrElse(throw new IllegalArgumentException(s"invalid $$date '${text(b, at)}'"))
+        if (inner == Type.STRING) DateTimeUtils.stringToTimestamp(text(b, at), zone).map(Long.box).orNull
         else value(b, meta, at, LongType, zone) match {
-          case ms: java.lang.Long => Long.box((ms / 1000.0 * 1000000L).toLong)
+          case ms: java.lang.Long => Long.box(Math.multiplyExact(ms.longValue, 1000L))
           case _ => null
         }
       case "$binary" if to == BinaryType =>
         val at64 = if (inner == Type.OBJECT) field(b, meta, at, "base64") else at
         if (at64 < 0 || getType(b, at64) != Type.STRING) null
         else java.util.Base64.getMimeDecoder.decode(text(b, at64).toString)
-      case "$date" | "$binary" => null
-      // $numberLong, $numberInt, $numberDouble: canonical text, or a number
-      case _ if inner != Type.STRING => if (to == StringType) null else value(b, meta, at, to, zone)
-      case _ if to == StringType => text(b, at)
-      case _ if to == LongType && key != "$numberDouble" => Long.box(text(b, at).toLongExact)
-      case _ => fromDouble(java.lang.Double.parseDouble(text(b, at).toString.trim), to)
+      case "$numberLong" | "$numberInt" | "$numberDouble" =>
+        // canonical text, or a number
+        if (inner != Type.STRING) value(b, meta, at, to, zone)
+        else if (to == LongType && key != "$numberDouble") Long.box(text(b, at).toLongExact)
+        else fromDouble(java.lang.Double.parseDouble(text(b, at).toString.trim), to)
+      case _ => null
     }
+  }
+
+  /** The text of an `$oid` or `$number*` wrapper at the top of `b`, or NULL. */
+  private def wrapperText(b: Array[Byte], meta: Array[Byte]): UTF8String = {
+    val (key, at) = wrapperField(b, meta, 0)
+    if (key == null || key == "$date" || key == "$binary" || getType(b, at) != Type.STRING) null else text(b, at)
   }
 
   private val wrapperKeys = Set("$oid", "$numberLong", "$numberInt", "$numberDouble", "$date", "$binary")

@@ -201,7 +201,7 @@ object GraftFunctions {
       classOf[TokenTf])(e => TokenTf(e(0))),
     fn("intersect_count", "(a, b) - intersection size of two sorted ARRAY<BIGINT> sets (codegen)",
       classOf[IntersectCount])(e => IntersectCount(e(0), e(1))),
-    fn("bson_unwrap", "(v, type[, on_string]) - an extended-JSON VARIANT leaf read as type; a string is on_string",
+    fn("bson_unwrap", "(v, type[, name]) - an extended-JSON VARIANT leaf read as type; NULL for a string",
       classOf[BsonUnwrap])(BsonUnwrap.build))
 
   /** Install every function the session's registry lacks. A name that

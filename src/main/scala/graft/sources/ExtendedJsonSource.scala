@@ -52,18 +52,42 @@ object ExtendedJsonSource {
     StructType(sourceFields(schema).map { case (n, t) => StructField(n, parseType(t)) })
 
   /** Documents parsed as [[parseSchema]]`(schema)`, each column typed as
-    * `schema` types it (its Spark type), under its source name — the
-    * input `Normalizer` expects. */
+    * `schema` types it (its Spark type), under its source name. In
+    * `Compat` mode a column is also null where the document's own value
+    * is falsy: the reference's `if field` (schema.py:115-116) tests the
+    * value as written, where `0`, `0.0` and `false` are falsy but text is
+    * falsy only when empty, so text `"0"` keeps the 0 it casts to. */
   def unwrap(parsed: DataFrame, schema: InferredSchema, mode: Normalizer.Mode): DataFrame = {
     graft.functions.GraftFunctions.register(parsed.sparkSession)
     parsed.select(sourceFields(schema).map { case (n, t) =>
-      unwrapVariant(n, col(s"`${n.replace("`", "``")}`"), t, mode).alias(n)
+      val v = col(s"`${n.replace("`", "``")}`")
+      (t match {
+        case AType.AString | AType.AList(_) | AType.AStruct(_) => unwrapVariant(n, v, t, mode)
+        case _ if mode == Normalizer.Compat =>
+          val (typed, fromText) = scalar(n, v, t, mode)
+          val truthy = readType(t) match {
+            case BooleanType => typed
+            case LongType | DoubleType => typed =!= 0
+            case _ => lit(true) // a $date or $binary (and an epoch number, even 0)
+          }
+          when(typed.isNull, fromText).when(truthy, typed).cast(t.sparkType)
+        case _ => unwrapVariant(n, v, t, mode)
+      }).alias(n)
     }: _*)
   }
 
   /** Read a JSONL dump against `schema` (see [[unwrap]]). */
   def read(spark: SparkSession, path: String, schema: InferredSchema, mode: Normalizer.Mode): DataFrame =
     unwrap(spark.read.schema(parseSchema(schema)).json(path), schema, mode)
+
+  /** [[unwrap]]'s output normalized to `schema`: renamed, the absent and
+    * empty values null. Falsy values are [[unwrap]]'s to drop, since
+    * only it sees the document's own value; `Normalizer`'s `Compat` test
+    * of the typed value would also drop the 0 that text `"0"` casts to,
+    * so this is `Normalizer`'s `Strict` step (its cast of typed input is
+    * the same in both modes). */
+  def normalize(unwrapped: DataFrame, schema: InferredSchema): DataFrame =
+    Normalizer(schema, unwrapped, Normalizer.Strict)
 
   /** A column parsed as [[parseType]]`(t)`, typed as `t`'s Spark type.
     * Text takes the StringType cast (`Normalizer.castTo`: the Python
@@ -81,21 +105,29 @@ object ExtendedJsonSource {
         }: _*))
       case AString =>
         // only a BSON wrapper's text is parsed a second time, to unwrap it
-        coalesce(bsonUnwrap(try_parse_json(when(v.startsWith("{"), v)), StringType), v)
+        coalesce(bsonUnwrap(name, try_parse_json(when(v.startsWith("{"), v)), StringType), v)
       case _ =>
-        val to = t match {
-          case ABool => BooleanType
-          case ABinary => BinaryType
-          case ADate32 | ADate64 | ATimestampS => TimestampType
-          case _ if isFloat(t) => DoubleType
-          case _ => LongType
-        }
-        val text = bsonUnwrap(v, StringType)
-        bsonUnwrap(v, to, when(text =!= "", Normalizer.castTo(name, text, StringType, t, mode).cast(to)))
-          .cast(t.sparkType)
+        val (typed, fromText) = scalar(name, v, t, mode)
+        coalesce(typed, fromText).cast(t.sparkType)
     }
   }
 
-  private def bsonUnwrap(v: Column, to: DataType, onString: Column*): Column =
-    call_function("bson_unwrap", v +: lit(to.simpleString) +: onString: _*)
+  /** What `bson_unwrap` reads a non-string scalar leaf of type `t` as. */
+  private def readType(t: AType): DataType = t match {
+    case AType.ABool => BooleanType
+    case AType.ABinary => BinaryType
+    case AType.ADate32 | AType.ADate64 | AType.ATimestampS => TimestampType
+    case _ if AType.isFloat(t) => DoubleType
+    case _ => LongType
+  }
+
+  /** A non-string scalar leaf read typed (NULL for text and a JSON
+    * null), and its text cast with the Python grammar (NULL for `''`). */
+  private def scalar(name: String, v: Column, t: AType, mode: Normalizer.Mode): (Column, Column) = {
+    val (to, text) = (readType(t), bsonUnwrap(name, v, StringType))
+    (bsonUnwrap(name, v, to), when(text =!= "", Normalizer.castTo(name, text, StringType, t, mode).cast(to)))
+  }
+
+  private def bsonUnwrap(name: String, v: Column, to: DataType): Column =
+    call_function("bson_unwrap", v, lit(to.simpleString), lit(name))
 }

@@ -22,10 +22,10 @@ import graft.schema.{InferredSchema, SchemaInference}
   *    message instead of an opaque ClassNotFound at action time.
   *
   * Both expose collections two ways: raw JSON documents (for schema
-  * inference, which is defined over documents) and a parsed DataFrame
-  * (for the normalize/load path). A dump is parsed once, against the
-  * schema the load normalizes to ([[ExtendedJsonSource]]); the
-  * connector returns typed BSON columns, which `Normalizer` casts.
+  * inference, which is defined over documents) and the normalized load.
+  * A dump is parsed once, against the schema the load normalizes to
+  * ([[ExtendedJsonSource]]); the connector returns typed BSON columns,
+  * which `Normalizer` casts.
   */
 trait Source {
   /** Databases available at this source (A2: reference defaults to the
@@ -35,10 +35,9 @@ trait Source {
   def listCollections(db: String): Seq[String]
   /** A collection as raw extended-JSON document strings. */
   def rawDocuments(db: String, collection: String): Dataset[String]
-  /** A collection as a parsed DataFrame (BSON wrappers unwrapped), read
-    * for `schema` (post-config) in `mode`: the input of
-    * `Normalizer(schema, _, mode)`. */
-  def read(db: String, collection: String, schema: InferredSchema, mode: Normalizer.Mode): DataFrame
+  /** A collection normalized to `schema` (post-config) in `mode`: the
+    * rows `Normalizer(schema, _, mode)` makes of its documents. */
+  def load(db: String, collection: String, schema: InferredSchema, mode: Normalizer.Mode): DataFrame
 }
 
 /** Extended-JSON dump directories: `<root>/<db>/<collection>.jsonl`. */
@@ -65,12 +64,14 @@ final class DumpSource(spark: SparkSession, root: String) extends Source {
   override def rawDocuments(db: String, collection: String): Dataset[String] =
     spark.read.textFile(pathOf(db, collection))
 
-  override def read(db: String, collection: String, schema: InferredSchema, mode: Normalizer.Mode): DataFrame =
-    ExtendedJsonSource.read(spark, pathOf(db, collection), schema, mode)
+  override def load(db: String, collection: String, schema: InferredSchema, mode: Normalizer.Mode): DataFrame =
+    ExtendedJsonSource.normalize(ExtendedJsonSource.read(spark, pathOf(db, collection), schema, mode), schema)
 
-  /** Read against the schema inferred from a sample (the default size). */
+  /** The dump read against the schema inferred from a sample (the
+    * default size), BSON wrappers unwrapped: `Normalizer`'s input. */
   def read(db: String, collection: String): DataFrame =
-    read(db, collection, SchemaInference.infer(rawDocuments(db, collection), collection), Normalizer.Strict)
+    ExtendedJsonSource.read(spark, pathOf(db, collection),
+      SchemaInference.infer(rawDocuments(db, collection), collection), Normalizer.Strict)
 }
 
 /** Live MongoDB over the Spark connector. Requires
@@ -185,9 +186,8 @@ final class MongoSource(spark: SparkSession, uri: String, checkConnection: Boole
     read(db, collection).toJSON.as[String]
   }
 
-  /** The connector's typed columns; `schema` is `Normalizer`'s to apply. */
-  override def read(db: String, collection: String, schema: InferredSchema, mode: Normalizer.Mode): DataFrame =
-    read(db, collection)
+  override def load(db: String, collection: String, schema: InferredSchema, mode: Normalizer.Mode): DataFrame =
+    Normalizer(schema, read(db, collection), mode)
 
   def read(db: String, collection: String): DataFrame = {
     requireConnector()

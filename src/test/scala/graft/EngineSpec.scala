@@ -98,6 +98,33 @@ class EngineSpec extends SparkSuite {
     assert(texts(streamOut) == json)
   }
 
+  test("Compat mode tests the document's own value: text \"0\" keeps its 0, batch and stream alike") {
+    // the reference's `if field` (schema.py:115-116) sees text "0" as
+    // truthy and casts it to 0; a number 0, a false and '' are falsy
+    val dir = Files.createTempDirectory("compat")
+    val in = Files.createDirectory(dir.resolve("in")).resolve("docs.jsonl")
+    Files.write(in, java.util.Arrays.asList(
+      """{"_id": 1, "n": 5, "b": true, "x": 1.5}""",
+      """{"_id": 2, "n": "0", "b": "x", "x": "0"}""",
+      """{"_id": 3, "n": 0, "b": false, "x": 0.0}""",
+      """{"_id": 4, "n": {"$numberLong": "0"}, "b": "", "x": ""}"""))
+    val schemaFile = dir.resolve("docs.yaml")
+    Files.write(schemaFile, java.util.Arrays.asList(
+      "!schema", "name: docs", "fields:", "  _id: int64", "  n: int32", "  b: bool", "  x: double"))
+    val batch = Engine.run(spark, Engine.JobConfig(input = in.toString, collection = "docs",
+      outDir = dir.resolve("batch").toString, schemaFile = Some(schemaFile.toString), mode = Normalizer.Compat))
+    val streamOut = dir.resolve("stream").toString
+    val q = Engine.runStreaming(spark, in.getParent.toString, batch.schema, streamOut,
+      dir.resolve("ckpt").toString, mode = Normalizer.Compat)
+    try q.processAllAvailable() finally q.stop()
+    def rows(path: String) = spark.read.parquet(path).orderBy("_id").select("_id", "n", "b", "x").collect()
+      .map(_.toSeq).toSeq
+    val expected = Seq(Seq(1L, 5, true, 1.5), Seq(2L, 0, false, 0.0), Seq(3L, null, null, null),
+      Seq(4L, null, null, null))
+    assert(rows(batch.outPath) == expected)
+    assert(rows(streamOut) == expected)
+  }
+
   test("Engine.run reads its input once") {
     import java.util.concurrent.{CountDownLatch, TimeUnit}
     import java.util.concurrent.atomic.AtomicLong

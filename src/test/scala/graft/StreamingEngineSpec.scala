@@ -50,43 +50,49 @@ class StreamingEngineSpec extends SparkSuite {
     df
   }
 
-  test("bson_unwrap reads numbers, wrappers and UTF-8 text; on_string only for strings") {
-    // one row per token; 'bigint' and 'double' reads, and the raw text
-    val tokens = Seq("42", "1.5", "-2.75", "\"\"", "\"δέλτα\"", "true", "null", "[1]", """{"a": 1}""",
-      """{"$numberLong": "8589934592"}""", """{"$numberInt": "7"}""", """{"$numberDouble": "2.5"}""",
-      """{"$oid": "65a1b2c3d4e5f60718293a4b"}""")
+  test("bson_unwrap reads numbers, wrappers and UTF-8 text; a value it cannot read raises") {
     import spark.implicits._
-    val rows = tokens.toDF("n").selectExpr(
-      "bson_unwrap(parse_json(n), 'bigint') AS i", "bson_unwrap(parse_json(n), 'double') AS d",
-      "bson_unwrap(parse_json(n), 'string') AS s", "bson_unwrap(parse_json(n), 'boolean') AS b")
-      .collect().map(r => (Option(r.get(0)), Option(r.get(1)), Option(r.get(2)), Option(r.get(3))))
-    // a string, a bool, a JSON null, an array or a plain sub-document
-    // reads as NULL into 'bigint'
-    assert(rows.map(_._1).toSeq == Seq(Some(42L), Some(1L), Some(-2L), None, None, None, None, None, None,
-      Some(8589934592L), Some(7L), Some(2L), None))
-    assert(rows.map(_._2).toSeq.take(3) == Seq(Some(42.0), Some(1.5), Some(-2.75)) && rows(11)._2 == Some(2.5))
-    assert(rows.map(_._3).toSeq == Seq(None, None, None, Some(""), Some("δέλτα"), None, None, None, None,
-      Some("8589934592"), Some("7"), Some("2.5"), Some("65a1b2c3d4e5f60718293a4b")))
-    assert(rows(5)._4 == Some(true) && rows.indices.filter(_ != 5).forall(i => rows(i)._4.isEmpty))
+    def read(to: String, tokens: String*): Seq[Option[Any]] = tokens.toDF("n")
+      .selectExpr(s"bson_unwrap(parse_json(n), '$to', 'n')").collect().map(r => Option(r.get(0))).toSeq
+    // numbers, bools and the $number* wrappers; a string or a JSON null is NULL
+    val numbers = Seq("42", "1.5", "-2.75", "true", """{"$numberLong": "8589934592"}""", """{"$numberInt": "7"}""",
+      """{"$numberDouble": "2.5"}""", "\"\"", "\"12\"", "null")
+    assert(read("bigint", numbers: _*) ==
+      Seq(Some(42L), Some(1L), Some(-2L), Some(1L), Some(8589934592L), Some(7L), Some(2L), None, None, None))
+    assert(read("double", numbers: _*) ==
+      Seq(Some(42.0), Some(1.5), Some(-2.75), Some(1.0), Some(8589934592.0), Some(7.0), Some(2.5), None, None, None))
+    assert(read("boolean", "true", "false", "1", "2", "null", "\"yes\"") ==
+      Seq(Some(true), Some(false), Some(true), Some(false), None, None))
+    // as 'string': a string's own text and a wrapper's text; NULL for the
+    // rest, whose JSON the reader keeps
+    assert(read("string", "\"\"", "\"δέλτα\"", """{"$oid": "65a1b2c3d4e5f60718293a4b"}""",
+      """{"$numberLong": "8589934592"}""", "42", "true", "null", "[1]", """{"a": 1}""", """{"$date": 0}""") ==
+      Seq(Some(""), Some("δέλτα"), Some("65a1b2c3d4e5f60718293a4b"), Some("8589934592"), None, None, None, None,
+        None, None))
     // $date (millis, {$numberLong}, ISO) and $binary ({base64}, legacy text)
-    val dates = Seq("""{"$date": 1709287200123}""", """{"$date": {"$numberLong": "1709287200123"}}""",
-      """{"$date": "2024-03-01T10:00:00.123Z"}""").toDF("n")
-      .selectExpr("bson_unwrap(parse_json(n), 'timestamp')").collect()
-    assert(dates.map(_.getTimestamp(0).toInstant.toString).toSeq == Seq.fill(3)("2024-03-01T10:00:00.123Z"))
+    val dates = read("timestamp", """{"$date": 1709287200123}""", """{"$date": {"$numberLong": "1709287200123"}}""",
+      """{"$date": "2024-03-01T10:00:00.123Z"}""")
+    assert(dates.map(_.get.asInstanceOf[java.sql.Timestamp].toInstant.toString) ==
+      Seq.fill(3)("2024-03-01T10:00:00.123Z"))
+    // millis to micros is exact: the double (ms / 1000.0) read lands 1 µs early here
+    assert(read("timestamp", """{"$date": 2182727972319}""").head.get.asInstanceOf[java.sql.Timestamp]
+      .toInstant.toString == "2039-03-03T01:19:32.319Z")
     // a number read as a timestamp is epoch seconds, in any number shape
-    val epochs = Seq("1709287200", "1709287200.5", "1.7092872005E9").toDF("n")
-      .selectExpr("bson_unwrap(parse_json(n), 'timestamp')").collect().map(_.getTimestamp(0).toInstant.toString)
-    assert(epochs.toSeq == Seq("2024-03-01T10:00:00Z", "2024-03-01T10:00:00.500Z", "2024-03-01T10:00:00.500Z"))
-    val blobs = Seq("""{"$binary": {"base64": "aGVsbG8=", "subType": "00"}}""",
-      """{"$binary": "aGVsbG8=", "$type": "00"}""").toDF("n")
-      .selectExpr("bson_unwrap(parse_json(n), 'binary')").collect().map(r => new String(r.getAs[Array[Byte]](0)))
-    assert(blobs.toSeq == Seq("hello", "hello"))
-    // on_string is evaluated for a string value only, so an error there
-    // does not fire for the numbers of the same column
-    val q = "bson_unwrap(parse_json(n), 'bigint', CAST(raise_error('on_string') AS BIGINT))"
-    assert(Seq("1", "2.5", """{"$numberLong": "3"}""").toDF("n").selectExpr(q).as[Long].collect().toSeq ==
-      Seq(1L, 2L, 3L))
-    intercept[org.apache.spark.SparkThrowable](Seq("1", "\"x\"").toDF("n").selectExpr(q).collect())
+    val epochs = read("timestamp", "1709287200", "1709287200.5", "1.7092872005E9")
+      .map(_.get.asInstanceOf[java.sql.Timestamp].toInstant.toString)
+    assert(epochs == Seq("2024-03-01T10:00:00Z", "2024-03-01T10:00:00.500Z", "2024-03-01T10:00:00.500Z"))
+    val blobs = read("binary", """{"$binary": {"base64": "aGVsbG8=", "subType": "00"}}""",
+      """{"$binary": "aGVsbG8=", "$type": "00"}""").map(b => new String(b.get.asInstanceOf[Array[Byte]]))
+    assert(blobs == Seq("hello", "hello"))
+    // a value that does not read as the type raises, naming the column:
+    // a wrapper of another type, an array, a plain sub-document, bad text
+    for ((to, token) <- Seq("bigint" -> """{"$oid": "65a1b2c3d4e5f60718293a4b"}""", "double" -> """{"$date": 0}""",
+        "boolean" -> "[1]", "bigint" -> """{"a": 1}""", "timestamp" -> """{"$binary": "aGVsbG8="}""",
+        "binary" -> "1", "bigint" -> """{"$numberLong": "x"}""", "timestamp" -> """{"$date": "noon"}""")) {
+      val e = intercept[Exception](read(to, token))
+      assert(e.isInstanceOf[org.apache.spark.SparkThrowable] && e.getMessage.contains(s"as $to for column n"),
+        s"$to $token: $e")
+    }
   }
 
   test("unwrapVariant numeric parity: float tokens truncate, wrappers parse, empty nulls") {
