@@ -17,9 +17,10 @@ import graft.sources.ExtendedJsonSource
   * Execution shape at scale: schema inference is a bounded
   * sample + treeAggregate (only the schema returns to the driver); the
   * load itself is a single shuffle-free map stage over one scan of the
-  * input — the parse against that schema ([[ExtendedJsonSource]], the
-  * reader the stream uses too), normalize projection and `partitionBy`
-  * write all pipeline inside one codegen stage per task, so the job
+  * input — the one-pass parse of each line into that schema's columns
+  * ([[ExtendedJsonSource]], the reader the stream uses too), normalize
+  * projection and `partitionBy` write all pipeline inside one codegen
+  * stage per task, so the job
   * scales linearly with input splits on any cluster size. The reference's per-partition writer fan-out
   * (extract_load.py:46-56) is subsumed by Spark's file committer.
   */
@@ -125,9 +126,9 @@ object Engine {
     *
     * The schema must be known up front (streams can't be sampled
     * retroactively): pass one inferred/loaded via the batch path from a
-    * seed of documents. The stream reads as the batch load does: the
-    * same parse schema ([[ExtendedJsonSource.parseSchema]]), the same
-    * [[ExtendedJsonSource.unwrap]] and the same
+    * seed of documents. The stream reads as the batch load does: its
+    * files' lines through the same reader
+    * ([[ExtendedJsonSource.documents]]) and the same
     * [[ExtendedJsonSource.normalize]].
     */
   def runStreaming(
@@ -138,8 +139,8 @@ object Engine {
       checkpoint: String,
       mode: Normalizer.Mode = Normalizer.Strict,
       partitionKey: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val parsed = spark.readStream.schema(ExtendedJsonSource.parseSchema(schema)).json(inputDir)
-    val normalized = ExtendedJsonSource.normalize(ExtendedJsonSource.unwrap(parsed, schema, mode), schema)
+    val documents = ExtendedJsonSource.documents(spark.readStream.text(inputDir), schema, mode)
+    val normalized = ExtendedJsonSource.normalize(documents, schema)
     val writer = normalized.writeStream
       .format("parquet")
       .option("path", outPath)

@@ -201,8 +201,8 @@ object GraftFunctions {
       classOf[TokenTf])(e => TokenTf(e(0))),
     fn("intersect_count", "(a, b) - intersection size of two sorted ARRAY<BIGINT> sets (codegen)",
       classOf[IntersectCount])(e => IntersectCount(e(0), e(1))),
-    fn("bson_unwrap", "(v, type[, name]) - an extended-JSON VARIANT leaf read as type; NULL for a string",
-      classOf[BsonUnwrap])(BsonUnwrap.build))
+    fn("parse_ejson", "(line, schema, mode) - the documents of an extended-JSON line as rows of a !schema (codegen)",
+      classOf[ParseExtendedJson])(ParseExtendedJson.build))
 
   /** Install every function the session's registry lacks. A name that
     * is already there (from the extension, or an earlier call) is left

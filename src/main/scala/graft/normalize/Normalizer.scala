@@ -82,9 +82,10 @@ object Normalizer {
   /** Lenient cast mirroring the reference cast table
     * (schema.py:123-158). Spark's `cast` already covers most pairs; the
     * special cases are spelled out. With `srcType` StringType this is
-    * the Python-grammar text cast, which the EL reader
-    * (`ExtendedJsonSource`) applies to its string values. */
-  private[graft] def castTo(srcName: String, c: Column, srcType: DataType, target: AType, mode: Mode): Column = {
+    * the Python-grammar text cast; the EL reader
+    * ([[graft.functions.ParseExtendedJson]]) casts text in a non-string
+    * field the same way. */
+  private def castTo(srcName: String, c: Column, srcType: DataType, target: AType, mode: Mode): Column = {
     (target, mode) match {
       case (ABool, Compat) =>
         // cast_boolean bug: any non-bool input -> false (schema.py:128-135)

@@ -23,9 +23,9 @@ import graft.schema.{InferredSchema, SchemaInference}
   *
   * Both expose collections two ways: raw JSON documents (for schema
   * inference, which is defined over documents) and the normalized load.
-  * A dump is parsed once, against the schema the load normalizes to
-  * ([[ExtendedJsonSource]]); the connector returns typed BSON columns,
-  * which `Normalizer` casts.
+  * A dump's lines are parsed once, straight into the schema the load
+  * normalizes to ([[ExtendedJsonSource]]); the connector returns typed
+  * BSON columns, which `Normalizer` casts.
   */
 trait Source {
   /** Databases available at this source (A2: reference defaults to the
@@ -68,7 +68,8 @@ final class DumpSource(spark: SparkSession, root: String) extends Source {
     ExtendedJsonSource.normalize(ExtendedJsonSource.read(spark, pathOf(db, collection), schema, mode), schema)
 
   /** The dump read against the schema inferred from a sample (the
-    * default size), BSON wrappers unwrapped: `Normalizer`'s input. */
+    * default size): each document parsed into typed columns under its
+    * source names, BSON wrappers unwrapped — `Normalizer`'s input. */
   def read(db: String, collection: String): DataFrame =
     ExtendedJsonSource.read(spark, pathOf(db, collection),
       SchemaInference.infer(rawDocuments(db, collection), collection), Normalizer.Strict)

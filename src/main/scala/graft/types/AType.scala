@@ -50,8 +50,14 @@ object AType {
     def alias = s"list<item: ${elem.alias}>"
     def sparkType: DataType = ArrayType(elem.sparkType)
   }
+  /** pyarrow's `struct<name: type, ...>`; a name holding one of `<>,:`
+    * or a backquote is backquoted (pyarrow prints it bare, and no parser
+    * could read it back). */
   final case class AStruct(fields: Vector[(String, AType)]) extends AType {
-    def alias = fields.map { case (n, t) => s"$n: ${t.alias}" }.mkString("struct<", ", ", ">")
+    def alias = fields.map { case (n, t) =>
+      val name = if (n.exists("<>,:`".contains(_))) "`" + n.replace("`", "``") + "`" else n
+      s"$name: ${t.alias}"
+    }.mkString("struct<", ", ", ">")
     def sparkType: DataType = StructType(fields.map { case (n, t) => StructField(n, t.sparkType) })
   }
 
@@ -141,8 +147,45 @@ object AType {
     flat.get(a).orElse {
       if (a.startsWith("list<item:") && a.endsWith(">"))
         forAlias(a.stripPrefix("list<item:").stripSuffix(">").trim).map(AList)
+      else if (a.startsWith("struct<") && a.endsWith(">")) structFields(a.substring(7, a.length - 1)).map(AStruct)
       else None
     }
+  }
+
+  /** The fields of a struct alias's `name: type, ...` body, as
+    * [[AStruct.alias]] writes them. */
+  private def structFields(body: String): Option[Vector[(String, AType)]] = {
+    // index just past the backquoted name starting at i
+    def quoted(i: Int): Int = {
+      var j = i + 1
+      while (j < body.length && (body(j) != '`' || body.startsWith("``", j))) j += (if (body(j) == '`') 2 else 1)
+      j + 1
+    }
+    val fields = Vector.newBuilder[(String, AType)]
+    var i = 0
+    while (i < body.length) {
+      val nameEnd = if (body(i) == '`') quoted(i) else body.indexOf(':', i)
+      if (nameEnd < 0 || !body.startsWith(": ", nameEnd)) return None
+      val name =
+        if (body(i) == '`') body.substring(i + 1, nameEnd - 1).replace("``", "`") else body.substring(i, nameEnd)
+      // the type runs to the next comma outside brackets and backquotes
+      var j = nameEnd + 2
+      var depth = 0
+      while (j < body.length && (depth > 0 || body(j) != ',')) {
+        body(j) match {
+          case '<' => depth += 1; j += 1
+          case '>' => depth -= 1; j += 1
+          case '`' => j = quoted(j)
+          case _ => j += 1
+        }
+      }
+      forAlias(body.substring(nameEnd + 2, j)) match {
+        case Some(t) => fields += name -> t
+        case None => return None
+      }
+      i = if (j < body.length) j + 2 else j
+    }
+    Some(fields.result())
   }
 
   /** Spark DataType -> lattice type (used when a schema originates from a

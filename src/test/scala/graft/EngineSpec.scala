@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.types._
 
 import graft.normalize.Normalizer
+import graft.schema.SchemaYaml
 
 /** End-to-end EL slice (SURVEY.md §7.2): extended-JSON source ->
   * infer -> config rewrite -> normalize -> hive-partitioned parquet ->
@@ -125,6 +126,50 @@ class EngineSpec extends SparkSuite {
     assert(rows(streamOut) == expected)
   }
 
+  /** `lines` as a dump loaded against a declared {a: int64, s: string,
+    * x: double} schema, by `Engine.run` and by `Engine.runStreaming`:
+    * each path's rows, or its failure. */
+  private def loadLines(lines: Seq[String]): Seq[Either[Throwable, Seq[String]]] = {
+    val dir = Files.createTempDirectory("lines")
+    val in = Files.createDirectory(dir.resolve("in")).resolve("docs.jsonl")
+    Files.writeString(in, lines.mkString("", "\n", "\n"))
+    val schemaFile = dir.resolve("docs.yaml")
+    Files.write(schemaFile, java.util.Arrays.asList("!schema", "name: docs", "fields:", "  a: int64", "  s: string",
+      "  x: double"))
+    def rows(path: String) = spark.read.parquet(path).select("a", "s", "x").collect().map(_.mkString(",")).toSeq
+      .sorted
+    val batch = scala.util.Try(rows(Engine.run(spark, Engine.JobConfig(input = in.toString, collection = "docs",
+      outDir = dir.resolve("batch").toString, schemaFile = Some(schemaFile.toString))).outPath)).toEither
+    val streamOut = dir.resolve("stream").toString
+    val q = Engine.runStreaming(spark, in.getParent.toString, SchemaYaml.loadFile(schemaFile), streamOut,
+      dir.resolve("ckpt").toString)
+    val stream = scala.util.Try(try q.processAllAvailable() finally q.stop()).toEither.map(_ => rows(streamOut))
+    Seq(batch, stream)
+  }
+
+  test("line level: blank lines, top-level arrays, duplicate keys, trailing text, non-JSON lines, NaN") {
+    val loaded = loadLines(Seq(
+      """{"a": 1, "s": "one", "x": 1.5}""",
+      "",
+      "   \t ",
+      """[{"a": 2, "s": "two"}, {"a": 7, "x": 3.5}]""",
+      "[]",
+      """{"a":2,"a":3}""",
+      """{"a": 4, "s": "tail"} trailing text""",
+      "not json",
+      "[1,2]",
+      "5",
+      """{"a": 5, "x": NaN}"""))
+    val expected = Seq("1,one,1.5", "2,two,null", "7,null,3.5", "3,null,null", "4,tail,null", "null,null,null",
+      "null,null,null", "null,null,null", "5,null,NaN").sorted
+    for (r <- loaded) assert(r == Right(expected))
+    // NaN does not read as a bigint: both paths raise, naming the column
+    for (r <- loadLines(Seq("""{"a": NaN, "s": "nan"}"""))) {
+      val e = r.swap.getOrElse(fail(s"NaN loaded into a bigint column: $r"))
+      assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(_.getMessage.contains("for column a")), e)
+    }
+  }
+
   test("Engine.run reads its input once") {
     import java.util.concurrent.{CountDownLatch, TimeUnit}
     import java.util.concurrent.atomic.AtomicLong
@@ -158,6 +203,35 @@ class EngineSpec extends SparkSuite {
     val size = Files.size(in)
     assert(bytesRead.get < 1.5 * size, s"read ${bytesRead.get} bytes of a $size-byte input")
     assert(bytesRead.get >= size, s"read ${bytesRead.get} bytes of a $size-byte input")
+  }
+
+  test("the EL read of a 40-field dump generates no method the JIT refuses (8,000 bytes of bytecode)") {
+    // HotSpot never compiles a method above HugeMethodLimit (8,000 bytes):
+    // a read whose whole-stage method grows past it runs interpreted
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val root = Files.createTempDirectory("wide")
+    val dump = Files.createDirectory(root.resolve("db")).resolve("wide.jsonl")
+    def value(f: Int, i: Int): String = f % 8 match {
+      case 0 => s"${i * 7 + f}"
+      case 1 => s"""{"$$numberLong": "${8589934592L + i}"}"""
+      case 2 => s"${i + f / 8 + 0.25}"
+      case 3 => s""""text $i of $f""""
+      case 4 => s"${i % 2 == 0}"
+      case 5 => s"""{"$$date": "2024-03-${1 + i % 28}T00:00:00Z"}"""
+      case 6 => s"""{"$$date": ${1709287200123L + i * 1000L}}"""
+      case _ => s""""${i + f}""""
+    }
+    Files.write(dump, (0 until 200).map(i =>
+      (0 until 40).map(f => f"\"f$f%02d\": ${value(f, i)}").mkString("{", ", ", "}")).mkString("\n").getBytes("UTF-8"))
+    val src = new graft.sources.DumpSource(spark, root.toString)
+    val schema = graft.schema.SchemaInference.infer(src.rawDocuments("db", "wide"), "wide")
+    assert(schema.fields.size == 40)
+    for ((what, df) <- Seq("DumpSource.read" -> src.read("db", "wide"),
+        "DumpSource.load" -> src.load("db", "wide", schema, Normalizer.Strict))) {
+      assert(df.count() == 200)
+      val sizes = codegenStringSeq(df.queryExecution.executedPlan).map(_._3.maxMethodCodeSize)
+      assert(sizes.nonEmpty && sizes.max <= 8000, s"$what generates a ${sizes.max}-byte method")
+    }
   }
 
   test("schema file loads when valid; parse failure falls back to inference (main.py:59-70)") {

@@ -211,10 +211,9 @@ class FunctionsSpec extends SparkSuite {
   test("schema-union Aggregator preserves nested types (no lossy alias round-trip)") {
     import spark.implicits._
     val now = 1767225600.0
-    // nested structs/lists: AType.forAlias can't parse struct<...>, so a
-    // buffer that round-tripped through alias strings would degrade
-    // these to string mid-aggregation; the typed buffer must agree with
-    // the treeAggregate inference path exactly
+    // nested structs/lists: a buffer that round-tripped through alias
+    // strings could degrade these mid-aggregation; the typed buffer must
+    // agree with the treeAggregate inference path exactly
     // same keys in the same order everywhere, so the merged field order
     // is independent of partition-combine order on both paths
     val docs = Seq(

@@ -56,6 +56,15 @@ class SchemaYamlSpec extends AnyFunSuite {
     assert(back.fields == schema.fields)
   }
 
+  test("dump -> load round-trips nested structs, names with alias punctuation included") {
+    val inner = AStruct(Vector("k" -> AInt64, "a, b: <c>" -> AString, "tick`" -> AList(ABool), "" -> ADate32))
+    val schema = InferredSchema("nested", Vector("s" -> inner, "l" -> AList(inner), "e" -> AStruct(Vector.empty),
+      "plain" -> AStruct(Vector("x y" -> AFloat64))))
+    assert(SchemaYaml.load(SchemaYaml.dump(schema)).fields == schema.fields)
+    // plain names print as pyarrow prints them
+    assert(schema.fieldMap("plain").alias == "struct<x y: double>")
+  }
+
   test("YAML-1.1 reserved plain scalars are quoted so names round-trip (PyYAML parity)") {
     // bare `yes`/`true`/`null`/`on`/`123`/`1.5`/`2024-01-01` would
     // re-parse as bool/null/number/date and corrupt the field name;

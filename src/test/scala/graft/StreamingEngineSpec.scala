@@ -2,7 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.schema.SchemaInference
+import org.apache.spark.sql.functions.{call_function, col, inline, lit}
+import org.apache.spark.sql.types.VariantType
+
+import graft.normalize.Normalizer
+import graft.schema.{InferredSchema, SchemaInference, SchemaYaml}
+import graft.types.AType
+import graft.types.AType._
 
 /** End-to-end streaming EL: files arriving in a directory are
   * continuously normalized into parquet with exactly-once
@@ -37,91 +43,122 @@ class StreamingEngineSpec extends SparkSuite {
       org.apache.spark.sql.types.FloatType)
   }
 
-  /** `unwrapVariant` over JSON tokens, as the EL reader parses them: one
-    * `bson_unwrap` call per leaf, no UDF. */
-  private def unwrapTokens(tokens: Seq[String], t: graft.types.AType) = {
+  /** JSON tokens as one-field documents `{"n": token}`, read by
+    * `parse_ejson` as `t`: one row per token, no UDF. */
+  private def readTokens(t: AType, tokens: Seq[String]) = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, parse_json}
-    val df = tokens.toDF("n").select(graft.sources.ExtendedJsonSource.unwrapVariant(
-      "n", parse_json(col("n")), t, graft.normalize.Normalizer.Strict).as("v"))
-    val exprs = df.queryExecution.analyzed.expressions.flatMap(_.collect { case e => e })
-    assert(exprs.exists(_.isInstanceOf[graft.functions.BsonUnwrap]) &&
+    val yaml = SchemaYaml.dump(InferredSchema("t", Vector("n" -> t)))
+    val df = tokens.map(token => s"""{"n": $token}""").toDF("value")
+      .select(inline(call_function("parse_ejson", col("value"), lit(yaml), lit("strict"))))
+    val exprs = df.queryExecution.analyzed.flatMap(_.expressions).flatMap(_.collect { case e => e })
+    assert(exprs.exists(_.isInstanceOf[graft.functions.ParseExtendedJson]) &&
       !exprs.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF]))
     df
   }
 
-  test("bson_unwrap reads numbers, wrappers and UTF-8 text; a value it cannot read raises") {
-    import spark.implicits._
-    def read(to: String, tokens: String*): Seq[Option[Any]] = tokens.toDF("n")
-      .selectExpr(s"bson_unwrap(parse_json(n), '$to', 'n')").collect().map(r => Option(r.get(0))).toSeq
-    // numbers, bools and the $number* wrappers; a string or a JSON null is NULL
+  // text reads through the Python grammar in a typed field and as
+  // written in a string field
+  test("parse_ejson reads numbers, wrappers and UTF-8 text; a value it cannot read raises") {
+    def read(to: AType, tokens: String*): Seq[Option[Any]] =
+      readTokens(to, tokens).collect().map(r => Option(r.get(0))).toSeq
+    // numbers, bools, the $number* wrappers and numeric text; '' and a JSON null are NULL
     val numbers = Seq("42", "1.5", "-2.75", "true", """{"$numberLong": "8589934592"}""", """{"$numberInt": "7"}""",
       """{"$numberDouble": "2.5"}""", "\"\"", "\"12\"", "null")
-    assert(read("bigint", numbers: _*) ==
-      Seq(Some(42L), Some(1L), Some(-2L), Some(1L), Some(8589934592L), Some(7L), Some(2L), None, None, None))
-    assert(read("double", numbers: _*) ==
-      Seq(Some(42.0), Some(1.5), Some(-2.75), Some(1.0), Some(8589934592.0), Some(7.0), Some(2.5), None, None, None))
-    assert(read("boolean", "true", "false", "1", "2", "null", "\"yes\"") ==
-      Seq(Some(true), Some(false), Some(true), Some(false), None, None))
-    // as 'string': a string's own text and a wrapper's text; NULL for the
-    // rest, whose JSON the reader keeps
-    assert(read("string", "\"\"", "\"δέλτα\"", """{"$oid": "65a1b2c3d4e5f60718293a4b"}""",
+    assert(read(AInt64, numbers: _*) ==
+      Seq(Some(42L), Some(1L), Some(-2L), Some(1L), Some(8589934592L), Some(7L), Some(2L), None, Some(12L), None))
+    assert(read(AFloat64, numbers: _*) ==
+      Seq(Some(42.0), Some(1.5), Some(-2.75), Some(1.0), Some(8589934592.0), Some(7.0), Some(2.5), None, Some(12.0),
+        None))
+    assert(read(ABool, "true", "false", "1", "2", "null", "\"yes\"") ==
+      Seq(Some(true), Some(false), Some(true), Some(false), None, Some(true)))
+    // as a string: a string's own text, a wrapper's text, any other
+    // token's JSON as written
+    assert(read(AString, "\"\"", "\"δέλτα\"", """{"$oid": "65a1b2c3d4e5f60718293a4b"}""",
       """{"$numberLong": "8589934592"}""", "42", "true", "null", "[1]", """{"a": 1}""", """{"$date": 0}""") ==
-      Seq(Some(""), Some("δέλτα"), Some("65a1b2c3d4e5f60718293a4b"), Some("8589934592"), None, None, None, None,
-        None, None))
+      Seq(Some(""), Some("δέλτα"), Some("65a1b2c3d4e5f60718293a4b"), Some("8589934592"), Some("42"), Some("true"),
+        None, Some("[1]"), Some("""{"a": 1}"""), Some("""{"$date": 0}""")))
     // $date (millis, {$numberLong}, ISO) and $binary ({base64}, legacy text)
-    val dates = read("timestamp", """{"$date": 1709287200123}""", """{"$date": {"$numberLong": "1709287200123"}}""",
-      """{"$date": "2024-03-01T10:00:00.123Z"}""")
+    val dates = read(ATimestampS, """{"$date": 1709287200123}""",
+      """{"$date": {"$numberLong": "1709287200123"}}""", """{"$date": "2024-03-01T10:00:00.123Z"}""")
     assert(dates.map(_.get.asInstanceOf[java.sql.Timestamp].toInstant.toString) ==
       Seq.fill(3)("2024-03-01T10:00:00.123Z"))
     // millis to micros is exact: the double (ms / 1000.0) read lands 1 µs early here
-    assert(read("timestamp", """{"$date": 2182727972319}""").head.get.asInstanceOf[java.sql.Timestamp]
+    assert(read(ATimestampS, """{"$date": 2182727972319}""").head.get.asInstanceOf[java.sql.Timestamp]
       .toInstant.toString == "2039-03-03T01:19:32.319Z")
     // a number read as a timestamp is epoch seconds, in any number shape
-    val epochs = read("timestamp", "1709287200", "1709287200.5", "1.7092872005E9")
+    val epochs = read(ATimestampS, "1709287200", "1709287200.5", "1.7092872005E9")
       .map(_.get.asInstanceOf[java.sql.Timestamp].toInstant.toString)
     assert(epochs == Seq("2024-03-01T10:00:00Z", "2024-03-01T10:00:00.500Z", "2024-03-01T10:00:00.500Z"))
-    val blobs = read("binary", """{"$binary": {"base64": "aGVsbG8=", "subType": "00"}}""",
+    val blobs = read(ABinary, """{"$binary": {"base64": "aGVsbG8=", "subType": "00"}}""",
       """{"$binary": "aGVsbG8=", "$type": "00"}""").map(b => new String(b.get.asInstanceOf[Array[Byte]]))
     assert(blobs == Seq("hello", "hello"))
     // a value that does not read as the type raises, naming the column:
     // a wrapper of another type, an array, a plain sub-document, bad text
-    for ((to, token) <- Seq("bigint" -> """{"$oid": "65a1b2c3d4e5f60718293a4b"}""", "double" -> """{"$date": 0}""",
-        "boolean" -> "[1]", "bigint" -> """{"a": 1}""", "timestamp" -> """{"$binary": "aGVsbG8="}""",
-        "binary" -> "1", "bigint" -> """{"$numberLong": "x"}""", "timestamp" -> """{"$date": "noon"}""")) {
+    for ((to, token) <- Seq(AInt64 -> """{"$oid": "65a1b2c3d4e5f60718293a4b"}""", AFloat64 -> """{"$date": 0}""",
+        ABool -> "[1]", AInt64 -> """{"a": 1}""", ATimestampS -> """{"$binary": "aGVsbG8="}""",
+        ABinary -> "1", AInt64 -> """{"$numberLong": "x"}""", ATimestampS -> """{"$date": "noon"}""")) {
       val e = intercept[Exception](read(to, token))
-      assert(e.isInstanceOf[org.apache.spark.SparkThrowable] && e.getMessage.contains(s"as $to for column n"),
-        s"$to $token: $e")
+      val name = to.sparkType.simpleString
+      assert(e.isInstanceOf[org.apache.spark.SparkThrowable] && e.getMessage.contains(s"as $name for column n"),
+        s"$name $token: $e")
     }
   }
 
-  test("unwrapVariant numeric parity: float tokens truncate, wrappers parse, empty nulls") {
-    import graft.types.AType
-    val out = unwrapTokens(Seq("42", "1.5", "-2.75", "\"\"", """{"$numberLong": "8589934592"}"""),
-      AType.AInt64).collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+  test("parse_ejson numeric parity: float tokens truncate, wrappers parse, empty nulls") {
+    val out = readTokens(AInt64, Seq("42", "1.5", "-2.75", "\"\"", """{"$numberLong": "8589934592"}"""))
+      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
     // a float token truncates like the batch path (json infers double;
     // ANSI double->long truncates) instead of crashing the stream; ""
     // is falsy -> null; wrappers unwrap
     assert(out.toSeq == Seq(Some(42L), Some(1L), Some(-2L), None, Some(8589934592L)))
     // genuinely non-numeric text still raises (reference ValueError parity)
     val err = intercept[Throwable] {
-      unwrapTokens(Seq("\"abc\""), AType.AInt64).collect()
+      readTokens(AInt64, Seq("\"abc\"")).collect()
     }
     assert(err.isInstanceOf[org.apache.spark.SparkThrowable], err.getClass.getName)
   }
 
-  test("unwrapVariant accepts Python literal grammar numerics like the batch py_norm path") {
-    import graft.types.AType
+  test("parse_ejson accepts Python literal grammar numerics like the batch py_norm path") {
     // underscored, Unicode-digit, and Unicode-whitespace-padded ints —
     // all valid Python int() literals the batch path accepts via
     // py_norm/parsePythonInt
-    val ints = unwrapTokens(Seq("1_0", "٤٢", "  42  ").map(s => s"\"$s\""), AType.AInt64)
+    val ints = readTokens(AInt64, Seq("1_0", "٤٢", "  42  ").map(s => s"\"$s\""))
       .collect().map(_.getLong(0))
     assert(ints.toSeq == Seq(10L, 42L, 42L))
-    val floats = unwrapTokens(Seq("1_0.5", "inf", "-Infinity", "nan", "1e3").map(s => s"\"$s\""),
-      AType.AFloat64).collect().map(_.getDouble(0))
+    val floats = readTokens(AFloat64, Seq("1_0.5", "inf", "-Infinity", "nan", "1e3").map(s => s"\"$s\""))
+      .collect().map(_.getDouble(0))
     assert(floats(0) == 10.5 && floats(1).isPosInfinity &&
       floats(2).isNegInfinity && floats(3).isNaN && floats(4) == 1000.0)
+  }
+
+  test("the EL read, batch and stream, is a text scan and parse_ejson: no VARIANT, no JSON scan, no UDF") {
+    import org.apache.spark.sql.catalyst.plans.QueryPlan
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+    val dir = Files.createTempDirectory("elplan")
+    val in = Files.createDirectory(dir.resolve("shop"))
+    Files.writeString(in.resolve("orders.jsonl"),
+      """{"_id": {"$oid": "65a1"}, "n": {"$numberLong": "1"}, "at": {"$date": 0}, "sub": {"x": [1.5]}, "s": "a"}""" +
+        "\n")
+    val schema = SchemaInference.inferFile(spark, in.resolve("orders.jsonl").toString, "orders", samples = 0)
+    def check(plans: Seq[QueryPlan[_]]): Unit = {
+      val nodes = plans.flatMap(_.collect { case n: QueryPlan[_] => n })
+      assert(!nodes.flatMap(_.output).exists(a => a.dataType.catalogString.contains(VariantType.catalogString)), plans)
+      val exprs = nodes.flatMap(_.expressions).flatMap(_.collect { case e => e })
+      assert(exprs.exists(_.isInstanceOf[graft.functions.ParseExtendedJson]) &&
+        !exprs.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF]), plans)
+      val scans = nodes.collect { case s: FileSourceScanExec => s.relation.fileFormat }
+      assert(scans.nonEmpty && scans.forall(_.isInstanceOf[TextFileFormat]), scans)
+    }
+    val load = new graft.sources.DumpSource(spark, dir.toString).load("shop", "orders", schema, Normalizer.Strict)
+    load.collect()
+    check(Seq(load.queryExecution.analyzed, load.queryExecution.executedPlan))
+    val q = Engine.runStreaming(spark, in.toString, schema, dir.resolve("out").toString, dir.resolve("ckpt").toString)
+    try {
+      q.processAllAvailable()
+      val run = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper].streamingQuery
+      check(Seq(run.logicalPlan, run.lastExecution.executedPlan))
+    } finally q.stop()
   }
 
   test("streaming unwraps BSON wrappers identically to the batch path") {
@@ -170,8 +207,8 @@ class StreamingEngineSpec extends SparkSuite {
 
   test("streaming unwraps wrappers NESTED in struct/array columns like the batch path") {
     // the r3 documented limitation, now closed: wrapper scalars inside
-    // arrays and sub-documents unwrap on the stream path via recursed
-    // VARIANT parse types + element-wise unwrapVariant
+    // arrays and sub-documents unwrap on the stream path, which reads
+    // nested values as the batch path does
     val in = Files.createTempDirectory("nestwrap")
     val out = Files.createTempDirectory("nestwrapout").toString
     val ckpt = Files.createTempDirectory("nestwrapckpt").toString
