@@ -17,10 +17,10 @@ import graft.sources.ExtendedJsonSource
   * Execution shape at scale: schema inference is a bounded
   * sample + treeAggregate (only the schema returns to the driver); the
   * load itself is a single shuffle-free map stage over one scan of the
-  * input — the one-pass parse of each line into that schema's columns
-  * ([[ExtendedJsonSource]], the reader the stream uses too), normalize
-  * projection and `partitionBy` write all pipeline inside one codegen
-  * stage per task, so the job
+  * input — the one-pass parse of each line into that schema's typed,
+  * renamed columns ([[ExtendedJsonSource]], the reader the stream uses
+  * too) and the `partitionBy` write pipeline inside one codegen stage
+  * per task, so the job
   * scales linearly with input splits on any cluster size. The reference's per-partition writer fan-out
   * (extract_load.py:46-56) is subsumed by Spark's file committer.
   */
@@ -53,7 +53,7 @@ object Engine {
   def run(spark: SparkSession, job: JobConfig): JobResult =
     runWith(job,
       inferSchema = SchemaInference.inferFile(spark, job.input, job.collection, job.samples),
-      load = s => ExtendedJsonSource.normalize(ExtendedJsonSource.read(spark, job.input, s, job.mode), s))
+      load = ExtendedJsonSource.read(spark, job.input, _, job.mode))
 
   /** Source-agnostic EL: the same pipeline fed from any [[graft.sources.Source]]
     * (dump directory or live MongoDB connector) — a reference user's
@@ -120,16 +120,15 @@ object Engine {
   }
 
   /** Streaming EL: continuously ingest extended-JSON documents arriving
-    * under `inputDir` into the same normalize -> parquet pipeline —
-    * `readStream` -> normalize projection -> `writeStream` file sink
+    * under `inputDir` into the same load -> parquet pipeline —
+    * `readStream` -> the reader's projection -> `writeStream` file sink
     * with checkpointing, so ingest is exactly-once and incremental.
     *
     * The schema must be known up front (streams can't be sampled
     * retroactively): pass one inferred/loaded via the batch path from a
-    * seed of documents. The stream reads as the batch load does: its
+    * seed of documents. The stream loads as the batch load does: its
     * files' lines through the same reader
-    * ([[ExtendedJsonSource.documents]]) and the same
-    * [[ExtendedJsonSource.normalize]].
+    * ([[ExtendedJsonSource.documents]]).
     */
   def runStreaming(
       spark: SparkSession,
@@ -139,9 +138,7 @@ object Engine {
       checkpoint: String,
       mode: Normalizer.Mode = Normalizer.Strict,
       partitionKey: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val documents = ExtendedJsonSource.documents(spark.readStream.text(inputDir), schema, mode)
-    val normalized = ExtendedJsonSource.normalize(documents, schema)
-    val writer = normalized.writeStream
+    val writer = ExtendedJsonSource.documents(spark.readStream.text(inputDir), schema, mode).writeStream
       .format("parquet")
       .option("path", outPath)
       .option("checkpointLocation", checkpoint)

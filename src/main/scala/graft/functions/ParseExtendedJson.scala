@@ -15,7 +15,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure
 import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Expression, GenericInternalRow, Literal,
   TimeZoneAwareExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, DateTimeUtils, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
@@ -40,13 +40,14 @@ import graft.types.{AType, TypeLattice}
   *    millis, ISO text or `{"$numberLong": millis}`) or `$binary`
   *    (`{"base64": …}`, or text beside a legacy `$type`) — is read
   *    through that key;
-  *  - text in a non-string column takes `Normalizer`'s Python-grammar
-  *    cast (`TypeLattice`'s `int()`/`float()`/epoch/`fromisoformat`
-  *    grammars): `''` is null, a bad literal raises `ValueError: invalid
-  *    <mode> literal for column <name>`;
+  *  - text in a non-string column takes the engine's one text cast
+  *    (`fromText`, which `Normalizer` calls as `py_cast`: `TypeLattice`'s
+  *    `int()`/`float()`/epoch/`fromisoformat` grammars): `''` is null, a
+  *    bad literal raises `ValueError: invalid <grammar> literal for
+  *    column <name>`;
   *  - a string column keeps each token's text as written (a number's
   *    `1e3`, a sub-document's JSON), or the text of an `$oid`/`$number*`
-  *    wrapper;
+  *    wrapper; a top-level `''` is null;
   *  - sub-documents and arrays recurse; fields outside the schema are
   *    skipped; an absent field is null;
   *  - in 'compat' mode the reference's falsy test (`if field`,
@@ -59,7 +60,8 @@ import graft.types.{AType, TypeLattice}
   * blank line has no document, a top-level array one per element, the
   * last of duplicate keys wins, text after the document is ignored, and
   * a line that is not a JSON document (or array of them) is one row of
-  * nulls. A document raises only once its line has parsed.
+  * nulls ([[ParseExtendedJson.documents]], which schema inference reads
+  * lines with too). A document raises only once its line has parsed.
   *
   * Text is decoded from the line's UTF-8 bytes whatever the JVM's
   * default charset. Codegen is one call, so the read stays inside
@@ -109,7 +111,7 @@ object ParseExtendedJson {
 
   /** Spark's JSON reader options: single quotes and NaN/Infinity allowed,
     * its stream limits. */
-  private val factory = new JsonFactoryBuilder()
+  private[graft] val factory = new JsonFactoryBuilder()
     .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES)
     .enable(JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS)
     .streamReadConstraints(StreamReadConstraints.builder()
@@ -118,7 +120,7 @@ object ParseExtendedJson {
 
   /** How one JSON value is read; `label` is the column path errors name. */
   private sealed abstract class Node(val label: String, val t: AType)
-  private final class Text(label: String) extends Node(label, AType.AString)
+  private final class Text(label: String, val top: Boolean) extends Node(label, AType.AString)
   private final class Arr(label: String, t: AType, val elem: Node) extends Node(label, t)
   private final class Obj(label: String, t: AType, val names: Array[String], val nodes: Array[Node])
       extends Node(label, t) {
@@ -148,7 +150,7 @@ object ParseExtendedJson {
   private val kindNames = Array("boolean", "bigint", "double", "timestamp", "binary")
 
   private def compile(label: String, t: AType, top: Boolean, compat: Boolean): Node = t match {
-    case AType.AString => new Text(label)
+    case AType.AString => new Text(label, top)
     case AType.AList(e) => new Arr(label, t, compile(s"$label[]", e, top = false, compat))
     case AType.AStruct(fs) =>
       struct(label, t, fs.map { case (n, ft) => n -> compile(s"$label.$n", ft, top = false, compat) })
@@ -179,23 +181,30 @@ object ParseExtendedJson {
     }
     val p = factory.createParser(bytes, base, line.numBytes)
     val read = new Reader(p, bytes, base, zone)
-    def nulls = new GenericArrayData(Array[Any](new GenericInternalRow(doc.names.length)))
-    val docs: Seq[Any] = try p.nextToken() match {
-      case null => Nil
-      case START_OBJECT => read.obj(doc) :: Nil
-      case START_ARRAY =>
-        val out = ArrayBuffer.empty[Any]
-        while (p.nextToken() == START_OBJECT) out += read.obj(doc)
-        if (p.currentToken == END_ARRAY) out.toSeq else null
-      case _ => null
-    } catch { case _: JsonProcessingException => null } finally p.close()
-    if (docs == null) nulls
-    else if (docs.isEmpty) noRows
-    else new GenericArrayData(docs.map {
-      case b: Bad => throw b.error
-      case row => row
-    }.toArray)
+    documents(p)(read.obj(doc)) match {
+      case None => new GenericArrayData(Array[Any](new GenericInternalRow(doc.names.length)))
+      case Some(Nil) => noRows
+      case Some(docs) => new GenericArrayData(docs.map {
+        case b: Bad => throw b.error
+        case row => row
+      }.toArray)
+    }
   }
+
+  /** The documents of the line `p` parses, each read by `doc` from its
+    * first token to its last: none for a blank line, one per element of
+    * a top-level array of documents; None for a line that is not a
+    * document or an array of them. Text after the document is ignored. */
+  private[graft] def documents[A](p: JsonParser)(doc: => A): Option[Seq[A]] =
+    try p.nextToken() match {
+      case null => Some(Nil)
+      case START_OBJECT => Some(doc :: Nil)
+      case START_ARRAY =>
+        val out = ArrayBuffer.empty[A]
+        while (p.nextToken() == START_OBJECT) out += doc
+        if (p.currentToken == END_ARRAY) Some(out.toSeq) else None
+      case _ => None
+    } catch { case _: JsonProcessingException => None } finally p.close()
 
   /** Reads values off `p`, which parses `bytes` from `base`. Each read
     * starts at a value's first token and ends on its last. */
@@ -203,7 +212,7 @@ object ParseExtendedJson {
 
     def read(n: Node): Any = n match {
       case s: Scalar => scalar(s)
-      case _: Text => text()
+      case t: Text => text(t.top)
       case a: Arr => array(a)
       case o: Obj => obj(o)
     }
@@ -251,8 +260,9 @@ object ParseExtendedJson {
       case _ => unreadable(a)
     }
 
-    private def text(): Any = p.currentToken match {
-      case VALUE_STRING => UTF8String.fromString(p.getText)
+    /** A string column's value; at the top level `''` is null. */
+    private def text(top: Boolean): Any = p.currentToken match {
+      case VALUE_STRING => nonEmpty(top, p.getText)
       case VALUE_NULL => null
       case START_OBJECT =>
         val start = tokenStart
@@ -264,7 +274,7 @@ object ParseExtendedJson {
           if (p.nextToken() == VALUE_STRING && keys == 1 && textWrapperKeys(key)) wrapped = p.getText
           else p.skipChildren()
         }
-        if (keys == 1 && wrapped != null) UTF8String.fromString(wrapped) else UTF8String.fromBytes(json(start))
+        if (keys == 1 && wrapped != null) nonEmpty(top, wrapped) else UTF8String.fromBytes(json(start))
       case START_ARRAY =>
         val start = tokenStart
         p.skipChildren()
@@ -272,11 +282,12 @@ object ParseExtendedJson {
       case _ => UTF8String.fromString(p.getText) // a number or bool as written
     }
 
+    private def nonEmpty(top: Boolean, text: String): UTF8String =
+      if (top && text.isEmpty) null else UTF8String.fromString(text)
+
     private def scalar(s: Scalar): Any = p.currentToken match {
       case VALUE_NULL => null
-      case VALUE_STRING =>
-        val text = p.getText
-        if (text.isEmpty) null else fromText(s, text)
+      case VALUE_STRING => fromText(p.getText, s.t, s.compat, s.label, zone)
       case _ =>
         val start = tokenStart
         val v = typed(s.kind)
@@ -316,7 +327,7 @@ object ParseExtendedJson {
         else if (kind == Lng || kind == Dbl) fromDouble(if (b) 1 else 0, kind)
         else null
       case VALUE_NUMBER_INT if kind == Lng =>
-        if (p.getNumberType == JsonParser.NumberType.BIG_INTEGER) null else Long.box(p.getLongValue)
+        if (p.getNumberType == JsonParser.NumberType.BIG_INTEGER) p.getBigIntegerValue else Long.box(p.getLongValue)
       case VALUE_NUMBER_FLOAT if kind == Lng =>
         // a plain decimal truncates exactly; other spellings go through a double
         val d = decimal(p.getText)
@@ -416,76 +427,156 @@ object ParseExtendedJson {
       * bytes never are. */
     private def falsy(v: AnyRef, kind: Int): Boolean = kind match {
       case Bool => !v.asInstanceOf[java.lang.Boolean]
-      case Lng => v.asInstanceOf[java.lang.Long] == 0L
+      case Lng => v.isInstanceOf[java.lang.Long] && v.asInstanceOf[java.lang.Long] == 0L
       case Dbl => v.asInstanceOf[java.lang.Double] == 0.0
       case _ => false
     }
 
     /** A value read as its kind cast to the column's Spark type, as ANSI
       * casts it (an integer out of range raises). */
-    private def narrow(s: Scalar, v: AnyRef): Any = s.t.sparkType match {
-      case to @ (IntegerType | ShortType | ByteType) =>
-        val i = v.asInstanceOf[java.lang.Long].longValue
-        integer(i, to, castError(i, LongType, to))
-      case _: DecimalType => Decimal(v.asInstanceOf[java.lang.Long].longValue)
-      case FloatType => v.asInstanceOf[java.lang.Double].floatValue
-      case DateType => DateTimeUtils.microsToDays(v.asInstanceOf[java.lang.Long].longValue, zone)
-      case _ => v
-    }
-
-    /** `i` as integer type `to`, or `overflow` where it does not fit. */
-    private def integer(i: Long, to: DataType, overflow: => Bad): Any = to match {
-      case ByteType if i.toByte == i => i.toByte
-      case ShortType if i.toShort == i => i.toShort
-      case IntegerType if i.toInt == i => i.toInt
-      case LongType => i
-      case _: DecimalType => Decimal(i)
-      case _ => overflow
-    }
-
-    /** The error Spark's ANSI cast of `v` to `to` raises. */
-    private def castError(v: Any, from: DataType, to: DataType): Bad = new Bad(
-      try {
-        // a decimal(20,0) column is read through bigint, where it overflows
-        val cast = Cast(Cast(Literal(v, from), to, Some(zone.getId), EvalMode.ANSI), LongType, Some(zone.getId),
-          EvalMode.ANSI)
-        cast.eval()
-        userError(s"ValueError: $v is out of range for ${to.simpleString}")
-      } catch { case e: Throwable => e })
-
-    /** Text through `Normalizer.castTo`'s Python-grammar cast to the
-      * column's type. */
-    private def fromText(s: Scalar, text: String): Any = {
-      def invalid(mode: String) =
-        new Bad(userError(s"ValueError: invalid $mode literal for column ${s.label}: '$text'"))
-      def epoch: Option[Double] =
-        TypeLattice.parsePythonInt(text).map(_.toDouble).orElse(TypeLattice.parsePythonFloat(text))
-      s.t match {
-        case AType.ABool => !s.compat && { val l = text.toLowerCase(Locale.ROOT); l == "true" || l == "yes" }
-        case t if AType.isAnyInt(t) => TypeLattice.parsePythonInt(text).fold[Any](invalid("int")) { i =>
-          lazy val overflow = castError(UTF8String.fromString(i.toString), StringType, t.sparkType)
-          if (i.isValidLong) integer(i.toLong, t.sparkType, overflow) else overflow
-        }
-        case t if AType.isFloat(t) => TypeLattice.parsePythonFloat(text).fold[Any](invalid("float"))(d =>
-          if (t == AType.AFloat64) d else java.lang.Float.parseFloat(java.lang.Double.toString(d)))
-        case AType.ATimestampS if s.compat => epoch.fold[Any](invalid("epoch"))(seconds)
-        case AType.ATimestampS => epoch.map(seconds).orElse(TypeLattice.parseIsoDateTime(text).map(micros))
-          .getOrElse(invalid("epoch-or-iso"))
-        case AType.ADate32 =>
-          TypeLattice.parseIsoDateTime(text).fold[Any](invalid("iso"))(_.toLocalDate.toEpochDay.toInt)
-        case AType.ADate64 => TypeLattice.parseIsoDateTime(text).fold[Any](invalid("iso"))(micros)
-        case _ => text.getBytes(UTF_8) // binary
+    private def narrow(s: Scalar, v: AnyRef): Any = v match {
+      case i: java.math.BigInteger => integer(BigInt(i), s.t.sparkType, zone)
+      case _ => s.t.sparkType match {
+        case to @ (IntegerType | ShortType | ByteType | _: DecimalType) =>
+          val i = v.asInstanceOf[java.lang.Long].longValue
+          integer(i, to, castError(i, LongType, to, zone))
+        case FloatType => v.asInstanceOf[java.lang.Double].floatValue
+        case DateType => DateTimeUtils.microsToDays(v.asInstanceOf[java.lang.Long].longValue, zone)
+        case _ => v
       }
     }
+  }
 
-    /** Epoch seconds as a timestamp, as Spark's ANSI double cast takes them. */
-    private def seconds(d: Double): Any = {
-      val us = d * 1000000L
-      if (!d.isNaN && !d.isInfinite && math.floor(us) <= Long.MaxValue && math.ceil(us) >= Long.MinValue) us.toLong
-      else castError(d, DoubleType, TimestampType)
+  /** [[fromText]], raising where the reader would. */
+  private[functions] def castText(text: String, t: AType, compat: Boolean, label: String, zone: ZoneId): Any =
+    fromText(text, t, compat, label, zone) match {
+      case b: Bad => throw b.error
+      case v => v
     }
 
-    /** A wall-clock time in the session's zone. */
-    private def micros(t: LocalDateTime): Long = DateTimeUtils.instantToMicros(t.atZone(zone).toInstant)
+  /** `i` as integer type `to`, or `overflow` where it does not fit. */
+  private def integer(i: Long, to: DataType, overflow: => Bad): Any = to match {
+    case ByteType if i.toByte == i => i.toByte
+    case ShortType if i.toShort == i => i.toShort
+    case IntegerType if i.toInt == i => i.toInt
+    case LongType => i
+    case _: DecimalType => Decimal(i)
+    case _ => overflow
   }
+
+  /** `i` as integer type `to`: a uint64 column (`decimal(20,0)`) holds
+    * any 20 digits. Where it does not fit, the error Spark's ANSI cast of
+    * its text raises. */
+  private def integer(i: BigInt, to: DataType, zone: ZoneId): Any = {
+    lazy val overflow = castError(UTF8String.fromString(i.toString), StringType, to, zone)
+    to match {
+      case _ if i.isValidLong => integer(i.toLong, to, overflow)
+      case d: DecimalType =>
+        val v = Decimal(BigDecimal(i))
+        if (v.changePrecision(d.precision, d.scale)) v else overflow
+      case _ => overflow
+    }
+  }
+
+  /** The error Spark's ANSI cast of `v` to `to` raises. */
+  private def castError(v: Any, from: DataType, to: DataType, zone: ZoneId): Bad = new Bad(
+    try {
+      Cast(Literal(v, from), to, Some(zone.getId), EvalMode.ANSI).eval()
+      userError(s"ValueError: $v is out of range for ${to.simpleString}")
+    } catch { case e: Throwable => e })
+
+  /** Text cast to the non-string scalar type `t` as the reference's cast
+    * table casts it (mongo2pq/schema.py:123-158), through Python's literal
+    * grammars (`TypeLattice`'s `int()`, `float()`, epoch and
+    * `fromisoformat`): `''` is null; a literal Python rejects is a
+    * [[Bad]] `ValueError: invalid <grammar> literal for column <label>`,
+    * a value out of the type's range the error Spark's ANSI cast raises.
+    *
+    *  - bool: 'true' or 'yes' in any case (the evident intent of the
+    *    reference's `cast_boolean`); in `compat` mode always false, as its
+    *    bug gives it (both branches test `isinstance(value, str)`,
+    *    schema.py:128-135);
+    *  - timestamp[s]: epoch seconds as `int()` else `float()`
+    *    (`cast_timestamp_compat`, schema.py:143-150); outside `compat`
+    *    mode ISO text too, where the reference raises;
+    *  - date32 and date64: `fromisoformat`, in the session's zone;
+    *  - binary: the text's UTF-8 bytes. */
+  private def fromText(text: String, t: AType, compat: Boolean, label: String, zone: ZoneId): Any = {
+    def invalid(grammar: String) =
+      new Bad(userError(s"ValueError: invalid $grammar literal for column $label: '$text'"))
+    def epoch: Option[Double] =
+      TypeLattice.parsePythonInt(text).map(_.toDouble).orElse(TypeLattice.parsePythonFloat(text))
+    def micros(t: LocalDateTime): Long = DateTimeUtils.instantToMicros(t.atZone(zone).toInstant)
+    /** Epoch seconds as a timestamp, as Spark's ANSI double cast takes them. */
+    def seconds(d: Double): Any = {
+      val us = d * 1000000L
+      if (!d.isNaN && !d.isInfinite && math.floor(us) <= Long.MaxValue && math.ceil(us) >= Long.MinValue) us.toLong
+      else castError(d, DoubleType, TimestampType, zone)
+    }
+    if (text.isEmpty) null
+    else t match {
+      case AType.ABool => !compat && { val l = text.toLowerCase(Locale.ROOT); l == "true" || l == "yes" }
+      case _ if AType.isAnyInt(t) =>
+        TypeLattice.parsePythonInt(text).fold[Any](invalid("int"))(integer(_, t.sparkType, zone))
+      case _ if AType.isFloat(t) => TypeLattice.parsePythonFloat(text).fold[Any](invalid("float"))(d =>
+        if (t == AType.AFloat64) d else java.lang.Float.parseFloat(java.lang.Double.toString(d)))
+      case AType.ATimestampS if compat => epoch.fold[Any](invalid("epoch"))(seconds)
+      case AType.ATimestampS => epoch.map(seconds).orElse(TypeLattice.parseIsoDateTime(text).map(micros))
+        .getOrElse(invalid("epoch-or-iso"))
+      case AType.ADate32 =>
+        TypeLattice.parseIsoDateTime(text).fold[Any](invalid("iso"))(_.toLocalDate.toEpochDay.toInt)
+      case AType.ADate64 => TypeLattice.parseIsoDateTime(text).fold[Any](invalid("iso"))(micros)
+      case _ => text.getBytes(UTF_8) // binary
+    }
+  }
+}
+
+/** `py_cast(text, type, mode, column)`: `text` cast to the `!schema`
+  * scalar type `type` (a non-string alias such as 'int32') in `mode`
+  * ('strict' or 'compat'), as `parse_ejson` casts text in a typed field;
+  * `column` names the column in its errors. `Normalizer` casts text
+  * columns through it. Codegen is one call. */
+case class PyCast(child: Expression, typeAlias: String, mode: String, column: String,
+    timeZoneId: Option[String] = None) extends UnaryExpression with TimeZoneAwareExpression {
+
+  @transient private lazy val to: Option[AType] = AType.forAlias(typeAlias).filter {
+    case AType.AString | _: AType.AList | _: AType.AStruct => false
+    case _ => true
+  }
+  @transient private lazy val compat = mode == "compat"
+
+  override def dataType: DataType = to.fold[DataType](NullType)(_.sparkType)
+  override def nullable: Boolean = true
+  override def prettyName: String = "py_cast"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType != StringType) TypeCheckFailure(s"py_cast reads STRING, not ${child.dataType}")
+    else if (to.isEmpty) TypeCheckFailure(s"py_cast: not a non-string scalar type: $typeAlias")
+    else if (mode != "strict" && mode != "compat") TypeCheckFailure(s"py_cast: unknown mode '$mode'")
+    else TypeCheckResult.TypeCheckSuccess
+
+  override def withTimeZone(tz: String): PyCast = copy(timeZoneId = Option(tz))
+
+  def cast(text: UTF8String): Any = ParseExtendedJson.castText(text.toString, to.get, compat, column, zoneId)
+
+  override def nullSafeEval(text: Any): Any = cast(text.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("pyCast", this)
+    val value = ctx.freshName("value")
+    nullSafeCodeGen(ctx, ev, text =>
+      s"""Object $value = $self.cast($text);
+         |${ev.isNull} = $value == null;
+         |if (!${ev.isNull}) ${ev.value} = (${CodeGenerator.boxedType(dataType)}) $value;
+         |""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
+}
+
+object PyCast {
+
+  /** The SQL function's builder: `type`, `mode` and `column` are literals. */
+  def build(args: Seq[Expression]): PyCast =
+    PyCast(args(0), args(1).eval().toString, args(2).eval().toString, args(3).eval().toString)
 }

@@ -193,8 +193,8 @@ object GraftFunctions {
       classOf[SumStrLen])(e => SumStrLen(e(0))),
     fn("simhash64", "(toks) - per-row 64-bit Charikar simhash over distinct tokens (codegen)",
       classOf[SimHash64])(e => SimHash64(e(0))),
-    fn("py_norm", "(text, mode) - text through Python's int/float/epoch/iso grammar, NULL where Python raises",
-      classOf[PyNorm])(e => PyNorm(e(0), e(1))),
+    fn("py_cast", "(text, type, mode, column) - text cast to a !schema scalar type as parse_ejson casts it (codegen)",
+      classOf[PyCast])(PyCast.build),
     fn("minhash_sig", "(toks) - per-row MinHash minima and distinct 3-gram hash set (codegen)",
       classOf[MinHashSig])(e => MinHashSig(e(0))),
     fn("token_tf", "(toks) - distinct (tok, tf) pairs of an ARRAY<STRING> (codegen)",

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.config.SchemaConfig
 import graft.normalize.Normalizer
 import graft.schema.SchemaInference
+import graft.sources.ExtendedJsonSource
 
 /** End-to-end exercises of the engine core (SURVEY.md §7.2): the
   * reference's schema-inference -> config-rewrite -> normalize pipeline
@@ -76,11 +77,8 @@ schema:
         val inferred = SchemaInference.infer(docs, "events", samples = 2000, nowEpochSec = fixedNow)
         val parsed = SchemaConfig.parse(configYaml)
         val finalSchema = inferred.useConfig(parsed.forCollection("events"))
-        // explicit read schema: skips spark.read.json's own inference
-        // pass (the engine already inferred; one scan instead of two)
-        val raw = s.read.schema("event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE")
-          .json(docs)
-        Normalizer(finalSchema, raw, Normalizer.Strict)
+        // the EL load's own reader, against the config-applied schema
+        ExtendedJsonSource.documents(docs.toDF("value"), finalSchema, Normalizer.Strict)
           .orderBy($"event_id")
       },
       Some("""

@@ -1,8 +1,9 @@
 package graft.schema
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{Dataset, SparkSession}
 
+import graft.functions.ParseExtendedJson
 import graft.types.{AType, TypeLattice}
 
 /** Distributed schema inference over a collection of JSON documents.
@@ -19,21 +20,20 @@ import graft.types.{AType, TypeLattice}
   */
 object SchemaInference {
 
-  /** Thread-local Jackson mapper: shared per-executor-thread, never
-    * serialized with the closure. */
-  @transient private lazy val mapperTl: ThreadLocal[ObjectMapper] =
-    ThreadLocal.withInitial(() => new ObjectMapper())
-  private def mapper: ObjectMapper = mapperTl.get()
+  /** Trees on the EL reader's JSON grammar (thread-safe once built). */
+  private lazy val mapper = new ObjectMapper(ParseExtendedJson.factory)
 
-  /** One document folded into a running field->type map. */
+  /** One line's documents folded into a running field->type map. The
+    * line reads as the EL reader reads it ([[ParseExtendedJson.documents]]):
+    * a top-level array gives each of its documents, and a line that is
+    * not a document (blank, not JSON, or some other value) gives none. */
   private def inferInto(
       acc: Vector[(String, AType)],
       json: String,
       nowEpochSec: Double): Vector[(String, AType)] = {
-    val node = mapper.readTree(json)
-    if (node == null || !node.isObject) acc
-    else {
-      var fields = acc
+    val p = ParseExtendedJson.factory.createParser(json)
+    ParseExtendedJson.documents(p)(mapper.readTree[JsonNode](p)).getOrElse(Nil).foldLeft(acc) { (fields0, node) =>
+      var fields = fields0
       val it = node.properties().iterator()
       while (it.hasNext) {
         val e = it.next()
@@ -82,7 +82,7 @@ object SchemaInference {
     InferredSchema(name, fields)
   }
 
-  /** One document -> ordered field/type vector (the seqOp unit). */
+  /** One line's documents -> ordered field/type vector (the seqOp unit). */
   private[graft] def inferOne(json: String, nowEpochSec: Double): Vector[(String, AType)] =
     inferInto(Vector.empty, json, nowEpochSec)
 

@@ -23,9 +23,9 @@ import graft.schema.{InferredSchema, SchemaInference}
   *
   * Both expose collections two ways: raw JSON documents (for schema
   * inference, which is defined over documents) and the normalized load.
-  * A dump's lines are parsed once, straight into the schema the load
-  * normalizes to ([[ExtendedJsonSource]]); the connector returns typed
-  * BSON columns, which `Normalizer` casts.
+  * A dump's lines are parsed once, straight into the schema's rows
+  * ([[ExtendedJsonSource]]); the connector returns typed BSON columns,
+  * which `Normalizer` casts.
   */
 trait Source {
   /** Databases available at this source (A2: reference defaults to the
@@ -35,8 +35,9 @@ trait Source {
   def listCollections(db: String): Seq[String]
   /** A collection as raw extended-JSON document strings. */
   def rawDocuments(db: String, collection: String): Dataset[String]
-  /** A collection normalized to `schema` (post-config) in `mode`: the
-    * rows `Normalizer(schema, _, mode)` makes of its documents. */
+  /** A collection normalized to `schema` (post-config) in `mode`: its
+    * documents as the schema's typed, renamed columns, with the absent,
+    * empty and (in `Compat` mode) falsy values null. */
   def load(db: String, collection: String, schema: InferredSchema, mode: Normalizer.Mode): DataFrame
 }
 
@@ -65,11 +66,10 @@ final class DumpSource(spark: SparkSession, root: String) extends Source {
     spark.read.textFile(pathOf(db, collection))
 
   override def load(db: String, collection: String, schema: InferredSchema, mode: Normalizer.Mode): DataFrame =
-    ExtendedJsonSource.normalize(ExtendedJsonSource.read(spark, pathOf(db, collection), schema, mode), schema)
+    ExtendedJsonSource.read(spark, pathOf(db, collection), schema, mode)
 
-  /** The dump read against the schema inferred from a sample (the
-    * default size): each document parsed into typed columns under its
-    * source names, BSON wrappers unwrapped — `Normalizer`'s input. */
+  /** The dump loaded against the schema inferred from a sample (the
+    * default size), in `Strict` mode, without a config. */
   def read(db: String, collection: String): DataFrame =
     ExtendedJsonSource.read(spark, pathOf(db, collection),
       SchemaInference.infer(rawDocuments(db, collection), collection), Normalizer.Strict)

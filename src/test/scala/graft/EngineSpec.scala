@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 import graft.normalize.Normalizer
@@ -126,18 +127,19 @@ class EngineSpec extends SparkSuite {
     assert(rows(streamOut) == expected)
   }
 
-  /** `lines` as a dump loaded against a declared {a: int64, s: string,
-    * x: double} schema, by `Engine.run` and by `Engine.runStreaming`:
-    * each path's rows, or its failure. */
-  private def loadLines(lines: Seq[String]): Seq[Either[Throwable, Seq[String]]] = {
+  /** `lines` as a dump loaded against a declared schema (by default
+    * {a: int64, s: string, x: double}), by `Engine.run` and by
+    * `Engine.runStreaming`: each path's rows, or its failure. */
+  private def loadLines(lines: Seq[String], fields: Seq[(String, String)] = Seq("a" -> "int64", "s" -> "string",
+      "x" -> "double")): Seq[Either[Throwable, Seq[String]]] = {
     val dir = Files.createTempDirectory("lines")
     val in = Files.createDirectory(dir.resolve("in")).resolve("docs.jsonl")
     Files.writeString(in, lines.mkString("", "\n", "\n"))
     val schemaFile = dir.resolve("docs.yaml")
-    Files.write(schemaFile, java.util.Arrays.asList("!schema", "name: docs", "fields:", "  a: int64", "  s: string",
-      "  x: double"))
-    def rows(path: String) = spark.read.parquet(path).select("a", "s", "x").collect().map(_.mkString(",")).toSeq
-      .sorted
+    Files.write(schemaFile, java.util.Arrays.asList(
+      (Seq("!schema", "name: docs", "fields:") ++ fields.map { case (n, t) => s"  $n: $t" }): _*))
+    def rows(path: String) = spark.read.parquet(path).select(fields.map(_._1).map(col): _*).collect()
+      .map(_.mkString(",")).toSeq.sorted
     val batch = scala.util.Try(rows(Engine.run(spark, Engine.JobConfig(input = in.toString, collection = "docs",
       outDir = dir.resolve("batch").toString, schemaFile = Some(schemaFile.toString))).outPath)).toEither
     val streamOut = dir.resolve("stream").toString
@@ -147,27 +149,56 @@ class EngineSpec extends SparkSuite {
     Seq(batch, stream)
   }
 
+  /** One line of each shape the reader meets, and the rows they load. */
+  private val lineLevel = Seq(
+    """{"a": 1, "s": "one", "x": 1.5}""",
+    "",
+    "   \t ",
+    """[{"a": 2, "s": "two"}, {"a": 7, "x": 3.5}]""",
+    "[]",
+    """{"a":2,"a":3}""",
+    """{"a": 4, "s": "tail"} trailing text""",
+    "not json",
+    "[1,2]",
+    "5",
+    """{"a": 5, "x": NaN}""")
+  private val lineLevelRows = Seq("1,one,1.5", "2,two,null", "7,null,3.5", "3,null,null", "4,tail,null",
+    "null,null,null", "null,null,null", "null,null,null", "5,null,NaN").sorted
+
   test("line level: blank lines, top-level arrays, duplicate keys, trailing text, non-JSON lines, NaN") {
-    val loaded = loadLines(Seq(
-      """{"a": 1, "s": "one", "x": 1.5}""",
-      "",
-      "   \t ",
-      """[{"a": 2, "s": "two"}, {"a": 7, "x": 3.5}]""",
-      "[]",
-      """{"a":2,"a":3}""",
-      """{"a": 4, "s": "tail"} trailing text""",
-      "not json",
-      "[1,2]",
-      "5",
-      """{"a": 5, "x": NaN}"""))
-    val expected = Seq("1,one,1.5", "2,two,null", "7,null,3.5", "3,null,null", "4,tail,null", "null,null,null",
-      "null,null,null", "null,null,null", "5,null,NaN").sorted
-    for (r <- loaded) assert(r == Right(expected))
+    for (r <- loadLines(lineLevel)) assert(r == Right(lineLevelRows))
     // NaN does not read as a bigint: both paths raise, naming the column
     for (r <- loadLines(Seq("""{"a": NaN, "s": "nan"}"""))) {
       val e = r.swap.getOrElse(fail(s"NaN loaded into a bigint column: $r"))
       assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(_.getMessage.contains("for column a")), e)
     }
+  }
+
+  test("inference reads lines as the reader does: a line that is not a document gives no evidence") {
+    // the line-level case's lines, loaded with the schema inferred from all of them
+    val dir = Files.createTempDirectory("inferlines")
+    val in = dir.resolve("docs.jsonl")
+    Files.writeString(in, lineLevel.mkString("", "\n", "\n"))
+    val result = Engine.run(spark, Engine.JobConfig(input = in.toString, collection = "docs",
+      outDir = dir.resolve("out").toString, samples = 0))
+    assert(result.schema.fields.map(_._1) == Seq("a", "s", "x"), result.schema)
+    val rows = spark.read.parquet(result.outPath).select("a", "s", "x").collect().map(_.mkString(",")).toSeq.sorted
+    assert(rows == lineLevelRows)
+  }
+
+  test("a uint64 column holds 20 digits, as text and as a number, batch and stream alike") {
+    val max = "18446744073709551615"
+    for (r <- loadLines(Seq(s"""{"u": $max}""", s"""{"u": "$max"}""", """{"u": 7}"""), Seq("u" -> "uint64")))
+      assert(r == Right(Seq(max, max, "7")))
+    // 21 digits do not fit: both paths raise
+    for (r <- loadLines(Seq("""{"u": 184467440737095516150}"""), Seq("u" -> "uint64")))
+      assert(r.isLeft, r)
+    import spark.implicits._
+    val schema = graft.schema.InferredSchema("t", Vector("u" -> graft.types.AType.AUInt64))
+    val text = Normalizer(schema, Seq(max).toDF("u")).collect().map(_.get(0).toString)
+    val typed = Normalizer(schema, Seq(max).toDF("u").select(col("u").cast(DecimalType(20, 0)).as("u")))
+      .collect().map(_.get(0).toString)
+    assert(text.toSeq == Seq(max) && typed.toSeq == Seq(max))
   }
 
   test("Engine.run reads its input once") {

@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** A caller's own session — built without [[GraftExtensions]] and with
   * no `GraftFunctions.register` call — must still run the engine: the
   * public entry points install its functions on it. Registry queries
-  * cover eight functions; py_norm and parse_ejson, which only the EL
-  * path calls, go through `Normalizer.apply` and the EL read
-  * (`ExtendedJsonSource.read`). The plans together must call all ten. */
+  * cover eight functions; py_cast (Normalizer's text cast) and
+  * parse_ejson (the EL reader) go through `Normalizer.apply` and the EL
+  * read (`ExtendedJsonSource.read`). The plans together must call all
+  * ten. */
 class FunctionInstallSpec extends AnyFunSuite {
 
   test("registry queries run on a session built without the extension") {

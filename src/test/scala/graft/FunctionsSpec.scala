@@ -74,14 +74,17 @@ class FunctionsSpec extends SparkSuite {
     assert(df.agg(min("d")).first().getDouble(0) >= 0.0)
   }
 
-  test("py_norm stays inside whole-stage codegen and matches the Python grammars") {
+  test("py_cast stays inside whole-stage codegen and matches the Python grammars") {
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr("CAST(doc_id AS STRING) AS s")
-      .selectExpr("py_norm(s, 'int') AS n", "py_norm(s, 'iso') AS d")
+      .selectExpr("s", "py_cast(s, 'int64', 'strict', 's') AS n")
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.linesIterator.exists(l => l.contains("py_norm") && l.contains("*(")), plan)
-    val row = df.orderBy("n").first()
-    assert(row.getString(0) != null && row.isNullAt(1)) // digits: int yes, iso no
+    assert(plan.linesIterator.exists(l => l.contains("py_cast") && l.contains("*(")), plan)
+    assert(!df.orderBy("n").first().isNullAt(1)) // digits: int yes
+    // iso no: a literal Python rejects raises, naming the column
+    val e = intercept[Exception](df.selectExpr("py_cast(s, 'date32[day]', 'strict', 's') AS d").collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("ValueError: invalid iso literal for column s: '")), e)
   }
 
   test("count_in_set matches the IN-list HOF filter; sum_strlen matches the fold") {

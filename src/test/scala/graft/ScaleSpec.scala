@@ -97,7 +97,7 @@ class ScaleSpec extends SparkSuite {
       assert(r.getLong(1) != 0L)
       // the whole table, not only the two called above
       assert(graft.functions.GraftFunctions.table.map(_._1.funcName).toSet == Set("dot_product",
-        "rolling_hash", "count_in_set", "sum_strlen", "simhash64", "py_norm", "minhash_sig", "token_tf",
+        "rolling_hash", "count_in_set", "sum_strlen", "simhash64", "py_cast", "minhash_sig", "token_tf",
         "intersect_count", "parse_ejson"))
       graft.functions.GraftFunctions.table.foreach { case (id, _, _) =>
         assert(s2.sessionState.functionRegistry.functionExists(id), id)

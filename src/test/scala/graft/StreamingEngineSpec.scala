@@ -71,11 +71,11 @@ class StreamingEngineSpec extends SparkSuite {
         None))
     assert(read(ABool, "true", "false", "1", "2", "null", "\"yes\"") ==
       Seq(Some(true), Some(false), Some(true), Some(false), None, Some(true)))
-    // as a string: a string's own text, a wrapper's text, any other
-    // token's JSON as written
+    // as a string: a string's own text ('' is null at the top level), a
+    // wrapper's text, any other token's JSON as written
     assert(read(AString, "\"\"", "\"δέλτα\"", """{"$oid": "65a1b2c3d4e5f60718293a4b"}""",
       """{"$numberLong": "8589934592"}""", "42", "true", "null", "[1]", """{"a": 1}""", """{"$date": 0}""") ==
-      Seq(Some(""), Some("δέλτα"), Some("65a1b2c3d4e5f60718293a4b"), Some("8589934592"), Some("42"), Some("true"),
+      Seq(None, Some("δέλτα"), Some("65a1b2c3d4e5f60718293a4b"), Some("8589934592"), Some("42"), Some("true"),
         None, Some("[1]"), Some("""{"a": 1}"""), Some("""{"$date": 0}""")))
     // $date (millis, {$numberLong}, ISO) and $binary ({base64}, legacy text)
     val dates = read(ATimestampS, """{"$date": 1709287200123}""",
@@ -118,10 +118,9 @@ class StreamingEngineSpec extends SparkSuite {
     assert(err.isInstanceOf[org.apache.spark.SparkThrowable], err.getClass.getName)
   }
 
-  test("parse_ejson accepts Python literal grammar numerics like the batch py_norm path") {
+  test("parse_ejson accepts Python literal grammar numerics like Normalizer's text cast") {
     // underscored, Unicode-digit, and Unicode-whitespace-padded ints —
-    // all valid Python int() literals the batch path accepts via
-    // py_norm/parsePythonInt
+    // all valid Python int() literals (TypeLattice.parsePythonInt)
     val ints = readTokens(AInt64, Seq("1_0", "٤٢", "  42  ").map(s => s"\"$s\""))
       .collect().map(_.getLong(0))
     assert(ints.toSeq == Seq(10L, 42L, 42L))
