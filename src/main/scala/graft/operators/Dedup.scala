@@ -94,6 +94,24 @@ object Dedup {
     sh AS (SELECT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS s
            FROM toksc, UNNEST(range(1, len(w) - 1)) AS t(i))"""
 
+  /** Oracle CTEs of the rare-shingle candidate chain shared by the q70
+    * (Jaccard) and q128 (containment) oracles, after [[shingleCte]]:
+    * `dsh`, document frequencies `df`, the rare (df <= 8) shingles
+    * `rare`, the doc pairs sharing >= 2 of them `cand(ida, idb)`,
+    * `card(doc_id, n)` and the exact intersections `inter(ida, idb, i)`. */
+  private[operators] val rareShingleInterCteSql: String = """
+        dsh AS (SELECT DISTINCT doc_id, s FROM sh),
+        df AS (SELECT s, COUNT(*) AS dfc FROM dsh GROUP BY s),
+        rare AS (SELECT dsh.doc_id, dsh.s FROM dsh JOIN df ON dsh.s = df.s WHERE df.dfc <= 8),
+        cand AS (SELECT a.doc_id AS ida, b.doc_id AS idb
+                 FROM rare a JOIN rare b ON a.s = b.s AND a.doc_id < b.doc_id
+                 GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+        card AS (SELECT doc_id, COUNT(*) AS n FROM dsh GROUP BY doc_id),
+        inter AS (SELECT c.ida, c.idb, COUNT(*) AS i FROM cand c
+                  JOIN dsh x ON x.doc_id = c.ida
+                  JOIN dsh y ON y.doc_id = c.idb AND x.s = y.s
+                  GROUP BY c.ida, c.idb)"""
+
   /** Oracle CTEs `dsh(doc_id, s)` / `card(doc_id, n)` — the distinct
     * per-doc shingle sets and their cardinalities, shared by the q27
     * LSH chain, q125's exact chain and q164's recall audit. */

@@ -120,7 +120,7 @@ object Extras {
   /** Oracle twin of [[phashHashes]], ending in
     * `hashes(media_id, u, phash)` (u = the unsigned 64-bit value, for
     * half-band extraction). Shared by the q195 and q197 oracles. */
-  private val phashOracleCte: String = """params AS (
+  private val phashOracleCte: String = s"""params AS (
           SELECT doc_id AS media_id, (doc_id // 5) // 2 AS b, (doc_id // 5) % 2 AS variant
           FROM documents WHERE doc_id % 5 = 0),
         cells AS (
@@ -135,17 +135,7 @@ object Extras {
           SELECT a.media_id, a.i, CASE WHEN a.v > n.v THEN 1 ELSE 0 END AS bit
           FROM cells a JOIN cells n ON n.media_id = a.media_id
             AND n.i = (a.i - a.i % 8) + (a.i % 8 + 1) % 8),
-        uh AS (
-          SELECT media_id,
-            CAST(SUM(CASE WHEN i < 32 THEN bit * (CAST(1 AS BIGINT) << CAST(i AS INT)) ELSE 0 END) AS HUGEINT) AS lo,
-            CAST(SUM(CASE WHEN i >= 32 THEN bit * (CAST(1 AS BIGINT) << CAST(i - 32 AS INT)) ELSE 0 END) AS HUGEINT) AS hi
-          FROM bits GROUP BY media_id),
-        hashes AS (
-          SELECT media_id, hi * 4294967296 + lo AS u,
-            CAST(CASE WHEN hi * 4294967296 + lo >= CAST(9223372036854775808 AS HUGEINT)
-                 THEN hi * 4294967296 + lo - CAST(18446744073709551616 AS HUGEINT)
-                 ELSE hi * 4294967296 + lo END AS BIGINT) AS phash
-          FROM uh)"""
+        $packHash64CteSql"""
 
   def queries: Vector[Q] = Vector(
     // ---- A5: distinct partition values ------------------------------

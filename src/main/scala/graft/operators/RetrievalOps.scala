@@ -225,6 +225,28 @@ object RetrievalOps {
       .agg((count(col("id2")) + 1).cast(IntegerType).as(as))
   }
 
+  /** q201's hybrid retrieval before its cut: the BM25 leg (q145's
+    * scoring over [[QueryTerms]]) and the hashed dense leg, each
+    * bounded to its top-50 and ranked by [[rankBounded]], fused by
+    * Reciprocal Rank Fusion (k = 60) over a full outer join on doc_id
+    * into `(doc_id, r_sparse, r_dense, rrf)` — a doc missing from a
+    * leg has a null rank there and gets nothing from it. Shared by
+    * q201 and q216's retrieve stage; each caller takes its own top-k. */
+  private def rrfFused(s: SparkSession, dir: String, tf: DataFrame): DataFrame = {
+    import s.implicits._
+    val sparseTop = bm25PerDoc(tf.where($"tok".isin(QueryTerms: _*)),
+        bm25Consts(s, dir))
+      .orderBy($"bm25".desc, $"doc_id").limit(50)
+    val sp = rankBounded(sparseTop, "bm25", "r_sparse")
+    val denseTop = denseScored(s, tf)
+      .orderBy($"cos".desc, $"doc_id").limit(50)
+    val dn = rankBounded(denseTop, "cos", "r_dense")
+    sp.join(dn, Seq("doc_id"), "full_outer")
+      .withColumn("rrf", round(
+        coalesce(lit(1.0) / (lit(60) + $"r_sparse"), lit(0.0)) +
+          coalesce(lit(1.0) / (lit(60) + $"r_dense"), lit(0.0)), 6))
+  }
+
   /** The hashing-trick dense leg (q201's contract): every doc with a
     * nonzero dot against the hashed [[QueryTerms]] vector, scored by
     * 1e-6-rounded cosine — integer arithmetic until one sqrt+divide.
@@ -930,21 +952,7 @@ object RetrievalOps {
     Q("q201_hybrid_retrieval",
       (s, dir) => {
         import s.implicits._
-        val tf = docTf(s, dir)
-        // ---- sparse leg: q145's BM25, top-50 with ranks -------------
-        val sparseTop = bm25PerDoc(tf.where($"tok".isin(QueryTerms: _*)),
-            bm25Consts(s, dir))
-          .orderBy($"bm25".desc, $"doc_id").limit(50)
-        val sp = rankBounded(sparseTop, "bm25", "r_sparse")
-        // ---- dense leg: hashed-feature cosine, top-50 with ranks ----
-        val denseTop = denseScored(s, tf)
-          .orderBy($"cos".desc, $"doc_id").limit(50)
-        val dn = rankBounded(denseTop, "cos", "r_dense")
-        // ---- RRF fusion over the two bounded candidate lists --------
-        sp.join(dn, Seq("doc_id"), "full_outer")
-          .withColumn("rrf", round(
-            coalesce(lit(1.0) / (lit(60) + $"r_sparse"), lit(0.0)) +
-              coalesce(lit(1.0) / (lit(60) + $"r_dense"), lit(0.0)), 6))
+        rrfFused(s, dir, docTf(s, dir))
           .orderBy($"rrf".desc, $"doc_id").limit(10)
           .select($"doc_id", $"r_sparse", $"r_dense", $"rrf")
       },
@@ -1367,19 +1375,9 @@ object RetrievalOps {
         val budget = 100L
         val tf = docTf(s, dir)
         // stage 1 — retrieve (q201's fusion, top-20)
-        val sparseTop = bm25PerDoc(tf.where($"tok".isin(QueryTerms: _*)),
-            bm25Consts(s, dir))
-          .orderBy($"bm25".desc, $"doc_id").limit(50)
-        val sp = rankBounded(sparseTop, "bm25", "r_sparse")
-        val denseTop = denseScored(s, tf)
-          .orderBy($"cos".desc, $"doc_id").limit(50)
-        val dn = rankBounded(denseTop, "cos", "r_dense")
-        val fused = sp.join(dn, Seq("doc_id"), "full_outer")
-          .withColumn("rel", round(
-            coalesce(lit(1.0) / (lit(60) + $"r_sparse"), lit(0.0)) +
-              coalesce(lit(1.0) / (lit(60) + $"r_dense"), lit(0.0)), 6))
-          .orderBy($"rel".desc, $"doc_id").limit(20)
-          .select($"doc_id", $"rel")
+        val fused = rrfFused(s, dir, tf)
+          .orderBy($"rrf".desc, $"doc_id").limit(20)
+          .select($"doc_id", $"rrf".as("rel"))
           .localCheckpoint(true)
         // stage 2 — diversify: pairwise cosines of the candidates'
         // hashed vectors (≤ 20 docs × ≤ 16 dims), then the q203 greedy

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -317,9 +317,6 @@ object Similarity {
       (reps, c1, nlist)
     }
 
-  /** Oracle twin of [[sqrtnIndex]]+[[sqrtnAssign]], ending in
-    * `asg(vec_id, cell)` (plus `nl(nlist)`, `e2`, `c1n` in scope).
-    * Must follow `$prepCte,`. Shared by the q168 and q178 oracles. */
   /** Oracle argmin: nearest centroid in `cents` per `src` vector, the
     * q64 (round-6, cid-tiebreak) contract — shared by the sqrtn chain
     * and q189's old/new split assignments. */
@@ -331,24 +328,116 @@ object Similarity {
                 c.cid) AS rk
             FROM $src CROSS JOIN $cents c) t WHERE rk = 1"""
 
-  private val sqrtnAsgCteSql: String = {
-    val argmin = ivfArgminSql _
-    s"""nl AS (SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS nlist FROM n),
-        e2 AS (SELECT vec_id, v, nrm,
-                 list_sum(list_transform(v, x -> x * x)) AS vv FROM n),
+  /** Oracle twin of [[lloydOnce]] over the `src(vec_id, v, vv)` CTE
+    * with its cell count in `nl(nlist)`: the vec_id < nlist seed `c0`,
+    * one exact-decimal refinement, ending in `c1n(cid, cv, cc)`. */
+  private def lloydCteSql(src: String, nl: String): String = s"""
         c0 AS (SELECT vec_id AS cid, v AS cv, vv AS cc
-               FROM e2, nl WHERE vec_id < nl.nlist),
-        s0 AS MATERIALIZED (${argmin("e2", "c0")}),
-        dims AS (SELECT s0.cell, i - 1 AS dim, e2.v[i] AS x
-                 FROM s0 JOIN e2 USING (vec_id),
-                      UNNEST(range(1, len(e2.v) + 1)) AS t(i)),
+               FROM $src, $nl WHERE vec_id < $nl.nlist),
+        s0 AS MATERIALIZED (${ivfArgminSql(src, "c0")}),
+        dims AS (SELECT s0.cell, i - 1 AS dim, $src.v[i] AS x
+                 FROM s0 JOIN $src USING (vec_id),
+                      UNNEST(range(1, len($src.v) + 1)) AS t(i)),
         means AS (SELECT cell, dim, ${davgSql("x", 15)} AS m
                   FROM dims GROUP BY cell, dim),
         c1 AS (SELECT cell AS cid, list(m ORDER BY dim) AS cv FROM means GROUP BY cell),
         c1n AS MATERIALIZED (SELECT cid, cv,
-                 list_sum(list_transform(cv, x -> x * x)) AS cc FROM c1),
-        asg AS MATERIALIZED (${argmin("e2", "c1n")})"""
+                 list_sum(list_transform(cv, x -> x * x)) AS cc FROM c1)"""
+
+  /** Oracle twin of [[sqrtnIndex]]+[[sqrtnAssign]], ending in
+    * `asg(vec_id, cell)` (plus `nl(nlist)`, `e2`, `c1n` in scope).
+    * Must follow `$prepCte,`. Shared by the q168 and q178 oracles. */
+  private val sqrtnAsgCteSql: String =
+    s"""nl AS (SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS nlist FROM n),
+        e2 AS (SELECT vec_id, v, nrm,
+                 list_sum(list_transform(v, x -> x * x)) AS vv FROM n),
+        ${lloydCteSql("e2", "nl")},
+        asg AS MATERIALIZED (${ivfArgminSql("e2", "c1n")})"""
+
+  /** Per-cell census under a tombstone set (q196, q205, q214):
+    * (cell, sz_total, sz_live) over the assignment `asg(vec_id, cell)`
+    * with the `tomb(vec_id)` members excluded from sz_live (0 when a
+    * cell has no live member). */
+  private def cellCensus(asg: DataFrame, tomb: DataFrame): DataFrame = {
+    val total = asg.groupBy(col("cell")).agg(count(lit(1)).as("sz_total"))
+    val live = asg.join(tomb, Seq("vec_id"), "left_anti")
+      .groupBy(col("cell")).agg(count(lit(1)).as("sz_live"))
+    total.join(live, Seq("cell"), "left").na.fill(0L, Seq("sz_live"))
   }
+
+  /** Oracle twin of [[cellCensus]]: needs `asg` and `tomb(vec_id)`,
+    * ends in `census(cell, sz_total, sz_live)`. */
+  private val cellCensusSql: String = """
+        total AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS sz_total FROM asg GROUP BY cell),
+        live AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS sz_live FROM asg
+                 WHERE vec_id NOT IN (SELECT vec_id FROM tomb) GROUP BY cell),
+        census AS (SELECT t.cell, t.sz_total,
+                     COALESCE(l.sz_live, CAST(0 AS BIGINT)) AS sz_live
+                   FROM total t LEFT JOIN live l ON l.cell = t.cell)"""
+
+  /** Oracle twin of the q205 compaction move, shared with q214: the
+    * surviving centroids `surv`, the live assignments `lasg`, the live
+    * members of dissolved cells `movers` and their reassignment
+    * `moved(vec_id, cell)`. Needs `comp(cell)`, `tomb(vec_id)`, `asg`,
+    * `e2` and `c1n` in scope. */
+  private val compactionMovesSql: String = s"""
+        surv AS (SELECT * FROM c1n WHERE cid NOT IN (SELECT cell FROM comp)),
+        lasg AS (SELECT * FROM asg
+                 WHERE vec_id NOT IN (SELECT vec_id FROM tomb)),
+        movers AS (SELECT e2.* FROM e2 JOIN lasg l ON l.vec_id = e2.vec_id
+                   WHERE l.cell IN (SELECT cell FROM comp)),
+        moved AS (${ivfArgminSql("movers", "surv")})"""
+
+  /** Oracle twin of q189's old-slice index (`sqrtn-index-old`), shared
+    * with q223: the oldest 90% `e2o` (split `spl(n0)`), the newest
+    * `e2n`, and the Lloyd chain trained on `e2o` alone. */
+  private val oldIndexCteSql: String = s"""
+        e2o AS (SELECT e2.* FROM e2, spl WHERE e2.vec_id < spl.n0),
+        e2n AS (SELECT e2.* FROM e2, spl WHERE e2.vec_id >= spl.n0),
+        nlo AS (SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS nlist FROM e2o),
+        ${lloydCteSql("e2o", "nlo")}"""
+
+  /** [[sqrtnAsgCteSql]]'s index over an `e2(vec_id, v, nrm, vv)` CTE
+    * already in scope — the media oracles' corpus. */
+  private val e2IndexCteSql: String =
+    s"""nl AS (SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS nlist FROM e2),
+        ${lloydCteSql("e2", "nl")},
+        asg AS MATERIALIZED (${ivfArgminSql("e2", "c1n")})"""
+
+  /** Oracle twin of [[mediaIvfIndex]]'s decoded corpus: opens the WITH
+    * and ends in `fv(vec_id, v)` — each feature EXACTLY gray/255,
+    * REAL-cast then double-widened like the decoder's floats. */
+  private val mediaFvCteSql: String = """
+        WITH params AS (
+          SELECT doc_id // 5 AS vec_id, (doc_id // 5) // 2 AS b,
+            (doc_id // 5) % 2 AS variant
+          FROM documents WHERE doc_id % 5 = 0),
+        cells AS (
+          SELECT vec_id, i,
+            8 * ((b * 37
+                  + (CASE WHEN i = 1 THEN 0 ELSE i END) * 11
+                  + ((CASE WHEN i = 1 THEN 0 ELSE i END)
+                     * (CASE WHEN i = 1 THEN 0 ELSE i END)) % 7) % 32)
+            + CASE WHEN variant = 1 AND i = 0 THEN 3 ELSE 0 END AS g
+          FROM params, UNNEST(range(64)) AS t(i)),
+        fv AS (SELECT vec_id,
+                 list(CAST(CAST(g / 255.0 AS REAL) AS DOUBLE) ORDER BY i) AS v
+               FROM cells GROUP BY vec_id)"""
+
+  /** Oracle twin of [[mediaLayeredIndex]]'s rep collapse: after
+    * [[mediaFvCteSql]], ends in `reps(vec_id, v, copies)`. */
+  private val mediaRepsCteSql: String = s"""$mediaFvCteSql,
+        reps AS (SELECT MIN(vec_id) AS vec_id, v,
+                   CAST(COUNT(*) AS BIGINT) AS copies
+                 FROM fv GROUP BY v)"""
+
+  /** Oracle twin of [[mediaLayeredIndex]] + [[sqrtnAssign]]: the reps
+    * as `e2` (copies carried), their index and `asg`. */
+  private val mediaRepIndexCteSql: String = s"""$mediaRepsCteSql,
+        e2 AS MATERIALIZED (SELECT vec_id, v, copies,
+                 sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm,
+                 list_sum(list_transform(v, x -> x * x)) AS vv FROM reps),
+        $e2IndexCteSql"""
 
   // ---- product quantization (q179) ---------------------------------
   // m contiguous subspaces of dsub dims, k codes per subspace. The
@@ -418,6 +507,18 @@ object Similarity {
       .localCheckpoint(true)
   }
 
+  /** The query-side ADC distance table (q179, q185): each probe
+    * query's (vec_id < 50) subvector against every code of its
+    * subspace, as the integer-scaled squared L2 `si` = round(d2·1e6)
+    * of the 1e-6-rounded d2 — (qid, s, cid, si, …). */
+  private def pqDistTable(sub: DataFrame, book: DataFrame): DataFrame =
+    sub.filter(col("vec_id") < 50)
+      .select(col("vec_id").as("qid"), col("s"), col("sv").as("qv"), col("ss").as("qq"))
+      .join(broadcast(book), Seq("s"))
+      .withColumn("si",
+        round(round(col("qq") - lit(2.0) * expr("dot_product(qv, cv)") + col("cc"), 6) * 1e6)
+          .cast(LongType))
+
   /** The trained PQ pair (subvector frame, refined codebook) shared by
     * q179 (ADC recall audit) and q185 (IVF-PQ composition), memoized
     * per (session, dir) by the [[sqrtnIndex]] discipline: one codebook
@@ -473,6 +574,145 @@ object Similarity {
   }
   private val pqCteSql: String = pqCteSqlP("")
 
+  // ---- the IVF probe-and-recall audit: ONE probe ranking, ONE
+  // recall-by-nprobe tail and ONE cosine truth, with their oracle
+  // twins, for every probed serve (q137, q168, q213-q215, q217, q220
+  // and the IVF-PQ probe frame) — an edit to the audit is made once.
+
+  /** The IVF probe ranking every probed audit shares: each query row
+    * (qid, av, its squared norm `qq`, …) × the broadcast centroid
+    * frame (`key`, cv, cc), ranked by the q64 distance contract
+    * (1e-6-rounded expanded-form d2, `key` tiebreak) and cut at
+    * probe_rank ≤ 3. Returns every column of both sides plus d2 and
+    * probe_rank; callers select what they carry on. */
+  private def probeRanks(q: DataFrame, cents: DataFrame,
+                         qq: String = "vv", key: String = "cell"): DataFrame = {
+    val pw = Window.partitionBy(col("qid")).orderBy(col("d2"), col(key))
+    q.crossJoin(broadcast(cents))
+      .withColumn("d2",
+        round(col(qq) - lit(2.0) * expr("dot_product(av, cv)") + col("cc"), 6))
+      .withColumn("probe_rank", row_number().over(pw))
+      .filter(col("probe_rank") <= 3)
+  }
+
+  /** Oracle twin of [[probeRanks]] over the trained cells: needs
+    * `qv(qid, av, qq)` and `cents(cid, cv, cc)` in scope, ends in
+    * `pr(qid, cell, probe_rank)`. */
+  private def probeCteSql(cents: String, qq: String = "vv"): String = s"""
+        pr AS (SELECT qid, cell, probe_rank FROM (
+                 SELECT q.qid, c.cid AS cell,
+                   ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
+                     ROUND(q.$qq - 2.0 * list_sum([q.av[i] * c.cv[i] for i in range(1, len(q.av) + 1)]) + c.cc, 6),
+                     c.cid) AS probe_rank
+                 FROM qv q CROSS JOIN $cents c) t
+               WHERE probe_rank <= 3)"""
+
+  /** The recall-by-nprobe audit over scored probe candidates (qid,
+    * cid, probe_rank, cosr, …): a candidate found at probe_rank p
+    * counts at every level np ≥ p (one sequence() explode, so each
+    * pair is scored once), each level's top-5 per query (cosr DESC,
+    * cid) is matched left-semi against the truth pairs `exact(eqid,
+    * ecid)`, and each level publishes nprobe, the `lead` columns,
+    * n_queries, the `vol` aggregates, hits and recall@5, in nprobe
+    * order. */
+  private[graft] def nprobeRecall(cand: DataFrame, exact: DataFrame,
+      vol: Seq[Column] = Seq(count(lit(1)).as("candidates")),
+      lead: Seq[Column] = Nil): DataFrame = {
+    val lv = cand.withColumn("np", explode(expr("sequence(probe_rank, 3)")))
+    val w = Window.partitionBy(col("np"), col("qid")).orderBy(col("cosr").desc, col("cid"))
+    val hits = lv.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
+      .select(col("np"), col("qid"), col("cid"))
+      .join(exact, col("qid") === col("eqid") && col("cid") === col("ecid"), "left_semi")
+      .groupBy(col("np")).agg(count(lit(1)).as("hits"))
+    val levels = lv.groupBy(col("np"))
+      .agg(vol.head, vol.tail :+ countDistinct(col("qid")).as("n_queries"): _*)
+    val volCols = levels.columns.filterNot(Set("np", "n_queries")).map(col).toSeq
+    levels.join(hits, Seq("np"), "left")
+      .select((col("np").cast(IntegerType).as("nprobe") +: lead) ++
+        (col("n_queries") +: volCols) ++ recallCols("hits"): _*)
+      .orderBy(col("nprobe"))
+  }
+
+  /** hits (null as 0) and recall@5 = hits / (n_queries · 5), from the
+    * per-level hit count column `h`. */
+  private def recallCols(h: String): Seq[Column] = Seq(
+    coalesce(col(h), lit(0L)).as("hits"),
+    round(coalesce(col(h), lit(0L)).cast(DoubleType) / (col("n_queries") * 5), 6)
+      .as("recall_at_5"))
+
+  /** recall@5 = hits / (n_queries · 5) over a non-null `hits`. */
+  private def recallAt5: Column =
+    round(col("hits").cast(DoubleType) / (col("n_queries") * 5), 6).as("recall_at_5")
+
+  /** Oracle twin of [[recallCols]] over `vol v LEFT JOIN hits h`. */
+  private val recallColsSql: String = """COALESCE(h.hits, CAST(0 AS BIGINT)) AS hits,
+          ROUND(CAST(COALESCE(h.hits, 0) AS DOUBLE) / (v.n_queries * 5), 6) AS recall_at_5"""
+
+  /** Oracle twin of [[nprobeRecall]]'s ranking: `top(np, qid, cid)`
+    * over the level CTE `lv`, and `hits(np, hits)` — `truth` joins
+    * `top t` to the truth pairs. */
+  private def nprobeHitsSql(lv: String, truth: String): String = s"""
+        top AS (SELECT np, qid, cid FROM (SELECT *,
+                  ROW_NUMBER() OVER (PARTITION BY np, qid ORDER BY cosr DESC, cid) AS rk
+                FROM $lv) t WHERE rk <= 5),
+        hits AS (SELECT t.np, CAST(COUNT(*) AS BIGINT) AS hits
+                 FROM top t JOIN $truth
+                 GROUP BY t.np)"""
+
+  /** Oracle twin of [[nprobeRecall]] with the default volume: needs
+    * `cand(qid, probe_rank, cid, cosr)`; explodes it into the level
+    * CTE `lv`, ends in `hits(np, hits)` and `vol(np, candidates,
+    * n_queries)` — the caller SELECTs over `vol v LEFT JOIN hits h`. */
+  private def nprobeRecallSql(lv: String, truth: String): String = s"""
+        $lv AS (SELECT qid, cid, cosr, np
+               FROM cand, UNNEST(range(probe_rank, 4)) AS t(np)),
+        ${nprobeHitsSql(lv, truth)},
+        vol AS (SELECT np, CAST(COUNT(*) AS BIGINT) AS candidates,
+                  CAST(COUNT(DISTINCT qid) AS BIGINT) AS n_queries
+                FROM $lv GROUP BY np)"""
+
+  /** Oracle probed candidates `cand(qid, probe_rank, cid, cosr)`: the
+    * `asg` members of each probed cell in `pr`, self excluded, scored
+    * against `qv` by 1e-6-rounded cosine over `e2`. */
+  private val probedCandSql: String = """
+        cand AS (SELECT p.qid, p.probe_rank, b.vec_id AS cid,
+                   ROUND(list_sum([q.av[i] * b.v[i] for i in range(1, len(q.av) + 1)]) / (q.na * b.nrm), 6) AS cosr
+                 FROM pr p
+                 JOIN qv q ON q.qid = p.qid
+                 JOIN asg a ON a.cell = p.cell
+                 JOIN e2 b ON b.vec_id = a.vec_id AND b.vec_id <> p.qid)"""
+
+  /** `truth` join of [[nprobeHitsSql]] against [[knnTop5Cte]]'s `nn`. */
+  private val nnTruth = "nn ON nn.qid = t.qid AND nn.cid = t.cid"
+
+  /** Exact cosine top-5 truth (eqid, ecid) of the query frame `q`
+    * (qid, av, na, …) over `corpus` (cid, bv, nb, …), `exclude`
+    * dropping each query's own vector: q34's brute class,
+    * 1e-6-rounded cosine DESC with cid tiebreak, eagerly pinned. */
+  private def cosineTruth(q: DataFrame, corpus: DataFrame, exclude: Column): DataFrame = {
+    val ew = Window.partitionBy(col("qid")).orderBy(col("ecos").desc, col("cid"))
+    broadcast(q).join(corpus, exclude)
+      .withColumn("ecos", round(expr(dotExpr) / (col("na") * col("nb")), 6))
+      .withColumn("rk", row_number().over(ew)).filter(col("rk") <= 5)
+      .select(col("qid").as("eqid"), col("cid").as("ecid"))
+      .localCheckpoint(true)
+  }
+
+  /** Oracle twin of [[cosineTruth]]: `et(eqid, ecid)` for `qv(qid, av,
+    * na, …)` over `e2(vec_id, v, nrm)`, excluding `b.vec_id =
+    * q.$self`. */
+  private def cosineTruthSql(self: String): String = s"""
+        et AS (SELECT qid AS eqid, bvid AS ecid FROM (
+                 SELECT q.qid, b.vec_id AS bvid,
+                   ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
+                     ROUND(list_sum([q.av[i] * b.v[i] for i in range(1, len(q.av) + 1)]) / (q.na * b.nrm), 6) DESC,
+                     b.vec_id) AS rk
+                 FROM qv q JOIN e2 b ON b.vec_id <> q.$self) s
+               WHERE rk <= 5)"""
+
+  /** `truth` join of [[nprobeHitsSql]] against [[cosineTruthSql]]. */
+  private val etTruth = "et ON et.eqid = t.qid AND et.ecid = t.cid"
+
   // ---- IVF-PQ composition plumbing shared by q185 (raw PQ) and q186
   // (residual PQ) — one source of truth for the probe frame, the
   // serve tail, and their oracle twins, so the two compositions
@@ -480,32 +720,20 @@ object Similarity {
   // cannot silently diverge them.
 
   /** Probe frame (qid, cell, probe_rank≤3): queries (vec_id < 50) ×
-    * broadcast trained centroids, ranked by the q64 distance
-    * contract (1e-6-rounded expanded-form d2, cell-id tiebreak). */
+    * broadcast trained centroids through [[probeRanks]]. */
   private def ivfProbes(e: DataFrame, c1: DataFrame): DataFrame = {
     import e.sparkSession.implicits._
     val q = e.filter($"vec_id" < 50)
       .select($"vec_id".as("qid"), $"v".as("av"), $"vv".as("qq"))
-    val pw = Window.partitionBy($"qid").orderBy($"d2", $"cell")
-    q.crossJoin(broadcast(c1.withColumnRenamed("cid", "cell")))
-      .withColumn("d2",
-        round($"qq" - lit(2.0) * expr("dot_product(av, cv)") + $"cc", 6))
-      .withColumn("probe_rank", row_number().over(pw))
-      .filter($"probe_rank" <= 3)
+    probeRanks(q, c1.withColumnRenamed("cid", "cell"), qq = "qq")
       .select($"qid", $"cell", $"probe_rank")
   }
 
   /** Oracle twin of [[ivfProbes]]: needs `e2`/`c1n` in scope, ends in
     * `pr(qid, cell, probe_rank)` (with `qv` also usable downstream). */
-  private val ivfProbesCteSql: String = """
+  private val ivfProbesCteSql: String = s"""
         qv AS (SELECT vec_id AS qid, v AS av, vv AS qq FROM e2 WHERE vec_id < 50),
-        pr AS (SELECT qid, cell, probe_rank FROM (
-                 SELECT q.qid, c.cid AS cell,
-                   ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-                     ROUND(q.qq - 2.0 * list_sum([q.av[i] * c.cv[i] for i in range(1, len(q.av) + 1)]) + c.cc, 6),
-                     c.cid) AS probe_rank
-                 FROM qv q CROSS JOIN c1n c) t
-               WHERE probe_rank <= 3)"""
+        ${probeCteSql("c1n", qq = "qq")}"""
 
   /** The exact full-corpus L2 top-5 per query (qid < 50) — the ground
     * truth every IVF-PQ audit compares against (q185/q186 via
@@ -529,6 +757,15 @@ object Similarity {
         .select($"qid".as("eqid"), $"cid".as("ecid"))
         .localCheckpoint(true)
     }
+
+  /** Oracle twin of [[exactTop5]]: `etop(qid, cid)` over `e2`. */
+  private val exactTop5Sql: String = """
+        ex AS (SELECT a.vec_id AS qid, b.vec_id AS cid,
+                 ROUND(a.vv - 2.0 * list_sum([a.v[i] * b.v[i] for i in range(1, len(a.v) + 1)]) + b.vv, 6) AS d2
+               FROM e2 a JOIN e2 b ON b.vec_id <> a.vec_id WHERE a.vec_id < 50),
+        etop AS (SELECT qid, cid FROM (SELECT qid, cid,
+                   ROW_NUMBER() OVER (PARTITION BY qid ORDER BY d2, cid) AS rk
+                 FROM ex) t WHERE rk <= 5)"""
 
   /** Serve tail: ADC-scored candidate pairs (qid, cid, probe_rank,
     * adc) → per-nprobe ADC shortlist-50 (adc then cid ties) → exact
@@ -669,22 +906,31 @@ object Similarity {
       .groupBy($"qid", $"cid", $"probe_rank").agg(sum($"si").as("adc"))
   }
 
-  /** Oracle twin of [[residualAdcPairs]]: must follow `$prepCte,` and
-    * `$sqrtnAsgCteSql,`; ends in `adc(qid, cid, probe_rank, adc)`. */
-  private val residualAdcCteSql: String = s"""
+  /** Oracle residual corpus `rn(vec_id, v)`: each vector minus its
+    * assigned centroid. Needs `e2`, `asg`, `c1n`. */
+  private val residualRnCteSql: String = """
         rn AS MATERIALIZED (SELECT e2.vec_id,
                [e2.v[i] - c.cv[i] for i in range(1, len(e2.v) + 1)] AS v
              FROM e2 JOIN asg a ON a.vec_id = e2.vec_id
-             JOIN c1n c ON c.cid = a.cell),
-        ${pqCteSqlP("pq_", "rn")},
-        $ivfProbesCteSql,
+             JOIN c1n c ON c.cid = a.cell)"""
+
+  /** Oracle residual serve frames over the probes `pr`: candidate
+    * pairs `candp(qid, cell, cid, probe_rank)` and the query residual
+    * per probed cell `qr(qid, cell, rv)`. */
+  private val residualProbeCteSql: String = s"""$ivfProbesCteSql,
         candp AS (SELECT p.qid, p.cell, a.vec_id AS cid, p.probe_rank
                   FROM pr p JOIN asg a ON a.cell = p.cell
                   WHERE a.vec_id <> p.qid),
         qr AS (SELECT p.qid, p.cell,
                  [q.v[i] - c.cv[i] for i in range(1, len(q.v) + 1)] AS rv
                FROM pr p JOIN e2 q ON q.vec_id = p.qid
-               JOIN c1n c ON c.cid = p.cell),
+               JOIN c1n c ON c.cid = p.cell)"""
+
+  /** Oracle twin of [[residualAdcPairs]]: must follow `$prepCte,` and
+    * `$sqrtnAsgCteSql,`; ends in `adc(qid, cid, probe_rank, adc)`. */
+  private val residualAdcCteSql: String = s"""$residualRnCteSql,
+        ${pqCteSqlP("pq_", "rn")},
+        $residualProbeCteSql,
         qsub AS (SELECT qid, cell, t.s,
                    rv[t.s * $pqDsub + 1 : t.s * $pqDsub + $pqDsub] AS sv
                  FROM qr, UNNEST(range(0, $pqM)) AS t(s)),
@@ -743,7 +989,7 @@ object Similarity {
 
   /** Oracle twin of [[ivfpqTail]]: needs `adc(qid, cid, probe_rank,
     * adc)`, `e2` and `nl` in scope; INCLUDES the final SELECT. */
-  private val ivfpqTailSql: String = """
+  private val ivfpqTailSql: String = s"""
         lv AS (SELECT qid, cid, adc, np
                FROM adc, UNNEST(range(probe_rank, 4)) AS t(np)),
         sl AS (SELECT np, qid, cid FROM (SELECT np, qid, cid,
@@ -757,12 +1003,7 @@ object Similarity {
                  FROM sl s
                  JOIN e2 b ON b.vec_id = s.cid
                  JOIN e2 q ON q.vec_id = s.qid) t WHERE rk <= 5),
-        ex AS (SELECT a.vec_id AS qid, b.vec_id AS cid,
-                 ROUND(a.vv - 2.0 * list_sum([a.v[i] * b.v[i] for i in range(1, len(a.v) + 1)]) + b.vv, 6) AS d2
-               FROM e2 a JOIN e2 b ON b.vec_id <> a.vec_id WHERE a.vec_id < 50),
-        etop AS (SELECT qid, cid FROM (SELECT qid, cid,
-                   ROW_NUMBER() OVER (PARTITION BY qid ORDER BY d2, cid) AS rk
-                 FROM ex) t WHERE rk <= 5),
+        $exactTop5Sql,
         hits AS (SELECT r.np, CAST(COUNT(*) AS BIGINT) AS hits FROM rer r
                  JOIN etop e ON e.qid = r.qid AND e.cid = r.cid GROUP BY r.np),
         slh AS (SELECT s.np, CAST(COUNT(*) AS BIGINT) AS sl_hits FROM sl s
@@ -824,55 +1065,75 @@ object Similarity {
     * fresh-edge pass interleaved. */
   private def buildNswGraphOver(e: DataFrame, c1: DataFrame): (DataFrame, DataFrame) = {
       import e.sparkSession.implicits._
-      val aw = Window.partitionBy($"vec_id").orderBy($"d2", $"cell")
-      val asg2 = e.crossJoin(broadcast(c1.select($"cid".as("cell"), $"cv", $"cc")))
-        .withColumn("d2",
-          round($"vv" - lit(2.0) * expr("dot_product(v, cv)") + $"cc", 6))
-        .withColumn("rk", row_number().over(aw)).filter($"rk" <= 2)
-        .select($"vec_id", $"cell")
+      val asg2 = top2Cells(e, c1)
       val pairs = asg2.select($"cell", $"vec_id".as("src"))
         .join(asg2.select($"cell", $"vec_id".as("dst")), Seq("cell"))
         .filter($"src" =!= $"dst")
         .select($"src", $"dst").distinct()
-      val sv = e.select($"vec_id", $"v", $"nrm")
-      val ew = Window.partitionBy($"src").orderBy($"cosr".desc, $"dst")
-      val topDeg = pairs
-        .join(sv.select($"vec_id".as("src"), $"v".as("av"), $"nrm".as("na")), "src")
-        .join(sv.select($"vec_id".as("dst"), $"v".as("bv"), $"nrm".as("nb")), "dst")
-        .withColumn("cosr", round(expr(dotExpr) / ($"na" * $"nb"), 6))
-        .withColumn("rk", row_number().over(ew)).filter($"rk" <= NswDeg)
-        .select($"src", $"dst", $"cosr")
-      // NSW links are UNDIRECTED (Malkov: insertion adds both arcs) —
-      // symmetrizing is what makes hub vectors findable from their
-      // satellites — but a hub's IN-degree is unbounded, so back-links
-      // are pruned to the best 2·deg per node (HNSW's maxM discipline):
-      // the per-node adjacency is ≤ 2·deg BY CONSTRUCTION, which is
-      // what makes the serve bill O(rounds·beam·deg) a hard bound.
-      val sym = topDeg
-        .union(topDeg.select($"dst".as("src"), $"src".as("dst"), $"cosr"))
-        .distinct()
-      val edges = sym
-        .withColumn("rk", row_number().over(ew)).filter($"rk" <= 2 * NswDeg)
-        .select($"src", $"dst")
-        .localCheckpoint(true)
-      // per-cell ENTRY ANCHORS — the [[NswAnchors]] members nearest
-      // their cell's trained centroid (d2 round-6, id tiebreak): the
-      // medoid-entry discipline (DiskANN/Vamana start at the corpus
-      // medoid; HNSW's layer descent lands near the query before the
-      // layer-0 search). A min-id entry sits an unbounded number of
-      // hops from the query as cells grow — measured at 10×: round-6
-      // recall 0.52 from min-id entries vs 0.87+ from anchors. Stored
-      // with the graph: in production each cell ships its entry list.
-      val aw1 = Window.partitionBy($"cell").orderBy($"d2", $"vec_id")
-      val anchors = sqrtnAssign(e, c1)
-        .join(e.select($"vec_id", $"v", $"vv"), "vec_id")
-        .join(c1.select($"cid".as("cell"), $"cv", $"cc"), "cell")
-        .withColumn("d2",
-          round($"vv" - lit(2.0) * expr("dot_product(v, cv)") + $"cc", 6))
-        .withColumn("rk", row_number().over(aw1)).filter($"rk" <= NswAnchors)
-        .select($"cell", $"vec_id".as("cid"))
-        .localCheckpoint(true)
-      (edges, anchors)
+      val topDeg = nswTopDeg(pairs, e)
+      (nswPrune(bothArcs(topDeg).distinct()), nswAnchors(sqrtnAssign(e, c1), e, c1))
+  }
+
+  /** The 2 nearest trained cells of each `part` vector (d2 round-6,
+    * cell tiebreak): the graph build's blocking key. */
+  private def top2Cells(part: DataFrame, c1: DataFrame): DataFrame = {
+    val aw = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("cell"))
+    part.crossJoin(broadcast(c1.select(col("cid").as("cell"), col("cv"), col("cc"))))
+      .withColumn("d2",
+        round(col("vv") - lit(2.0) * expr("dot_product(v, cv)") + col("cc"), 6))
+      .withColumn("rk", row_number().over(aw)).filter(col("rk") <= 2)
+      .select(col("vec_id"), col("cell"))
+  }
+
+  /** Each src's top-[[NswDeg]] out-edges (src, dst, cosr) among the
+    * candidate `pairs`, scored by 1e-6-rounded cosine over `e`'s
+    * vectors (cosr DESC, dst tiebreak). */
+  private def nswTopDeg(pairs: DataFrame, e: DataFrame): DataFrame = {
+    val sv = e.select(col("vec_id"), col("v"), col("nrm"))
+    val ew = Window.partitionBy(col("src")).orderBy(col("cosr").desc, col("dst"))
+    pairs
+      .join(sv.select(col("vec_id").as("src"), col("v").as("av"), col("nrm").as("na")), "src")
+      .join(sv.select(col("vec_id").as("dst"), col("v").as("bv"), col("nrm").as("nb")), "dst")
+      .withColumn("cosr", round(expr(dotExpr) / (col("na") * col("nb")), 6))
+      .withColumn("rk", row_number().over(ew)).filter(col("rk") <= NswDeg)
+      .select(col("src"), col("dst"), col("cosr"))
+  }
+
+  /** NSW links are UNDIRECTED (Malkov: insertion adds both arcs) —
+    * symmetrizing is what makes hub vectors findable from their
+    * satellites: each (src, dst, cosr) edge and its reverse. */
+  private def bothArcs(top: DataFrame): DataFrame =
+    top.union(top.select(col("dst").as("src"), col("src").as("dst"), col("cosr")))
+
+  /** A hub's IN-degree is unbounded, so back-links are pruned to the
+    * best 2·deg per node (HNSW's maxM discipline): the per-node
+    * adjacency is ≤ 2·deg BY CONSTRUCTION, which is what makes the
+    * serve bill O(rounds·beam·deg) a hard bound. Eagerly pinned. */
+  private def nswPrune(arcs: DataFrame): DataFrame = {
+    val ew = Window.partitionBy(col("src")).orderBy(col("cosr").desc, col("dst"))
+    arcs.withColumn("rk", row_number().over(ew)).filter(col("rk") <= 2 * NswDeg)
+      .select(col("src"), col("dst"))
+      .localCheckpoint(true)
+  }
+
+  /** Per-cell ENTRY ANCHORS — the [[NswAnchors]] members of each cell
+    * of `asg` nearest its trained centroid (d2 round-6, id tiebreak):
+    * the medoid-entry discipline (DiskANN/Vamana start at the corpus
+    * medoid; HNSW's layer descent lands near the query before the
+    * layer-0 search). A min-id entry sits an unbounded number of hops
+    * from the query as cells grow — measured at 10×: round-6 recall
+    * 0.52 from min-id entries vs 0.87+ from anchors. Stored with the
+    * graph: in production each cell ships its entry list. */
+  private def nswAnchors(asg: DataFrame, e: DataFrame, c1: DataFrame): DataFrame = {
+    val aw1 = Window.partitionBy(col("cell")).orderBy(col("d2"), col("vec_id"))
+    asg
+      .join(e.select(col("vec_id"), col("v"), col("vv")), "vec_id")
+      .join(c1.select(col("cid").as("cell"), col("cv"), col("cc")), "cell")
+      .withColumn("d2",
+        round(col("vv") - lit(2.0) * expr("dot_product(v, cv)") + col("cc"), 6))
+      .withColumn("rk", row_number().over(aw1)).filter(col("rk") <= NswAnchors)
+      .select(col("cell"), col("vec_id").as("cid"))
+      .localCheckpoint(true)
   }
 
   /** The 2-nearest-cell anchor seed shared by every graph serve:
@@ -1174,27 +1435,74 @@ object Similarity {
       c1: DataFrame, gedges: DataFrame, anchors: DataFrame): DataFrame = {
     import s.implicits._
     val exact = knnTop5(s, dir).select($"qid".as("eqid"), $"cid".as("ecid"))
+    nswServe(e, c1, gedges, anchors, exact)
+      .select($"round",
+        lit(NswBeam).cast(IntegerType).as("beam"),
+        lit(NswDeg).cast(IntegerType).as("degree"),
+        $"n_queries", $"scored", $"hits", recallAt5)
+      .orderBy($"round")
+  }
+
+  /** The graph serve every NSW audit runs: `e`'s probe set (vec_id <
+    * 50) enters at its top-2 routing cells' anchors ([[nswEntry]]),
+    * expands through `gedges` ([[nswBeamRounds]]) and is scored per
+    * round against `exact` by [[nswServeStats]], with its optional
+    * tombstone and new-truth sets. */
+  private def nswServe(e: DataFrame, c1: DataFrame, gedges: DataFrame,
+      anchors: DataFrame, exact: DataFrame, tomb: Option[DataFrame] = None,
+      newTruth: Option[DataFrame] = None): DataFrame = {
+    import e.sparkSession.implicits._
     val q = e.filter($"vec_id" < 50)
       .select($"vec_id".as("qid"), $"v".as("av"), $"nrm".as("na"), $"vv")
     val corpus = e.select($"vec_id".as("cid"), $"v".as("bv"), $"nrm".as("nb"))
     val visited = nswBeamRounds(q, nswEntry(q, c1, anchors), gedges, corpus)
-    nswServeStats(visited, exact)
-      .select($"round",
-        lit(NswBeam).cast(IntegerType).as("beam"),
-        lit(NswDeg).cast(IntegerType).as("degree"),
-        $"n_queries", $"scored", $"hits",
-        round($"hits".cast(DoubleType) / ($"n_queries" * 5), 6)
-          .as("recall_at_5"))
-      .orderBy($"round")
+    nswServeStats(visited, exact, tomb, newTruth)
   }
 
-  /** Oracle twin of [[nswGraph]] + the q219 serve: graph build
-    * (asg2 → gedges), query prep (qv/qcell/anch/entry), seed frames
-    * v0/x0 and the [[NswRounds]] unrolled expand-once beam rounds
-    * producing `f$r/x$r/nb$r/v$r`. Must follow
-    * `$prepCte, $sqrtnAsgCteSql`. Consumers append their own per-round
-    * stat CTEs over `v$r` (q219: full-corpus top-5; q222: live-only
-    * top-5 under tombstones). */
+  /** The live-corpus truth of the graph deletion audits (q222, q224):
+    * [[knnTop5]]'s scored probe pairs with the tombstoned `tomb(cid)`
+    * removed before ranking, eagerly pinned. */
+  private def liveTruth(s: SparkSession, dir: String, tomb: DataFrame): DataFrame = {
+    import s.implicits._
+    val ew2 = Window.partitionBy($"qid").orderBy($"cosr".desc, $"cid")
+    probeScored(s, dir)
+      .join(tomb, Seq("cid"), "left_anti")
+      .withColumn("rank", row_number().over(ew2)).filter($"rank" <= 5)
+      .select($"qid".as("eqid"), $"cid".as("ecid"))
+      .localCheckpoint(true)
+  }
+
+  /** Oracle twin of [[liveTruth]]: `tomb(vec_id)` and the live top-5
+    * `lnn(qid, cid)` from [[knnTop5Cte]]'s `scored`. */
+  private val liveTruthSql: String = """
+        tomb AS (SELECT vec_id FROM n WHERE label % 2 = 0),
+        lnn AS (SELECT qid, cid FROM (
+            SELECT s.qid, s.cid,
+              ROW_NUMBER() OVER (PARTITION BY s.qid ORDER BY s.cosr DESC, s.cid) AS rk
+            FROM scored s WHERE s.cid NOT IN (SELECT vec_id FROM tomb)) t
+            WHERE rk <= 5)"""
+
+  /** Oracle twin of [[nswServeStats]] without tombstones: per round r,
+    * the top-5 `t$r` of `v$r` and `st$r(round, n_queries, scored,
+    * <hit columns>)`, one count column per (name, truth CTE of (qid,
+    * cid)) in `hits`. */
+  private def nswRoundStatsSql(hits: (String, String)*): String = (1 to NswRounds).map { r =>
+    val hitCols = hits.map { case (name, truth) =>
+      s"""(SELECT CAST(COUNT(*) AS BIGINT) FROM t$r t
+           JOIN $truth ON $truth.qid = t.qid AND $truth.cid = t.cid) AS $name""" }
+    s"""t$r AS (SELECT qid, cid FROM (SELECT qid, cid,
+            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosr DESC, cid) AS rk
+          FROM v$r) t WHERE rk <= 5),
+      st$r AS (SELECT $r AS round,
+          (SELECT CAST(COUNT(DISTINCT qid) AS BIGINT) FROM v$r) AS n_queries,
+          (SELECT CAST(COUNT(*) AS BIGINT) FROM v$r) AS scored,
+          ${hitCols.mkString(",\n          ")})"""
+  }.mkString(",\n      ")
+
+  /** The per-round stat rows `${p}1 … ${p}6` stacked in round order. */
+  private def nswRoundsUnionSql(p: String): String =
+    (1 to NswRounds).map(r => s"SELECT * FROM $p$r").mkString("\n      UNION ALL ")
+
   private val nswQdot = "list_sum([q.av[i] * b.v[i] for i in range(1, len(q.av) + 1)])"
 
   /** The unrolled expand-once beam rounds alone (f$r/x$r/nb$r/v$r,
@@ -1250,60 +1558,74 @@ object Similarity {
         FROM entry en JOIN qv q USING (qid) JOIN n b ON b.vec_id = en.cid),
     x0 AS (SELECT qid, cid FROM v0 WHERE 1 = 0)"""
 
-  private val nswBeamCtes: String = {
-    s"""asg2 AS MATERIALIZED (SELECT vec_id, cell FROM (
-        SELECT e2.vec_id, c.cid AS cell,
-          ROW_NUMBER() OVER (PARTITION BY e2.vec_id ORDER BY
-            ROUND(e2.vv - 2.0 * list_sum([e2.v[i] * c.cv[i] for i in range(1, len(e2.v) + 1)]) + c.cc, 6),
+  /** Oracle twin of [[top2Cells]]: `name(vec_id, cell)` for the `src`
+    * vectors against `c1n`. */
+  private def top2CellsSql(name: String, src: String): String = s"""
+    $name AS MATERIALIZED (SELECT vec_id, cell FROM (
+        SELECT $src.vec_id, c.cid AS cell,
+          ROW_NUMBER() OVER (PARTITION BY $src.vec_id ORDER BY
+            ROUND($src.vv - 2.0 * list_sum([$src.v[i] * c.cv[i] for i in range(1, len($src.v) + 1)]) + c.cc, 6),
             c.cid) AS rk
-        FROM e2 CROSS JOIN c1n c) t WHERE rk <= 2),
+        FROM $src CROSS JOIN c1n c) t WHERE rk <= 2)"""
+
+  /** Oracle twin of [[nswTopDeg]]: scores the `${p}pairs(src, dst)`
+    * by cosine into `${p}sc` and keeps the best in `${p}top(src, dst,
+    * cosr)`. */
+  private def nswTopDegSql(p: String): String = s"""
+    ${p}sc AS MATERIALIZED (SELECT p.src, p.dst,
+          ROUND(list_sum([sa.v[i] * sb.v[i] for i in range(1, len(sa.v) + 1)]) / (sa.nrm * sb.nrm), 6) AS cosr
+        FROM ${p}pairs p JOIN n sa ON sa.vec_id = p.src
+        JOIN n sb ON sb.vec_id = p.dst),
+    ${p}top AS (SELECT src, dst, cosr FROM (
+        SELECT *, ROW_NUMBER() OVER (PARTITION BY src ORDER BY cosr DESC, dst) AS rk
+        FROM ${p}sc) t WHERE rk <= $NswDeg)"""
+
+  /** Oracle twin of [[buildNswGraphOver]]'s symmetrized graph: the
+    * within-cell pairs of `asg2`, their top-degree edges and both
+    * arcs of each in `gsym(src, dst, cosr)`. */
+  private val nswSymCtes: String = s"""
     gpairs AS MATERIALIZED (SELECT DISTINCT a.vec_id AS src, b.vec_id AS dst
         FROM asg2 a JOIN asg2 b USING (cell) WHERE a.vec_id <> b.vec_id),
-    gsc AS MATERIALIZED (SELECT p.src, p.dst,
-          ROUND(list_sum([sa.v[i] * sb.v[i] for i in range(1, len(sa.v) + 1)]) / (sa.nrm * sb.nrm), 6) AS cosr
-        FROM gpairs p JOIN n sa ON sa.vec_id = p.src
-        JOIN n sb ON sb.vec_id = p.dst),
-    gtop AS (SELECT src, dst, cosr FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY src ORDER BY cosr DESC, dst) AS rk
-        FROM gsc) t WHERE rk <= $NswDeg),
+    ${nswTopDegSql("g")},
     gsym AS (SELECT DISTINCT * FROM (
         SELECT src, dst, cosr FROM gtop
-        UNION ALL SELECT dst AS src, src AS dst, cosr FROM gtop) u),
+        UNION ALL SELECT dst AS src, src AS dst, cosr FROM gtop) u)"""
+
+  /** Oracle twin of [[nswPrune]] over the `from(src, dst, cosr)` arcs,
+    * ending in `gedges(src, dst)`. */
+  private def nswEdgesSql(from: String): String = s"""
     gedges AS MATERIALIZED (SELECT src, dst FROM (
         SELECT src, dst, ROW_NUMBER() OVER (PARTITION BY src ORDER BY cosr DESC, dst) AS rk
-        FROM gsym) t WHERE rk <= ${2 * NswDeg}),
+        FROM $from) t WHERE rk <= ${2 * NswDeg})"""
+
+  /** Oracle twin of [[nswGraph]] + the q219 serve: graph build over
+    * the `src` corpus CTE (asg2 → gedges), query prep
+    * (qv/qcell/anch/entry), seed frames v0/x0 and the [[NswRounds]]
+    * unrolled expand-once beam rounds producing `f$r/x$r/nb$r/v$r`.
+    * Must follow `$prepCte, $sqrtnAsgCteSql` (q224: its live-slice
+    * chain). Consumers append their own per-round stat CTEs over
+    * `v$r` (q219: full-corpus top-5; q222: live-only top-5 under
+    * tombstones). */
+  private def nswBeamCtes(src: String): String = s"""${top2CellsSql("asg2", src)},
+    $nswSymCtes,
+    ${nswEdgesSql("gsym")},
     $nswServePrepCtes,
     $nswRoundCtes"""
-  }
 
   /** The full q219 recall oracle — shared VERBATIM with q225's
     * persistence round-trip: a write+reload that changes any bit of
     * the served index hash-fails against this. */
-  private lazy val nswRecallOracleSql: String = {
-    val stats = (1 to NswRounds).map { r =>
-      s"""t$r AS (SELECT qid, cid FROM (SELECT qid, cid,
-            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosr DESC, cid) AS rk
-          FROM v$r) t WHERE rk <= 5),
-      st$r AS (SELECT $r AS round,
-          (SELECT CAST(COUNT(DISTINCT qid) AS BIGINT) FROM v$r) AS n_queries,
-          (SELECT CAST(COUNT(*) AS BIGINT) FROM v$r) AS scored,
-          (SELECT CAST(COUNT(*) AS BIGINT) FROM t$r t
-           JOIN nn ON nn.qid = t.qid AND nn.cid = t.cid) AS hits)"""
-    }.mkString(",\n      ")
-    val outs = (1 to NswRounds).map(r => s"SELECT * FROM st$r")
-      .mkString("\n      UNION ALL ")
-    s"""$prepCte,
+  private lazy val nswRecallOracleSql: String = s"""$prepCte,
     $knnTop5Cte,
     $sqrtnAsgCteSql,
-    $nswBeamCtes,
-    $stats
+    ${nswBeamCtes("e2")},
+    ${nswRoundStatsSql("hits" -> "nn")}
     SELECT CAST(round AS INT) AS round,
       CAST($NswBeam AS INT) AS beam, CAST($NswDeg AS INT) AS degree,
       n_queries, scored, hits,
       ROUND(CAST(hits AS DOUBLE) / (n_queries * 5), 6) AS recall_at_5
-    FROM ($outs)
+    FROM (${nswRoundsUnionSql("st")})
     ORDER BY round"""
-  }
 
   def queries: Vector[Q] = Vector(
     // ---- near-duplicate pairs by cosine, blocked on label ------------
@@ -1682,29 +2004,12 @@ object Similarity {
         val q = e.filter($"vec_id" < 50)
           .select($"vec_id".as("qid"), $"v".as("av"), $"nrm".as("na"))
           .withColumn("vv", expr("dot_product(av, av)"))
-        val pw = Window.partitionBy($"qid").orderBy($"d2", $"plabel")
-        val probes = q.crossJoin(broadcast(cent))
-          .withColumn("d2", round($"vv" - lit(2.0) * expr("dot_product(av, cv)") + $"cc", 6))
-          .withColumn("probe_rank", row_number().over(pw))
-          .filter($"probe_rank" <= 3)
+        val probes = probeRanks(q, cent, key = "plabel")
           .select($"qid", $"av", $"na", $"plabel", $"probe_rank")
         val c = e.select($"vec_id".as("cid"), $"label".as("clabel"), $"v".as("bv"), $"nrm".as("nb"))
         val cand = broadcast(probes).join(c, $"plabel" === $"clabel" && $"qid" =!= $"cid")
           .withColumn("cosr", round(expr(dotExpr) / ($"na" * $"nb"), 6))
-          .withColumn("np", explode(expr("sequence(probe_rank, 3)")))
-        val w = Window.partitionBy($"np", $"qid").orderBy($"cosr".desc, $"cid")
-        val top = cand.withColumn("rk", row_number().over(w)).filter($"rk" <= 5)
-          .select($"np", $"qid", $"cid")
-        val hits = top.join(exact, $"qid" === $"eqid" && $"cid" === $"ecid", "left_semi")
-          .groupBy($"np").agg(count(lit(1)).as("hits"))
-        cand.groupBy($"np")
-          .agg(count(lit(1)).as("candidates"), countDistinct($"qid").as("n_queries"))
-          .join(hits, Seq("np"), "left")
-          .select($"np".cast(IntegerType).as("nprobe"), $"n_queries", $"candidates",
-            coalesce($"hits", lit(0L)).as("hits"),
-            round(coalesce($"hits", lit(0L)).cast(DoubleType) / ($"n_queries" * 5), 6)
-              .as("recall_at_5"))
-          .orderBy($"nprobe")
+        nprobeRecall(cand, exact)
       },
       Some(s"""$prepCte,
         $knnTop5Cte,
@@ -1731,20 +2036,8 @@ object Similarity {
                  FROM pr p
                  JOIN qv q ON q.qid = p.qid
                  JOIN n b ON b.label = p.plabel AND b.vec_id <> p.qid),
-        lv AS (SELECT qid, cid, cosr, np
-               FROM cand, UNNEST(range(probe_rank, 4)) AS t(np)),
-        top AS (SELECT np, qid, cid FROM (SELECT *,
-                  ROW_NUMBER() OVER (PARTITION BY np, qid ORDER BY cosr DESC, cid) AS rk
-                FROM lv) t WHERE rk <= 5),
-        hits AS (SELECT t.np, CAST(COUNT(*) AS BIGINT) AS hits
-                 FROM top t JOIN nn ON nn.qid = t.qid AND nn.cid = t.cid
-                 GROUP BY t.np),
-        vol AS (SELECT np, CAST(COUNT(*) AS BIGINT) AS candidates,
-                  CAST(COUNT(DISTINCT qid) AS BIGINT) AS n_queries
-                FROM lv GROUP BY np)
-        SELECT CAST(v.np AS INT) AS nprobe, v.n_queries, v.candidates,
-          COALESCE(h.hits, CAST(0 AS BIGINT)) AS hits,
-          ROUND(CAST(COALESCE(h.hits, 0) AS DOUBLE) / (v.n_queries * 5), 6) AS recall_at_5
+        ${nprobeRecallSql("lv", nnTruth)}
+        SELECT CAST(v.np AS INT) AS nprobe, v.n_queries, v.candidates, $recallColsSql
         FROM vol v LEFT JOIN hits h ON h.np = v.np
         ORDER BY nprobe""")),
 
@@ -2010,65 +2303,23 @@ object Similarity {
         val exact = knnTop5(s, dir).select($"qid".as("eqid"), $"cid".as("ecid"))
         val q = e.filter($"vec_id" < 50)
           .select($"vec_id".as("qid"), $"v".as("av"), $"nrm".as("na"), $"vv")
-        val pw = Window.partitionBy($"qid").orderBy($"d2", $"cell")
-        val probes = q.crossJoin(broadcast(c1.withColumnRenamed("cid", "cell")))
-          .withColumn("d2",
-            round($"vv" - lit(2.0) * expr("dot_product(av, cv)") + $"cc", 6))
-          .withColumn("probe_rank", row_number().over(pw))
-          .filter($"probe_rank" <= 3)
+        val probes = probeRanks(q, c1.withColumnRenamed("cid", "cell"))
           .select($"qid", $"av", $"na", $"cell", $"probe_rank")
         val corpus = e.select($"vec_id".as("cid"), $"v".as("bv"), $"nrm".as("nb"))
           .join(asg.select($"vec_id".as("cid"), $"cell"), "cid")
         val cand = broadcast(probes).join(corpus, Seq("cell"))
           .filter($"qid" =!= $"cid")
           .withColumn("cosr", round(expr(dotExpr) / ($"na" * $"nb"), 6))
-          .withColumn("np", explode(expr("sequence(probe_rank, 3)")))
-        val w = Window.partitionBy($"np", $"qid").orderBy($"cosr".desc, $"cid")
-        val top = cand.withColumn("rk", row_number().over(w)).filter($"rk" <= 5)
-          .select($"np", $"qid", $"cid")
-        val hits = top.join(exact, $"qid" === $"eqid" && $"cid" === $"ecid", "left_semi")
-          .groupBy($"np").agg(count(lit(1)).as("hits"))
-        cand.groupBy($"np")
-          .agg(count(lit(1)).as("candidates"), countDistinct($"qid").as("n_queries"))
-          .join(hits, Seq("np"), "left")
-          .select($"np".cast(IntegerType).as("nprobe"),
-            lit(nlist).as("nlist"), $"n_queries", $"candidates",
-            coalesce($"hits", lit(0L)).as("hits"),
-            round(coalesce($"hits", lit(0L)).cast(DoubleType) / ($"n_queries" * 5), 6)
-              .as("recall_at_5"))
-          .orderBy($"nprobe")
+        nprobeRecall(cand, exact, lead = Seq(lit(nlist).as("nlist")))
       },
       Some(s"""$prepCte,
         $knnTop5Cte,
         $sqrtnAsgCteSql,
         qv AS (SELECT vec_id AS qid, v AS av, nrm AS na, vv FROM e2 WHERE vec_id < 50),
-        pr AS (SELECT qid, cell, probe_rank FROM (
-                 SELECT q.qid, c.cid AS cell,
-                   ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-                     ROUND(q.vv - 2.0 * list_sum([q.av[i] * c.cv[i] for i in range(1, len(q.av) + 1)]) + c.cc, 6),
-                     c.cid) AS probe_rank
-                 FROM qv q CROSS JOIN c1n c) t
-               WHERE probe_rank <= 3),
-        cand AS (SELECT p.qid, p.probe_rank, b.vec_id AS cid,
-                   ROUND(list_sum([q.av[i] * b.v[i] for i in range(1, len(q.av) + 1)]) / (q.na * b.nrm), 6) AS cosr
-                 FROM pr p
-                 JOIN qv q ON q.qid = p.qid
-                 JOIN asg a ON a.cell = p.cell
-                 JOIN e2 b ON b.vec_id = a.vec_id AND b.vec_id <> p.qid),
-        lv AS (SELECT qid, cid, cosr, np
-               FROM cand, UNNEST(range(probe_rank, 4)) AS t(np)),
-        top AS (SELECT np, qid, cid FROM (SELECT *,
-                  ROW_NUMBER() OVER (PARTITION BY np, qid ORDER BY cosr DESC, cid) AS rk
-                FROM lv) t WHERE rk <= 5),
-        hits AS (SELECT t.np, CAST(COUNT(*) AS BIGINT) AS hits
-                 FROM top t JOIN nn ON nn.qid = t.qid AND nn.cid = t.cid
-                 GROUP BY t.np),
-        vol AS (SELECT np, CAST(COUNT(*) AS BIGINT) AS candidates,
-                  CAST(COUNT(DISTINCT qid) AS BIGINT) AS n_queries
-                FROM lv GROUP BY np)
-        SELECT CAST(v.np AS INT) AS nprobe, nl.nlist, v.n_queries, v.candidates,
-          COALESCE(h.hits, CAST(0 AS BIGINT)) AS hits,
-          ROUND(CAST(COALESCE(h.hits, 0) AS DOUBLE) / (v.n_queries * 5), 6) AS recall_at_5
+        ${probeCteSql("c1n")},
+        $probedCandSql,
+        ${nprobeRecallSql("lv", nnTruth)}
+        SELECT CAST(v.np AS INT) AS nprobe, nl.nlist, v.n_queries, v.candidates, $recallColsSql
         FROM vol v CROSS JOIN nl LEFT JOIN hits h ON h.np = v.np
         ORDER BY nprobe""")),
 
@@ -2147,13 +2398,7 @@ object Similarity {
         import s.implicits._
         val (sub, book) = pqTrained(s, dir)
         val codes = pqAssign(sub, book).withColumnRenamed("code", "cid")
-        val dtab = sub.filter($"vec_id" < 50)
-          .select($"vec_id".as("qid"), $"s", $"sv".as("qv"), $"ss".as("qq"))
-          .join(broadcast(book), Seq("s"))
-          .withColumn("si",
-            round(round($"qq" - lit(2.0) * expr("dot_product(qv, cv)") + $"cc", 6) * 1e6)
-              .cast(LongType))
-          .select($"qid", $"s", $"cid", $"si")
+        val dtab = pqDistTable(sub, book).select($"qid", $"s", $"cid", $"si")
         val adc = dtab.join(codes, Seq("s", "cid"))
           .filter($"vec_id" =!= $"qid")
           .groupBy($"qid", $"vec_id").agg(sum($"si").as("adc"))
@@ -2277,13 +2522,7 @@ object Similarity {
           .join(asg.select($"vec_id".as("cid"), $"cell"), Seq("cell"))
           .filter($"qid" =!= $"cid")
           .select($"qid", $"cid", $"probe_rank")
-        val dtab = sub.filter($"vec_id" < 50)
-          .select($"vec_id".as("qid"), $"s", $"sv".as("qv"), $"ss".as("qq"))
-          .join(broadcast(book), Seq("s"))
-          .withColumn("si",
-            round(round($"qq" - lit(2.0) * expr("dot_product(qv, cv)") + $"cc", 6) * 1e6)
-              .cast(LongType))
-          .select($"qid", $"s", $"cid".as("code"), $"si")
+        val dtab = pqDistTable(sub, book).select($"qid", $"s", $"cid".as("code"), $"si")
         val adc = codes.withColumnRenamed("vec_id", "cid")
           .join(broadcast(cand), Seq("cid"))
           .join(broadcast(dtab), Seq("qid", "s", "code"))
@@ -2388,11 +2627,8 @@ object Similarity {
         sl.groupBy($"L")
           .agg(count(lit(1)).as("sl_rows"), countDistinct($"qid").as("n_queries"))
           .join(hits, Seq("L"), "left")
-          .select($"L".cast(IntegerType).as("shortlist"),
-            lit(nlist).as("nlist"), $"n_queries", $"sl_rows",
-            coalesce($"h", lit(0L)).as("hits"),
-            round(coalesce($"h", lit(0L)).cast(DoubleType) / ($"n_queries" * 5), 6)
-              .as("recall_at_5"))
+          .select(Seq($"L".cast(IntegerType).as("shortlist"),
+            lit(nlist).as("nlist"), $"n_queries", $"sl_rows") ++ recallCols("h"): _*)
           .orderBy($"shortlist")
       },
       Some(s"""$prepCte,
@@ -2412,20 +2648,14 @@ object Similarity {
                  FROM sl s
                  JOIN e2 b ON b.vec_id = s.cid
                  JOIN e2 q ON q.vec_id = s.qid) t WHERE rrk <= 5),
-        ex AS (SELECT a.vec_id AS qid, b.vec_id AS cid,
-                 ROUND(a.vv - 2.0 * list_sum([a.v[i] * b.v[i] for i in range(1, len(a.v) + 1)]) + b.vv, 6) AS d2
-               FROM e2 a JOIN e2 b ON b.vec_id <> a.vec_id WHERE a.vec_id < 50),
-        etop AS (SELECT qid, cid FROM (SELECT qid, cid,
-                   ROW_NUMBER() OVER (PARTITION BY qid ORDER BY d2, cid) AS rk
-                 FROM ex) t WHERE rk <= 5),
+        $exactTop5Sql,
         hits AS (SELECT r.L, CAST(COUNT(*) AS BIGINT) AS hits FROM rer r
                  JOIN etop e ON e.qid = r.qid AND e.cid = r.cid GROUP BY r.L),
         vol AS (SELECT L, CAST(COUNT(*) AS BIGINT) AS sl_rows,
                   CAST(COUNT(DISTINCT qid) AS BIGINT) AS n_queries
                 FROM sl GROUP BY L)
         SELECT CAST(v.L AS INT) AS shortlist, nl.nlist, v.n_queries, v.sl_rows,
-          COALESCE(h.hits, CAST(0 AS BIGINT)) AS hits,
-          ROUND(CAST(COALESCE(h.hits, 0) AS DOUBLE) / (v.n_queries * 5), 6) AS recall_at_5
+          $recallColsSql
         FROM vol v CROSS JOIN nl
         LEFT JOIN hits h ON h.L = v.L
         ORDER BY shortlist""")),
@@ -2483,11 +2713,8 @@ object Similarity {
         top.groupBy($"d").agg(countDistinct($"qid").as("n_queries"))
           .join(hits, Seq("d"), "left")
           .join(energy, Seq("d"))
-          .select($"d".cast(IntegerType).as("dims"), $"n_queries",
-            coalesce($"h", lit(0L)).as("hits"),
-            round(coalesce($"h", lit(0L)).cast(DoubleType) / ($"n_queries" * 5), 6)
-              .as("recall_at_5"),
-            round($"ef", 6).as("energy_frac"))
+          .select(Seq($"d".cast(IntegerType).as("dims"), $"n_queries") ++
+            recallCols("h") :+ round($"ef", 6).as("energy_frac"): _*)
           .orderBy($"dims")
       },
       Some(s"""$prepCte,
@@ -2517,8 +2744,7 @@ object Similarity {
         vol AS (SELECT d, CAST(COUNT(DISTINCT qid) AS BIGINT) AS n_queries
                 FROM top GROUP BY d)
         SELECT CAST(v.d AS INT) AS dims, v.n_queries,
-          COALESCE(h.hits, CAST(0 AS BIGINT)) AS hits,
-          ROUND(CAST(COALESCE(h.hits, 0) AS DOUBLE) / (v.n_queries * 5), 6) AS recall_at_5,
+          $recallColsSql,
           ROUND(e.ef, 6) AS energy_frac
         FROM vol v
         LEFT JOIN hits h ON h.d = v.d
@@ -2579,20 +2805,7 @@ object Similarity {
         e2 AS (SELECT vec_id, v,
                  list_sum(list_transform(v, x -> x * x)) AS vv FROM n),
         spl AS (SELECT (COUNT(*) * 9) // 10 AS n0 FROM e2),
-        e2o AS (SELECT e2.* FROM e2, spl WHERE e2.vec_id < spl.n0),
-        e2n AS (SELECT e2.* FROM e2, spl WHERE e2.vec_id >= spl.n0),
-        nlo AS (SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS nlist FROM e2o),
-        c0 AS (SELECT vec_id AS cid, v AS cv, vv AS cc
-               FROM e2o, nlo WHERE vec_id < nlo.nlist),
-        s0 AS MATERIALIZED (${ivfArgminSql("e2o", "c0")}),
-        dims AS (SELECT s0.cell, i - 1 AS dim, e2o.v[i] AS x
-                 FROM s0 JOIN e2o USING (vec_id),
-                      UNNEST(range(1, len(e2o.v) + 1)) AS t(i)),
-        means AS (SELECT cell, dim, ${davgSql("x", 15)} AS m
-                  FROM dims GROUP BY cell, dim),
-        c1 AS (SELECT cell AS cid, list(m ORDER BY dim) AS cv FROM means GROUP BY cell),
-        c1n AS MATERIALIZED (SELECT cid, cv,
-                 list_sum(list_transform(cv, x -> x * x)) AS cc FROM c1),
+        $oldIndexCteSql,
         asgo AS MATERIALIZED (${ivfArgminSql("e2o", "c1n")}),
         asgn AS MATERIALIZED (${ivfArgminSql("e2n", "c1n")}),
         so AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS sz FROM asgo GROUP BY cell),
@@ -2662,33 +2875,16 @@ object Similarity {
           sl.groupBy($"bits")
             .agg(count(lit(1)).as("sl_rows"), countDistinct($"qid").as("n_queries"))
             .join(hits, Seq("bits"), "left")
-            .select($"bits", lit(nlist).as("nlist"), $"n_queries", $"sl_rows",
-              coalesce($"h", lit(0L)).as("hits"),
-              round(coalesce($"h", lit(0L)).cast(DoubleType) / ($"n_queries" * 5), 6)
-                .as("recall_at_5"))
+            .select(Seq($"bits", lit(nlist).as("nlist"), $"n_queries", $"sl_rows") ++
+              recallCols("h"): _*)
         }
         legs.reduce(_ unionByName _).orderBy($"bits")
       },
       Some(s"""$prepCte,
         $sqrtnAsgCteSql,
-        rn AS MATERIALIZED (SELECT e2.vec_id,
-               [e2.v[i] - c.cv[i] for i in range(1, len(e2.v) + 1)] AS v
-             FROM e2 JOIN asg a ON a.vec_id = e2.vec_id
-             JOIN c1n c ON c.cid = a.cell),
-        $ivfProbesCteSql,
-        candp AS (SELECT p.qid, p.cell, a.vec_id AS cid, p.probe_rank
-                  FROM pr p JOIN asg a ON a.cell = p.cell
-                  WHERE a.vec_id <> p.qid),
-        qr AS (SELECT p.qid, p.cell,
-                 [q.v[i] - c.cv[i] for i in range(1, len(q.v) + 1)] AS rv
-               FROM pr p JOIN e2 q ON q.vec_id = p.qid
-               JOIN c1n c ON c.cid = p.cell),
-        ex AS (SELECT a.vec_id AS qid, b.vec_id AS cid,
-                 ROUND(a.vv - 2.0 * list_sum([a.v[i] * b.v[i] for i in range(1, len(a.v) + 1)]) + b.vv, 6) AS d2
-               FROM e2 a JOIN e2 b ON b.vec_id <> a.vec_id WHERE a.vec_id < 50),
-        etop AS (SELECT qid, cid FROM (SELECT qid, cid,
-                   ROW_NUMBER() OVER (PARTITION BY qid ORDER BY d2, cid) AS rk
-                 FROM ex) t WHERE rk <= 5),
+        $residualRnCteSql,
+        $residualProbeCteSql,
+        $exactTop5Sql,
         ${bitsLegCteSql(4)},
         ${bitsLegCteSql(8)},
         ${bitsLegCteSql(16)}
@@ -2788,11 +2984,7 @@ object Similarity {
         val (e, c1, nlist) = sqrtnIndex(s, dir)
         val asg = sqrtnAssign(e, c1)
         val tomb = e.filter($"label" % 5 === 0).select($"vec_id")
-        val total = asg.groupBy($"cell").agg(count(lit(1)).as("sz_total"))
-        val live = asg.join(tomb, Seq("vec_id"), "left_anti")
-          .groupBy($"cell").agg(count(lit(1)).as("sz_live"))
-        val census = total.join(live, Seq("cell"), "left")
-          .na.fill(0L, Seq("sz_live"))
+        val census = cellCensus(asg, tomb)
         val g = census.agg(sum($"sz_total").as("n_total"),
           sum($"sz_live").as("n_live"), max($"sz_live").as("max_live"))
         census.crossJoin(broadcast(g))
@@ -2807,12 +2999,7 @@ object Similarity {
       Some(s"""$prepCte,
         $sqrtnAsgCteSql,
         tomb AS (SELECT vec_id FROM n WHERE label % 5 = 0),
-        total AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS sz_total FROM asg GROUP BY cell),
-        live AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS sz_live FROM asg
-                 WHERE vec_id NOT IN (SELECT vec_id FROM tomb) GROUP BY cell),
-        census AS (SELECT t.cell, t.sz_total,
-                     COALESCE(l.sz_live, CAST(0 AS BIGINT)) AS sz_live
-                   FROM total t LEFT JOIN live l ON l.cell = t.cell),
+        $cellCensusSql,
         g AS (SELECT SUM(sz_total) AS n_total, SUM(sz_live) AS n_live,
                 MAX(sz_live) AS max_live FROM census)
         SELECT c.cell, c.sz_total, c.sz_live,
@@ -3025,11 +3212,7 @@ object Similarity {
         val asg = sqrtnAssign(e, c1).localCheckpoint(false)
         val tomb = e.filter($"label" % 2 === 0).select($"vec_id")
         val liveAsg = asg.join(tomb, Seq("vec_id"), "left_anti")
-        val total = asg.groupBy($"cell").agg(count(lit(1)).as("sz_total"))
-        val live = liveAsg.groupBy($"cell").agg(count(lit(1)).as("sz_live"))
-        val census = total.join(live, Seq("cell"), "left")
-          .na.fill(0L, Seq("sz_live"))
-        val compacted = census.filter($"sz_live" * 2 < $"sz_total")
+        val compacted = cellCensus(asg, tomb).filter($"sz_live" * 2 < $"sz_total")
           .select($"cell")
         val survivors = c1.join(
           compacted.withColumnRenamed("cell", "cid"), Seq("cid"), "left_anti")
@@ -3069,19 +3252,9 @@ object Similarity {
       Some(s"""$prepCte,
         $sqrtnAsgCteSql,
         tomb AS (SELECT vec_id FROM n WHERE label % 2 = 0),
-        total AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS sz_total FROM asg GROUP BY cell),
-        live AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS sz_live FROM asg
-                 WHERE vec_id NOT IN (SELECT vec_id FROM tomb) GROUP BY cell),
-        census AS (SELECT t.cell, t.sz_total,
-                     COALESCE(l.sz_live, CAST(0 AS BIGINT)) AS sz_live
-                   FROM total t LEFT JOIN live l ON l.cell = t.cell),
+        $cellCensusSql,
         comp AS (SELECT cell FROM census WHERE sz_live * 2 < sz_total),
-        surv AS (SELECT * FROM c1n WHERE cid NOT IN (SELECT cell FROM comp)),
-        lasg AS (SELECT * FROM asg
-                 WHERE vec_id NOT IN (SELECT vec_id FROM tomb)),
-        movers AS (SELECT e2.* FROM e2 JOIN lasg l ON l.vec_id = e2.vec_id
-                   WHERE l.cell IN (SELECT cell FROM comp)),
-        moved AS (${ivfArgminSql("movers", "surv")}),
+        $compactionMovesSql,
         stay AS (SELECT vec_id, cell FROM lasg
                  WHERE cell NOT IN (SELECT cell FROM comp)),
         bfr AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS sz_before
@@ -3141,12 +3314,7 @@ object Similarity {
           val asg = sqrtnAssign(e, c1).localCheckpoint(false)
           val q = e.filter($"vec_id" < 50)
             .select($"vec_id".as("qid"), $"v".as("av"), $"nrm".as("na"), $"vv")
-          val pw = Window.partitionBy($"qid").orderBy($"d2", $"cell")
-          val probes = q.crossJoin(broadcast(c1.withColumnRenamed("cid", "cell")))
-            .withColumn("d2",
-              round($"vv" - lit(2.0) * expr("dot_product(av, cv)") + $"cc", 6))
-            .withColumn("probe_rank", row_number().over(pw))
-            .filter($"probe_rank" <= 3)
+          val probes = probeRanks(q, c1.withColumnRenamed("cid", "cell"))
             .select($"qid", $"av", $"na", $"cell")
           val corpus = e.select($"vec_id".as("cid"), $"v".as("bv"), $"nrm".as("nb"))
             .join(asg.select($"vec_id".as("cid"), $"cell"), "cid")
@@ -3166,9 +3334,7 @@ object Similarity {
               / sum($"cnt"), 6).as("imbalance"))
           vol.crossJoin(broadcast(hits)).crossJoin(broadcast(imb))
             .select(lit(f).as("factor"), lit(nf).as("nlist"),
-              $"n_queries", $"candidates", $"hits",
-              round($"hits".cast(DoubleType) / ($"n_queries" * 5), 6)
-                .as("recall_at_5"), $"imbalance")
+              $"n_queries", $"candidates", $"hits", recallAt5, $"imbalance")
         }
         legs.reduce(_ unionByName _).orderBy($"factor")
       },
@@ -3263,10 +3429,7 @@ object Similarity {
         val asg = sqrtnAssign(e, c1).localCheckpoint(false)
         val tomb = e.filter($"label" % 2 === 0).select($"vec_id")
         val liveAsg = asg.join(tomb, Seq("vec_id"), "left_anti")
-        val total = asg.groupBy($"cell").agg(count(lit(1)).as("sz_total"))
-        val liveSz = liveAsg.groupBy($"cell").agg(count(lit(1)).as("sz_live"))
-        val compacted = total.join(liveSz, Seq("cell"), "left")
-          .na.fill(0L, Seq("sz_live"))
+        val compacted = cellCensus(asg, tomb)
           .filter($"sz_live" * 2 < $"sz_total").select($"cell")
         val survivors = c1.join(
           compacted.withColumnRenamed("cell", "cid"), Seq("cid"), "left_anti")
@@ -3286,42 +3449,16 @@ object Similarity {
         // different quantity and break comparability with q168's curve)
         val corpus = live.select($"vec_id".as("cid"), $"v".as("bv"),
           $"nrm".as("nb"))
-        val ew = Window.partitionBy($"qid").orderBy($"ecos".desc, $"cid")
-        val etop = broadcast(q).join(corpus, $"qid" =!= $"cid")
-          .withColumn("ecos", round(expr(dotExpr) / ($"na" * $"nb"), 6))
-          .withColumn("rk", row_number().over(ew)).filter($"rk" <= 5)
-          .select($"qid".as("eqid"), $"cid".as("ecid"))
-          .localCheckpoint(true)
+        val etop = cosineTruth(q, corpus, $"qid" =!= $"cid")
         // probes over the SURVIVING centroids, q168's contract
-        val pw = Window.partitionBy($"qid").orderBy($"d2", $"cell")
-        val probes = q.crossJoin(broadcast(
-            survivors.withColumnRenamed("cid", "cell")))
-          .withColumn("d2",
-            round($"vv" - lit(2.0) * expr("dot_product(av, cv)") + $"cc", 6))
-          .withColumn("probe_rank", row_number().over(pw))
-          .filter($"probe_rank" <= 3)
+        val probes = probeRanks(q, survivors.withColumnRenamed("cid", "cell"))
           .select($"qid", $"av", $"na", $"cell", $"probe_rank")
         val cand = broadcast(probes)
           .join(corpus.join(newAsg.withColumnRenamed("vec_id", "cid"), "cid"),
             Seq("cell"))
           .filter($"qid" =!= $"cid")
           .withColumn("cosr", round(expr(dotExpr) / ($"na" * $"nb"), 6))
-          .withColumn("np", explode(expr("sequence(probe_rank, 3)")))
-        val w = Window.partitionBy($"np", $"qid").orderBy($"cosr".desc, $"cid")
-        val top = cand.withColumn("rk", row_number().over(w)).filter($"rk" <= 5)
-          .select($"np", $"qid", $"cid")
-        val hits = top.join(etop,
-            $"qid" === $"eqid" && $"cid" === $"ecid", "left_semi")
-          .groupBy($"np").agg(count(lit(1)).as("hits"))
-        cand.groupBy($"np")
-          .agg(count(lit(1)).as("candidates"), countDistinct($"qid").as("n_queries"))
-          .join(hits, Seq("np"), "left")
-          .select($"np".cast(IntegerType).as("nprobe"),
-            $"n_queries", $"candidates",
-            coalesce($"hits", lit(0L)).as("hits"),
-            round(coalesce($"hits", lit(0L)).cast(DoubleType) / ($"n_queries" * 5), 6)
-              .as("recall_at_5"))
-          .orderBy($"nprobe")
+        nprobeRecall(cand, etop)
       },
       Some(s"""$prepCte,
         $sqrtnAsgCteSql,
@@ -3331,12 +3468,7 @@ object Similarity {
                  WHERE vec_id NOT IN (SELECT vec_id FROM tomb) GROUP BY cell),
         comp AS (SELECT t.cell FROM total t LEFT JOIN live_ l ON l.cell = t.cell
                  WHERE COALESCE(l.sz_live, 0) * 2 < t.sz_total),
-        surv AS (SELECT * FROM c1n WHERE cid NOT IN (SELECT cell FROM comp)),
-        lasg AS (SELECT * FROM asg
-                 WHERE vec_id NOT IN (SELECT vec_id FROM tomb)),
-        movers AS (SELECT e2.* FROM e2 JOIN lasg l ON l.vec_id = e2.vec_id
-                   WHERE l.cell IN (SELECT cell FROM comp)),
-        moved AS (${ivfArgminSql("movers", "surv")}),
+        $compactionMovesSql,
         newasg AS (SELECT vec_id, cell FROM lasg
                    WHERE cell NOT IN (SELECT cell FROM comp)
                    UNION ALL SELECT vec_id, cell FROM moved),
@@ -3350,33 +3482,15 @@ object Similarity {
                      b.vec_id) AS rk
                  FROM qv q JOIN lv2 b ON b.vec_id <> q.qid) s
                WHERE rk <= 5),
-        pr AS (SELECT qid, cell, probe_rank FROM (
-                 SELECT q.qid, c.cid AS cell,
-                   ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-                     ROUND(q.vv - 2.0 * list_sum([q.av[i] * c.cv[i] for i in range(1, len(q.av) + 1)]) + c.cc, 6),
-                     c.cid) AS probe_rank
-                 FROM qv q CROSS JOIN surv c) t
-               WHERE probe_rank <= 3),
+        ${probeCteSql("surv")},
         cand AS (SELECT p.qid, p.probe_rank, b.vec_id AS cid,
                    ROUND(list_sum([q.av[i] * b.v[i] for i in range(1, len(q.av) + 1)]) / (q.na * b.nrm), 6) AS cosr
                  FROM pr p
                  JOIN qv q ON q.qid = p.qid
                  JOIN newasg a ON a.cell = p.cell
                  JOIN lv2 b ON b.vec_id = a.vec_id AND b.vec_id <> p.qid),
-        lv3 AS (SELECT qid, cid, cosr, np
-               FROM cand, UNNEST(range(probe_rank, 4)) AS t(np)),
-        top AS (SELECT np, qid, cid FROM (SELECT *,
-                  ROW_NUMBER() OVER (PARTITION BY np, qid ORDER BY cosr DESC, cid) AS rk
-                FROM lv3) t WHERE rk <= 5),
-        hits AS (SELECT t.np, CAST(COUNT(*) AS BIGINT) AS hits
-                 FROM top t JOIN et ON et.eqid = t.qid AND et.ecid = t.cid
-                 GROUP BY t.np),
-        vol AS (SELECT np, CAST(COUNT(*) AS BIGINT) AS candidates,
-                  CAST(COUNT(DISTINCT qid) AS BIGINT) AS n_queries
-                FROM lv3 GROUP BY np)
-        SELECT CAST(v.np AS INT) AS nprobe, v.n_queries, v.candidates,
-          COALESCE(h.hits, CAST(0 AS BIGINT)) AS hits,
-          ROUND(CAST(COALESCE(h.hits, 0) AS DOUBLE) / (v.n_queries * 5), 6) AS recall_at_5
+        ${nprobeRecallSql("lv3", etTruth)}
+        SELECT CAST(v.np AS INT) AS nprobe, v.n_queries, v.candidates, $recallColsSql
         FROM vol v LEFT JOIN hits h ON h.np = v.np
         ORDER BY nprobe""")),
 
@@ -3414,109 +3528,27 @@ object Similarity {
           .select($"vec_id".as("qid"), $"v".as("av"), $"nrm".as("na"), $"vv")
         // exact cosine truth over the media corpus (q34's brute class)
         val corpus0 = e.select($"vec_id".as("cid"), $"v".as("bv"), $"nrm".as("nb"))
-        val ew = Window.partitionBy($"qid").orderBy($"ecos".desc, $"cid")
-        val etop = broadcast(q).join(corpus0, $"qid" =!= $"cid")
-          .withColumn("ecos", round(expr(dotExpr) / ($"na" * $"nb"), 6))
-          .withColumn("rk", row_number().over(ew)).filter($"rk" <= 5)
-          .select($"qid".as("eqid"), $"cid".as("ecid"))
-          .localCheckpoint(true)
-        val pw = Window.partitionBy($"qid").orderBy($"d2", $"cell")
-        val probes = q.crossJoin(broadcast(c1.withColumnRenamed("cid", "cell")))
-          .withColumn("d2",
-            round($"vv" - lit(2.0) * expr("dot_product(av, cv)") + $"cc", 6))
-          .withColumn("probe_rank", row_number().over(pw))
-          .filter($"probe_rank" <= 3)
+        val etop = cosineTruth(q, corpus0, $"qid" =!= $"cid")
+        val probes = probeRanks(q, c1.withColumnRenamed("cid", "cell"))
           .select($"qid", $"av", $"na", $"cell", $"probe_rank")
         val corpus = corpus0.join(asg.select($"vec_id".as("cid"), $"cell"), "cid")
         val cand = broadcast(probes).join(corpus, Seq("cell"))
           .filter($"qid" =!= $"cid")
           .withColumn("cosr", round(expr(dotExpr) / ($"na" * $"nb"), 6))
-          .withColumn("np", explode(expr("sequence(probe_rank, 3)")))
-        val w = Window.partitionBy($"np", $"qid").orderBy($"cosr".desc, $"cid")
-        val top = cand.withColumn("rk", row_number().over(w)).filter($"rk" <= 5)
-          .select($"np", $"qid", $"cid")
-        val hits = top.join(etop,
-            $"qid" === $"eqid" && $"cid" === $"ecid", "left_semi")
-          .groupBy($"np").agg(count(lit(1)).as("hits"))
-        cand.groupBy($"np")
-          .agg(count(lit(1)).as("candidates"), countDistinct($"qid").as("n_queries"))
-          .join(hits, Seq("np"), "left")
-          .select($"np".cast(IntegerType).as("nprobe"),
-            lit(nlist).as("nlist"), $"n_queries", $"candidates",
-            coalesce($"hits", lit(0L)).as("hits"),
-            round(coalesce($"hits", lit(0L)).cast(DoubleType) / ($"n_queries" * 5), 6)
-              .as("recall_at_5"))
-          .orderBy($"nprobe")
+        nprobeRecall(cand, etop, lead = Seq(lit(nlist).as("nlist")))
       },
-      Some(s"""
-        WITH params AS (
-          SELECT doc_id // 5 AS vec_id, (doc_id // 5) // 2 AS b,
-            (doc_id // 5) % 2 AS variant
-          FROM documents WHERE doc_id % 5 = 0),
-        cells AS (
-          SELECT vec_id, i,
-            8 * ((b * 37
-                  + (CASE WHEN i = 1 THEN 0 ELSE i END) * 11
-                  + ((CASE WHEN i = 1 THEN 0 ELSE i END)
-                     * (CASE WHEN i = 1 THEN 0 ELSE i END)) % 7) % 32)
-            + CASE WHEN variant = 1 AND i = 0 THEN 3 ELSE 0 END AS g
-          FROM params, UNNEST(range(64)) AS t(i)),
-        fv AS (SELECT vec_id,
-                 list(CAST(CAST(g / 255.0 AS REAL) AS DOUBLE) ORDER BY i) AS v
-               FROM cells GROUP BY vec_id),
+      Some(s"""$mediaFvCteSql,
         e2 AS MATERIALIZED (SELECT vec_id, v,
                  sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm,
                  list_sum(list_transform(v, x -> x * x)) AS vv FROM fv),
-        nl AS (SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS nlist FROM e2),
-        c0 AS (SELECT vec_id AS cid, v AS cv, vv AS cc
-               FROM e2, nl WHERE vec_id < nl.nlist),
-        s0 AS MATERIALIZED (${ivfArgminSql("e2", "c0")}),
-        dims AS (SELECT s0.cell, i - 1 AS dim, e2.v[i] AS x
-                 FROM s0 JOIN e2 USING (vec_id),
-                      UNNEST(range(1, len(e2.v) + 1)) AS t(i)),
-        means AS (SELECT cell, dim, ${davgSql("x", 15)} AS m
-                  FROM dims GROUP BY cell, dim),
-        c1 AS (SELECT cell AS cid, list(m ORDER BY dim) AS cv
-               FROM means GROUP BY cell),
-        c1n AS MATERIALIZED (SELECT cid, cv,
-                 list_sum(list_transform(cv, x -> x * x)) AS cc FROM c1),
-        asg AS MATERIALIZED (${ivfArgminSql("e2", "c1n")}),
+        $e2IndexCteSql,
         qv AS (SELECT vec_id AS qid, v AS av, nrm AS na, vv FROM e2
                WHERE vec_id < 50),
-        et AS (SELECT qid AS eqid, bvid AS ecid FROM (
-                 SELECT q.qid, b.vec_id AS bvid,
-                   ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-                     ROUND(list_sum([q.av[i] * b.v[i] for i in range(1, len(q.av) + 1)]) / (q.na * b.nrm), 6) DESC,
-                     b.vec_id) AS rk
-                 FROM qv q JOIN e2 b ON b.vec_id <> q.qid) s
-               WHERE rk <= 5),
-        pr AS (SELECT qid, cell, probe_rank FROM (
-                 SELECT q.qid, c.cid AS cell,
-                   ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-                     ROUND(q.vv - 2.0 * list_sum([q.av[i] * c.cv[i] for i in range(1, len(q.av) + 1)]) + c.cc, 6),
-                     c.cid) AS probe_rank
-                 FROM qv q CROSS JOIN c1n c) t
-               WHERE probe_rank <= 3),
-        cand AS (SELECT p.qid, p.probe_rank, b.vec_id AS cid,
-                   ROUND(list_sum([q.av[i] * b.v[i] for i in range(1, len(q.av) + 1)]) / (q.na * b.nrm), 6) AS cosr
-                 FROM pr p
-                 JOIN qv q ON q.qid = p.qid
-                 JOIN asg a ON a.cell = p.cell
-                 JOIN e2 b ON b.vec_id = a.vec_id AND b.vec_id <> p.qid),
-        lv AS (SELECT qid, cid, cosr, np
-               FROM cand, UNNEST(range(probe_rank, 4)) AS t(np)),
-        top AS (SELECT np, qid, cid FROM (SELECT *,
-                  ROW_NUMBER() OVER (PARTITION BY np, qid ORDER BY cosr DESC, cid) AS rk
-                FROM lv) t WHERE rk <= 5),
-        hits AS (SELECT t.np, CAST(COUNT(*) AS BIGINT) AS hits
-                 FROM top t JOIN et ON et.eqid = t.qid AND et.ecid = t.cid
-                 GROUP BY t.np),
-        vol AS (SELECT np, CAST(COUNT(*) AS BIGINT) AS candidates,
-                  CAST(COUNT(DISTINCT qid) AS BIGINT) AS n_queries
-                FROM lv GROUP BY np)
-        SELECT CAST(v.np AS INT) AS nprobe, nl.nlist, v.n_queries, v.candidates,
-          COALESCE(h.hits, CAST(0 AS BIGINT)) AS hits,
-          ROUND(CAST(COALESCE(h.hits, 0) AS DOUBLE) / (v.n_queries * 5), 6) AS recall_at_5
+        ${cosineTruthSql("qid")},
+        ${probeCteSql("c1n")},
+        $probedCandSql,
+        ${nprobeRecallSql("lv", etTruth)}
+        SELECT CAST(v.np AS INT) AS nprobe, nl.nlist, v.n_queries, v.candidates, $recallColsSql
         FROM vol v CROSS JOIN nl LEFT JOIN hits h ON h.np = v.np
         ORDER BY nprobe""")),
 
@@ -3554,93 +3586,26 @@ object Similarity {
           Seq("av"))
         val corpus = reps.select($"vec_id".as("cid"), $"v".as("bv"),
           $"nrm".as("nb"), $"copies")
-        val ew = Window.partitionBy($"qid").orderBy($"ecos".desc, $"cid")
-        val etop = broadcast(q).join(corpus, $"qrid" =!= $"cid")
-          .withColumn("ecos", round(expr(dotExpr) / ($"na" * $"nb"), 6))
-          .withColumn("rk", row_number().over(ew)).filter($"rk" <= 5)
-          .select($"qid".as("eqid"), $"cid".as("ecid"))
-          .localCheckpoint(true)
-        val pw = Window.partitionBy($"qid").orderBy($"d2", $"cell")
-        val probes = q.crossJoin(broadcast(c1.withColumnRenamed("cid", "cell")))
-          .withColumn("d2",
-            round($"vv" - lit(2.0) * expr("dot_product(av, cv)") + $"cc", 6))
-          .withColumn("probe_rank", row_number().over(pw))
-          .filter($"probe_rank" <= 3)
+        val etop = cosineTruth(q, corpus, $"qrid" =!= $"cid")
+        val probes = probeRanks(q, c1.withColumnRenamed("cid", "cell"))
           .select($"qid", $"qrid", $"av", $"na", $"cell", $"probe_rank")
         val cand = broadcast(probes)
           .join(corpus.join(asg.select($"vec_id".as("cid"), $"cell"), "cid"),
             Seq("cell"))
           .filter($"qrid" =!= $"cid")
           .withColumn("cosr", round(expr(dotExpr) / ($"na" * $"nb"), 6))
-          .withColumn("np", explode(expr("sequence(probe_rank, 3)")))
-        val w = Window.partitionBy($"np", $"qid").orderBy($"cosr".desc, $"cid")
-        val top = cand.withColumn("rk", row_number().over(w)).filter($"rk" <= 5)
-          .select($"np", $"qid", $"cid")
-        val hits = top.join(etop,
-            $"qid" === $"eqid" && $"cid" === $"ecid", "left_semi")
-          .groupBy($"np").agg(count(lit(1)).as("hits"))
-        cand.groupBy($"np")
-          .agg(count(lit(1)).as("rep_candidates"),
-            sum($"copies").as("eff_candidates"),
-            countDistinct($"qid").as("n_queries"))
-          .join(hits, Seq("np"), "left")
-          .select($"np".cast(IntegerType).as("nprobe"),
-            lit(nlist).as("nlist"), $"n_queries",
-            $"rep_candidates", $"eff_candidates",
-            coalesce($"hits", lit(0L)).as("hits"),
-            round(coalesce($"hits", lit(0L)).cast(DoubleType) / ($"n_queries" * 5), 6)
-              .as("recall_at_5"))
-          .orderBy($"nprobe")
+        nprobeRecall(cand, etop,
+          vol = Seq(count(lit(1)).as("rep_candidates"), sum($"copies").as("eff_candidates")),
+          lead = Seq(lit(nlist).as("nlist")))
       },
-      Some(s"""
-        WITH params AS (
-          SELECT doc_id // 5 AS vec_id, (doc_id // 5) // 2 AS b,
-            (doc_id // 5) % 2 AS variant
-          FROM documents WHERE doc_id % 5 = 0),
-        cells AS (
-          SELECT vec_id, i,
-            8 * ((b * 37
-                  + (CASE WHEN i = 1 THEN 0 ELSE i END) * 11
-                  + ((CASE WHEN i = 1 THEN 0 ELSE i END)
-                     * (CASE WHEN i = 1 THEN 0 ELSE i END)) % 7) % 32)
-            + CASE WHEN variant = 1 AND i = 0 THEN 3 ELSE 0 END AS g
-          FROM params, UNNEST(range(64)) AS t(i)),
-        fv AS (SELECT vec_id,
-                 list(CAST(CAST(g / 255.0 AS REAL) AS DOUBLE) ORDER BY i) AS v
-               FROM cells GROUP BY vec_id),
-        reps AS (SELECT MIN(vec_id) AS vec_id, v,
-                   CAST(COUNT(*) AS BIGINT) AS copies
-                 FROM fv GROUP BY v),
-        e2 AS MATERIALIZED (SELECT vec_id, v, copies,
-                 sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm,
-                 list_sum(list_transform(v, x -> x * x)) AS vv FROM reps),
-        nl AS (SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS nlist FROM e2),
-        c0 AS (SELECT vec_id AS cid, v AS cv, vv AS cc
-               FROM e2, nl WHERE vec_id < nl.nlist),
-        s0 AS MATERIALIZED (${ivfArgminSql("e2", "c0")}),
-        dims AS (SELECT s0.cell, i - 1 AS dim, e2.v[i] AS x
-                 FROM s0 JOIN e2 USING (vec_id),
-                      UNNEST(range(1, len(e2.v) + 1)) AS t(i)),
-        means AS (SELECT cell, dim, ${davgSql("x", 15)} AS m
-                  FROM dims GROUP BY cell, dim),
-        c1 AS (SELECT cell AS cid, list(m ORDER BY dim) AS cv
-               FROM means GROUP BY cell),
-        c1n AS MATERIALIZED (SELECT cid, cv,
-                 list_sum(list_transform(cv, x -> x * x)) AS cc FROM c1),
-        asg AS MATERIALIZED (${ivfArgminSql("e2", "c1n")}),
+      Some(s"""$mediaRepIndexCteSql,
         qv AS (SELECT f.vec_id AS qid, f.v AS av,
                  sqrt(list_sum(list_transform(f.v, x -> x * x))) AS na,
                  list_sum(list_transform(f.v, x -> x * x)) AS vv,
                  r.vec_id AS qrid
                FROM fv f JOIN reps r ON r.v = f.v
                WHERE f.vec_id < 50),
-        et AS (SELECT qid AS eqid, bvid AS ecid FROM (
-                 SELECT q.qid, b.vec_id AS bvid,
-                   ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-                     ROUND(list_sum([q.av[i] * b.v[i] for i in range(1, len(q.av) + 1)]) / (q.na * b.nrm), 6) DESC,
-                     b.vec_id) AS rk
-                 FROM qv q JOIN e2 b ON b.vec_id <> q.qrid) s
-               WHERE rk <= 5),
+        ${cosineTruthSql("qrid")},
         pr AS (SELECT qid, qrid, cell, probe_rank FROM (
                  SELECT q.qid, q.qrid, c.cid AS cell,
                    ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
@@ -3656,20 +3621,13 @@ object Similarity {
                  JOIN e2 b ON b.vec_id = a.vec_id AND b.vec_id <> p.qrid),
         lv AS (SELECT qid, cid, copies, cosr, np
                FROM cand, UNNEST(range(probe_rank, 4)) AS t(np)),
-        top AS (SELECT np, qid, cid FROM (SELECT *,
-                  ROW_NUMBER() OVER (PARTITION BY np, qid ORDER BY cosr DESC, cid) AS rk
-                FROM lv) t WHERE rk <= 5),
-        hits AS (SELECT t.np, CAST(COUNT(*) AS BIGINT) AS hits
-                 FROM top t JOIN et ON et.eqid = t.qid AND et.ecid = t.cid
-                 GROUP BY t.np),
+        ${nprobeHitsSql("lv", etTruth)},
         vol AS (SELECT np, CAST(COUNT(*) AS BIGINT) AS rep_candidates,
                   CAST(SUM(copies) AS BIGINT) AS eff_candidates,
                   CAST(COUNT(DISTINCT qid) AS BIGINT) AS n_queries
                 FROM lv GROUP BY np)
         SELECT CAST(v.np AS INT) AS nprobe, nl.nlist, v.n_queries,
-          v.rep_candidates, v.eff_candidates,
-          COALESCE(h.hits, CAST(0 AS BIGINT)) AS hits,
-          ROUND(CAST(COALESCE(h.hits, 0) AS DOUBLE) / (v.n_queries * 5), 6) AS recall_at_5
+          v.rep_candidates, v.eff_candidates, $recallColsSql
         FROM vol v CROSS JOIN nl LEFT JOIN hits h ON h.np = v.np
         ORDER BY nprobe""")),
 
@@ -3715,25 +3673,7 @@ object Similarity {
             $"neg_rank", $"nid".as("neg_rep"), $"ncos".as("neg_cos"))
           .orderBy($"anchor_id", $"neg_rank")
       },
-      Some(s"""
-        WITH params AS (
-          SELECT doc_id // 5 AS vec_id, (doc_id // 5) // 2 AS b,
-            (doc_id // 5) % 2 AS variant
-          FROM documents WHERE doc_id % 5 = 0),
-        cells AS (
-          SELECT vec_id, i,
-            8 * ((b * 37
-                  + (CASE WHEN i = 1 THEN 0 ELSE i END) * 11
-                  + ((CASE WHEN i = 1 THEN 0 ELSE i END)
-                     * (CASE WHEN i = 1 THEN 0 ELSE i END)) % 7) % 32)
-            + CASE WHEN variant = 1 AND i = 0 THEN 3 ELSE 0 END AS g
-          FROM params, UNNEST(range(64)) AS t(i)),
-        fv AS (SELECT vec_id,
-                 list(CAST(CAST(g / 255.0 AS REAL) AS DOUBLE) ORDER BY i) AS v
-               FROM cells GROUP BY vec_id),
-        reps AS (SELECT MIN(vec_id) AS vec_id, v,
-                   CAST(COUNT(*) AS BIGINT) AS copies
-                 FROM fv GROUP BY v),
+      Some(s"""$mediaRepsCteSql,
         rn AS (SELECT vec_id, v, copies,
                  sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
                FROM reps),
@@ -3824,12 +3764,7 @@ object Similarity {
           .select($"vec_id".as("qid"), $"v".as("av"), $"nrm".as("na"), $"vv")
         val q = q0.join(broadcast(reps.select($"v".as("av"),
           $"vec_id".as("qrid"), $"copies")), Seq("av"))
-        val pw = Window.partitionBy($"qid").orderBy($"d2", $"cell")
-        val probes = q.crossJoin(broadcast(c1.withColumnRenamed("cid", "cell")))
-          .withColumn("d2",
-            round($"vv" - lit(2.0) * expr("dot_product(av, cv)") + $"cc", 6))
-          .withColumn("probe_rank", row_number().over(pw))
-          .filter($"probe_rank" <= 3)
+        val probes = probeRanks(q, c1.withColumnRenamed("cid", "cell"))
           .select($"qid", $"qrid", $"copies", $"av", $"na", $"cell")
         val corpus = reps.select($"vec_id".as("cid"), $"v".as("bv"), $"nrm".as("nb"))
           .join(asg.select($"vec_id".as("cid"), $"cell"), "cid")
@@ -3854,42 +3789,7 @@ object Similarity {
             $"excluded_copies", $"neg_rank", $"neg_rep", $"neg_cos")
           .orderBy($"shard", $"pos_in_shard")
       },
-      Some(s"""
-        WITH params AS (
-          SELECT doc_id // 5 AS vec_id, (doc_id // 5) // 2 AS b,
-            (doc_id // 5) % 2 AS variant
-          FROM documents WHERE doc_id % 5 = 0),
-        cells AS (
-          SELECT vec_id, i,
-            8 * ((b * 37
-                  + (CASE WHEN i = 1 THEN 0 ELSE i END) * 11
-                  + ((CASE WHEN i = 1 THEN 0 ELSE i END)
-                     * (CASE WHEN i = 1 THEN 0 ELSE i END)) % 7) % 32)
-            + CASE WHEN variant = 1 AND i = 0 THEN 3 ELSE 0 END AS g
-          FROM params, UNNEST(range(64)) AS t(i)),
-        fv AS (SELECT vec_id,
-                 list(CAST(CAST(g / 255.0 AS REAL) AS DOUBLE) ORDER BY i) AS v
-               FROM cells GROUP BY vec_id),
-        reps AS (SELECT MIN(vec_id) AS vec_id, v,
-                   CAST(COUNT(*) AS BIGINT) AS copies
-                 FROM fv GROUP BY v),
-        e2 AS MATERIALIZED (SELECT vec_id, v, copies,
-                 sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm,
-                 list_sum(list_transform(v, x -> x * x)) AS vv FROM reps),
-        nl AS (SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS nlist FROM e2),
-        c0 AS (SELECT vec_id AS cid, v AS cv, vv AS cc
-               FROM e2, nl WHERE vec_id < nl.nlist),
-        s0 AS MATERIALIZED (${ivfArgminSql("e2", "c0")}),
-        dims AS (SELECT s0.cell, i - 1 AS dim, e2.v[i] AS x
-                 FROM s0 JOIN e2 USING (vec_id),
-                      UNNEST(range(1, len(e2.v) + 1)) AS t(i)),
-        means AS (SELECT cell, dim, ${davgSql("x", 15)} AS m
-                  FROM dims GROUP BY cell, dim),
-        c1 AS (SELECT cell AS cid, list(m ORDER BY dim) AS cv
-               FROM means GROUP BY cell),
-        c1n AS MATERIALIZED (SELECT cid, cv,
-                 list_sum(list_transform(cv, x -> x * x)) AS cc FROM c1),
-        asg AS MATERIALIZED (${ivfArgminSql("e2", "c1n")}),
+      Some(s"""$mediaRepIndexCteSql,
         qv AS (SELECT f.vec_id AS qid, f.v AS av,
                  sqrt(list_sum(list_transform(f.v, x -> x * x))) AS na,
                  list_sum(list_transform(f.v, x -> x * x)) AS vv,
@@ -3955,21 +3855,9 @@ object Similarity {
         val (e, c1, _) = sqrtnIndex(s, dir)
         val (gedges, anchors) = nswGraph(s, dir)
         val tomb = e.filter($"label" % 2 === 0).select($"vec_id".as("cid"))
-        val ew2 = Window.partitionBy($"qid").orderBy($"cosr".desc, $"cid")
-        val exact = probeScored(s, dir)
-          .join(tomb, Seq("cid"), "left_anti")
-          .withColumn("rank", row_number().over(ew2)).filter($"rank" <= 5)
-          .select($"qid".as("eqid"), $"cid".as("ecid"))
-          .localCheckpoint(true)
-        val q = e.filter($"vec_id" < 50)
-          .select($"vec_id".as("qid"), $"v".as("av"), $"nrm".as("na"), $"vv")
-        val corpus = e.select($"vec_id".as("cid"), $"v".as("bv"), $"nrm".as("nb"))
-        val visited = nswBeamRounds(q, nswEntry(q, c1, anchors), gedges, corpus)
-        nswServeStats(visited, exact, tomb = Some(tomb))
+        nswServe(e, c1, gedges, anchors, liveTruth(s, dir, tomb), tomb = Some(tomb))
           .select($"round",
-            $"n_queries", $"scored", $"dead_scored", $"hits",
-            round($"hits".cast(DoubleType) / ($"n_queries" * 5), 6)
-              .as("recall_at_5"))
+            $"n_queries", $"scored", $"dead_scored", $"hits", recallAt5)
           .orderBy($"round")
       },
       Some {
@@ -3985,23 +3873,16 @@ object Similarity {
               (SELECT CAST(COUNT(*) AS BIGINT) FROM lt$r t
                JOIN lnn ON lnn.qid = t.qid AND lnn.cid = t.cid) AS hits)"""
         }.mkString(",\n          ")
-        val outs = (1 to NswRounds).map(r => s"SELECT * FROM lst$r")
-          .mkString("\n          UNION ALL ")
         s"""$prepCte,
         $knnTop5Cte,
         $sqrtnAsgCteSql,
-        tomb AS (SELECT vec_id FROM n WHERE label % 2 = 0),
-        lnn AS (SELECT qid, cid FROM (
-            SELECT s.qid, s.cid,
-              ROW_NUMBER() OVER (PARTITION BY s.qid ORDER BY s.cosr DESC, s.cid) AS rk
-            FROM scored s WHERE s.cid NOT IN (SELECT vec_id FROM tomb)) t
-            WHERE rk <= 5),
-        $nswBeamCtes,
+        $liveTruthSql,
+        ${nswBeamCtes("e2")},
         $stats
         SELECT CAST(round AS INT) AS round,
           n_queries, scored, dead_scored, hits,
           ROUND(CAST(hits AS DOUBLE) / (n_queries * 5), 6) AS recall_at_5
-        FROM ($outs)
+        FROM (${nswRoundsUnionSql("lst")})
         ORDER BY round"""
       }),
 
@@ -4043,91 +3924,35 @@ object Similarity {
           SessionMemo.get(s, s"sqrtn-index-old:$dir")(lloydOnce(old))
         val (gedges, anchors) =
           SessionMemo.get(s, s"nsw-graph-ingest:$dir") {
-            val aw = Window.partitionBy($"vec_id").orderBy($"d2", $"cell")
-            def top2cells(part: DataFrame): DataFrame = part
-              .crossJoin(broadcast(c1o.select($"cid".as("cell"), $"cv", $"cc")))
-              .withColumn("d2",
-                round($"vv" - lit(2.0) * expr("dot_product(v, cv)") + $"cc", 6))
-              .withColumn("rk", row_number().over(aw)).filter($"rk" <= 2)
-              .select($"vec_id", $"cell")
-            val asg2o = top2cells(old)
-            val fasg2 = top2cells(fresh)
-            val sv = e.select($"vec_id", $"v", $"nrm")
-            def scorePairs(pairs: DataFrame): DataFrame = pairs
-              .join(sv.select($"vec_id".as("src"), $"v".as("av"), $"nrm".as("na")), "src")
-              .join(sv.select($"vec_id".as("dst"), $"v".as("bv"), $"nrm".as("nb")), "dst")
-              .withColumn("cosr", round(expr(dotExpr) / ($"na" * $"nb"), 6))
-              .select($"src", $"dst", $"cosr")
-            val ew = Window.partitionBy($"src").orderBy($"cosr".desc, $"dst")
-            val oldTop = scorePairs(
+            val asg2o = top2Cells(old, c1o)
+            val fasg2 = top2Cells(fresh, c1o)
+            val oldTop = nswTopDeg(
               asg2o.select($"cell", $"vec_id".as("src"))
                 .join(asg2o.select($"cell", $"vec_id".as("dst")), Seq("cell"))
                 .filter($"src" =!= $"dst")
-                .select($"src", $"dst").distinct())
-              .withColumn("rk", row_number().over(ew)).filter($"rk" <= NswDeg)
-              .select($"src", $"dst", $"cosr")
-            val oldSym = oldTop
-              .union(oldTop.select($"dst".as("src"), $"src".as("dst"), $"cosr"))
-              .distinct()
-            val freshTop = scorePairs(
+                .select($"src", $"dst").distinct(), e)
+            val freshTop = nswTopDeg(
               fasg2.select($"cell", $"vec_id".as("src"))
                 .join(asg2o.select($"cell", $"vec_id".as("dst")), Seq("cell"))
-                .select($"src", $"dst").distinct())
-              .withColumn("rk", row_number().over(ew)).filter($"rk" <= NswDeg)
-              .select($"src", $"dst", $"cosr")
-            val freshSym = freshTop
-              .union(freshTop.select($"dst".as("src"), $"src".as("dst"), $"cosr"))
-            val edges = oldSym.union(freshSym)
-              .withColumn("rk", row_number().over(ew)).filter($"rk" <= 2 * NswDeg)
-              .select($"src", $"dst")
-              .localCheckpoint(true)
-            val aw1 = Window.partitionBy($"cell").orderBy($"d2", $"vec_id")
-            val anch = sqrtnAssign(old, c1o)
-              .join(e.select($"vec_id", $"v", $"vv"), "vec_id")
-              .join(c1o.select($"cid".as("cell"), $"cv", $"cc"), "cell")
-              .withColumn("d2",
-                round($"vv" - lit(2.0) * expr("dot_product(v, cv)") + $"cc", 6))
-              .withColumn("rk", row_number().over(aw1)).filter($"rk" <= NswAnchors)
-              .select($"cell", $"vec_id".as("cid"))
-              .localCheckpoint(true)
-            (edges, anch)
+                .select($"src", $"dst").distinct(), e)
+            (nswPrune(bothArcs(oldTop).distinct().union(bothArcs(freshTop))),
+              nswAnchors(sqrtnAssign(old, c1o), e, c1o))
           }
         val exact = knnTop5(s, dir).select($"qid".as("eqid"), $"cid".as("ecid"))
           .localCheckpoint(true)
         val newTruth = exact.filter($"ecid" >= n0)
-        val q = e.filter($"vec_id" < 50)
-          .select($"vec_id".as("qid"), $"v".as("av"), $"nrm".as("na"), $"vv")
-        val corpus = e.select($"vec_id".as("cid"), $"v".as("bv"), $"nrm".as("nb"))
-        val visited = nswBeamRounds(q, nswEntry(q, c1o, anchors), gedges, corpus)
         val newT = newTruth.agg(count(lit(1)).as("new_truth"))
-        nswServeStats(visited, exact, newTruth = Some(newTruth))
+        nswServe(e, c1o, gedges, anchors, exact, newTruth = Some(newTruth))
           .crossJoin(broadcast(newT))
           .select($"round",
-            lit(nNew).as("n_new"), $"n_queries", $"scored", $"hits",
-            round($"hits".cast(DoubleType) / ($"n_queries" * 5), 6)
-              .as("recall_at_5"),
+            lit(nNew).as("n_new"), $"n_queries", $"scored", $"hits", recallAt5,
             $"new_truth", $"new_hits",
             when($"new_truth" === 0, lit(0.0))
               .otherwise(round($"new_hits".cast(DoubleType) / $"new_truth", 6))
               .as("new_recall"))
           .orderBy($"round")
       },
-      Some {
-        val stats = (1 to NswRounds).map { r =>
-          s"""t$r AS (SELECT qid, cid FROM (SELECT qid, cid,
-                ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosr DESC, cid) AS rk
-              FROM v$r) t WHERE rk <= 5),
-          st$r AS (SELECT $r AS round,
-              (SELECT CAST(COUNT(DISTINCT qid) AS BIGINT) FROM v$r) AS n_queries,
-              (SELECT CAST(COUNT(*) AS BIGINT) FROM v$r) AS scored,
-              (SELECT CAST(COUNT(*) AS BIGINT) FROM t$r t
-               JOIN nn ON nn.qid = t.qid AND nn.cid = t.cid) AS hits,
-              (SELECT CAST(COUNT(*) AS BIGINT) FROM t$r t
-               JOIN nnew ON nnew.qid = t.qid AND nnew.cid = t.cid) AS new_hits)"""
-        }.mkString(",\n          ")
-        val outs = (1 to NswRounds).map(r => s"SELECT * FROM st$r")
-          .mkString("\n          UNION ALL ")
-        s"""$prepCte,
+      Some(s"""$prepCte,
         $knnTop5Cte,
         e2 AS (SELECT vec_id, v, nrm,
                  list_sum(list_transform(v, x -> x * x)) AS vv FROM n),
@@ -4136,72 +3961,29 @@ object Similarity {
                 FROM e2, spl WHERE e2.vec_id >= spl.n0),
         nnew AS (SELECT nn.qid, nn.cid FROM nn, spl WHERE nn.cid >= spl.n0),
         ntc AS (SELECT CAST(COUNT(*) AS BIGINT) AS new_truth FROM nnew),
-        e2o AS (SELECT e2.* FROM e2, spl WHERE e2.vec_id < spl.n0),
-        e2n AS (SELECT e2.* FROM e2, spl WHERE e2.vec_id >= spl.n0),
-        nlo AS (SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS nlist FROM e2o),
-        c0 AS (SELECT vec_id AS cid, v AS cv, vv AS cc
-               FROM e2o, nlo WHERE vec_id < nlo.nlist),
-        s0 AS MATERIALIZED (${ivfArgminSql("e2o", "c0")}),
-        dims AS (SELECT s0.cell, i - 1 AS dim, e2o.v[i] AS x
-                 FROM s0 JOIN e2o USING (vec_id),
-                      UNNEST(range(1, len(e2o.v) + 1)) AS t(i)),
-        means AS (SELECT cell, dim, ${davgSql("x", 15)} AS m
-                  FROM dims GROUP BY cell, dim),
-        c1 AS (SELECT cell AS cid, list(m ORDER BY dim) AS cv FROM means GROUP BY cell),
-        c1n AS MATERIALIZED (SELECT cid, cv,
-                 list_sum(list_transform(cv, x -> x * x)) AS cc FROM c1),
+        $oldIndexCteSql,
         asg AS MATERIALIZED (${ivfArgminSql("e2o", "c1n")}),
-        asg2 AS MATERIALIZED (SELECT vec_id, cell FROM (
-            SELECT e2o.vec_id, c.cid AS cell,
-              ROW_NUMBER() OVER (PARTITION BY e2o.vec_id ORDER BY
-                ROUND(e2o.vv - 2.0 * list_sum([e2o.v[i] * c.cv[i] for i in range(1, len(e2o.v) + 1)]) + c.cc, 6),
-                c.cid) AS rk
-            FROM e2o CROSS JOIN c1n c) t WHERE rk <= 2),
-        fasg2 AS MATERIALIZED (SELECT vec_id, cell FROM (
-            SELECT e2n.vec_id, c.cid AS cell,
-              ROW_NUMBER() OVER (PARTITION BY e2n.vec_id ORDER BY
-                ROUND(e2n.vv - 2.0 * list_sum([e2n.v[i] * c.cv[i] for i in range(1, len(e2n.v) + 1)]) + c.cc, 6),
-                c.cid) AS rk
-            FROM e2n CROSS JOIN c1n c) t WHERE rk <= 2),
-        gpairs AS MATERIALIZED (SELECT DISTINCT a.vec_id AS src, b.vec_id AS dst
-            FROM asg2 a JOIN asg2 b USING (cell) WHERE a.vec_id <> b.vec_id),
-        gsc AS MATERIALIZED (SELECT p.src, p.dst,
-              ROUND(list_sum([sa.v[i] * sb.v[i] for i in range(1, len(sa.v) + 1)]) / (sa.nrm * sb.nrm), 6) AS cosr
-            FROM gpairs p JOIN n sa ON sa.vec_id = p.src
-            JOIN n sb ON sb.vec_id = p.dst),
-        gtop AS (SELECT src, dst, cosr FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY src ORDER BY cosr DESC, dst) AS rk
-            FROM gsc) t WHERE rk <= $NswDeg),
-        gsym AS (SELECT DISTINCT * FROM (
-            SELECT src, dst, cosr FROM gtop
-            UNION ALL SELECT dst AS src, src AS dst, cosr FROM gtop) u),
+        ${top2CellsSql("asg2", "e2o")},
+        ${top2CellsSql("fasg2", "e2n")},
+        $nswSymCtes,
         fpairs AS MATERIALIZED (SELECT DISTINCT f.vec_id AS src, a.vec_id AS dst
             FROM fasg2 f JOIN asg2 a USING (cell)),
-        fsc AS MATERIALIZED (SELECT p.src, p.dst,
-              ROUND(list_sum([sa.v[i] * sb.v[i] for i in range(1, len(sa.v) + 1)]) / (sa.nrm * sb.nrm), 6) AS cosr
-            FROM fpairs p JOIN n sa ON sa.vec_id = p.src
-            JOIN n sb ON sb.vec_id = p.dst),
-        ftop AS (SELECT src, dst, cosr FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY src ORDER BY cosr DESC, dst) AS rk
-            FROM fsc) t WHERE rk <= $NswDeg),
+        ${nswTopDegSql("f")},
         fsym AS (SELECT src, dst, cosr FROM ftop
             UNION ALL SELECT dst AS src, src AS dst, cosr FROM ftop),
         gall AS (SELECT * FROM gsym UNION ALL SELECT * FROM fsym),
-        gedges AS MATERIALIZED (SELECT src, dst FROM (
-            SELECT src, dst, ROW_NUMBER() OVER (PARTITION BY src ORDER BY cosr DESC, dst) AS rk
-            FROM gall) t WHERE rk <= ${2 * NswDeg}),
+        ${nswEdgesSql("gall")},
         $nswServePrepCtes,
         $nswRoundCtes,
-        $stats
+        ${nswRoundStatsSql("hits" -> "nn", "new_hits" -> "nnew")}
         SELECT CAST(s.round AS INT) AS round, w.n_new,
           s.n_queries, s.scored, s.hits,
           ROUND(CAST(s.hits AS DOUBLE) / (s.n_queries * 5), 6) AS recall_at_5,
           c.new_truth, s.new_hits,
           CASE WHEN c.new_truth = 0 THEN 0.0
                ELSE ROUND(CAST(s.new_hits AS DOUBLE) / c.new_truth, 6) END AS new_recall
-        FROM ($outs) s CROSS JOIN nnw w CROSS JOIN ntc c
-        ORDER BY round"""
-      }),
+        FROM (${nswRoundsUnionSql("st")}) s CROSS JOIN nnw w CROSS JOIN ntc c
+        ORDER BY round""")),
 
     // ---- compacted graph rebuild recall (q224) -------------------------
     // The REBUILD leg that closes the graph deletion chain (q222's
@@ -4237,90 +4019,26 @@ object Similarity {
           SessionMemo.get(s, s"sqrtn-index-live:$dir")(lloydOnce(live))
         val (gedges, anchors) =
           SessionMemo.get(s, s"nsw-graph-live:$dir")(buildNswGraphOver(live, c1l))
-        val ew2 = Window.partitionBy($"qid").orderBy($"cosr".desc, $"cid")
-        val exact = probeScored(s, dir)
-          .join(tomb, Seq("cid"), "left_anti")
-          .withColumn("rank", row_number().over(ew2)).filter($"rank" <= 5)
-          .select($"qid".as("eqid"), $"cid".as("ecid"))
-          .localCheckpoint(true)
-        val q = e.filter($"vec_id" < 50)
-          .select($"vec_id".as("qid"), $"v".as("av"), $"nrm".as("na"), $"vv")
-        val corpus = e.select($"vec_id".as("cid"), $"v".as("bv"), $"nrm".as("nb"))
-        val visited = nswBeamRounds(q, nswEntry(q, c1l, anchors), gedges, corpus)
-        nswServeStats(visited, exact)
-          .select($"round",
-            $"n_queries", $"scored", $"hits",
-            round($"hits".cast(DoubleType) / ($"n_queries" * 5), 6)
-              .as("recall_at_5"))
+        nswServe(e, c1l, gedges, anchors, liveTruth(s, dir, tomb))
+          .select($"round", $"n_queries", $"scored", $"hits", recallAt5)
           .orderBy($"round")
       },
-      Some {
-        val stats = (1 to NswRounds).map { r =>
-          s"""t$r AS (SELECT qid, cid FROM (SELECT qid, cid,
-                ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosr DESC, cid) AS rk
-              FROM v$r) t WHERE rk <= 5),
-          st$r AS (SELECT $r AS round,
-              (SELECT CAST(COUNT(DISTINCT qid) AS BIGINT) FROM v$r) AS n_queries,
-              (SELECT CAST(COUNT(*) AS BIGINT) FROM v$r) AS scored,
-              (SELECT CAST(COUNT(*) AS BIGINT) FROM t$r t
-               JOIN lnn ON lnn.qid = t.qid AND lnn.cid = t.cid) AS hits)"""
-        }.mkString(",\n          ")
-        val outs = (1 to NswRounds).map(r => s"SELECT * FROM st$r")
-          .mkString("\n          UNION ALL ")
-        s"""$prepCte,
+      Some(s"""$prepCte,
         $knnTop5Cte,
         e2 AS (SELECT vec_id, v, nrm,
                  list_sum(list_transform(v, x -> x * x)) AS vv FROM n),
-        tomb AS (SELECT vec_id FROM n WHERE label % 2 = 0),
-        lnn AS (SELECT qid, cid FROM (
-            SELECT s.qid, s.cid,
-              ROW_NUMBER() OVER (PARTITION BY s.qid ORDER BY s.cosr DESC, s.cid) AS rk
-            FROM scored s WHERE s.cid NOT IN (SELECT vec_id FROM tomb)) t
-            WHERE rk <= 5),
+        $liveTruthSql,
         e2l AS (SELECT e2.* FROM e2 JOIN n USING (vec_id) WHERE n.label % 2 <> 0),
         nll AS (SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS nlist FROM e2l),
-        c0 AS (SELECT vec_id AS cid, v AS cv, vv AS cc
-               FROM e2l, nll WHERE vec_id < nll.nlist),
-        s0 AS MATERIALIZED (${ivfArgminSql("e2l", "c0")}),
-        dims AS (SELECT s0.cell, i - 1 AS dim, e2l.v[i] AS x
-                 FROM s0 JOIN e2l USING (vec_id),
-                      UNNEST(range(1, len(e2l.v) + 1)) AS t(i)),
-        means AS (SELECT cell, dim, ${davgSql("x", 15)} AS m
-                  FROM dims GROUP BY cell, dim),
-        c1 AS (SELECT cell AS cid, list(m ORDER BY dim) AS cv FROM means GROUP BY cell),
-        c1n AS MATERIALIZED (SELECT cid, cv,
-                 list_sum(list_transform(cv, x -> x * x)) AS cc FROM c1),
+        ${lloydCteSql("e2l", "nll")},
         asg AS MATERIALIZED (${ivfArgminSql("e2l", "c1n")}),
-        asg2 AS MATERIALIZED (SELECT vec_id, cell FROM (
-            SELECT e2l.vec_id, c.cid AS cell,
-              ROW_NUMBER() OVER (PARTITION BY e2l.vec_id ORDER BY
-                ROUND(e2l.vv - 2.0 * list_sum([e2l.v[i] * c.cv[i] for i in range(1, len(e2l.v) + 1)]) + c.cc, 6),
-                c.cid) AS rk
-            FROM e2l CROSS JOIN c1n c) t WHERE rk <= 2),
-        gpairs AS MATERIALIZED (SELECT DISTINCT a.vec_id AS src, b.vec_id AS dst
-            FROM asg2 a JOIN asg2 b USING (cell) WHERE a.vec_id <> b.vec_id),
-        gsc AS MATERIALIZED (SELECT p.src, p.dst,
-              ROUND(list_sum([sa.v[i] * sb.v[i] for i in range(1, len(sa.v) + 1)]) / (sa.nrm * sb.nrm), 6) AS cosr
-            FROM gpairs p JOIN n sa ON sa.vec_id = p.src
-            JOIN n sb ON sb.vec_id = p.dst),
-        gtop AS (SELECT src, dst, cosr FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY src ORDER BY cosr DESC, dst) AS rk
-            FROM gsc) t WHERE rk <= $NswDeg),
-        gsym AS (SELECT DISTINCT * FROM (
-            SELECT src, dst, cosr FROM gtop
-            UNION ALL SELECT dst AS src, src AS dst, cosr FROM gtop) u),
-        gedges AS MATERIALIZED (SELECT src, dst FROM (
-            SELECT src, dst, ROW_NUMBER() OVER (PARTITION BY src ORDER BY cosr DESC, dst) AS rk
-            FROM gsym) t WHERE rk <= ${2 * NswDeg}),
-        $nswServePrepCtes,
-        $nswRoundCtes,
-        $stats
+        ${nswBeamCtes("e2l")},
+        ${nswRoundStatsSql("hits" -> "lnn")}
         SELECT CAST(round AS INT) AS round,
           n_queries, scored, hits,
           ROUND(CAST(hits AS DOUBLE) / (n_queries * 5), 6) AS recall_at_5
-        FROM ($outs)
-        ORDER BY round"""
-      }),
+        FROM (${nswRoundsUnionSql("st")})
+        ORDER BY round""")),
 
     // ---- graph index persistence round-trip (q225) ---------------------
     // q204's counterpart for the graph index, completing full

@@ -218,18 +218,7 @@ object TrainingOps {
           .filter($"jacc" >= 0.5)
           .orderBy($"ida", $"idb")
       },
-      Some(s"""${Dedup.shingleCte},
-        dsh AS (SELECT DISTINCT doc_id, s FROM sh),
-        df AS (SELECT s, COUNT(*) AS dfc FROM dsh GROUP BY s),
-        rare AS (SELECT dsh.doc_id, dsh.s FROM dsh JOIN df ON dsh.s = df.s WHERE df.dfc <= 8),
-        cand AS (SELECT a.doc_id AS ida, b.doc_id AS idb
-                 FROM rare a JOIN rare b ON a.s = b.s AND a.doc_id < b.doc_id
-                 GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-        card AS (SELECT doc_id, COUNT(*) AS n FROM dsh GROUP BY doc_id),
-        inter AS (SELECT c.ida, c.idb, COUNT(*) AS i FROM cand c
-                  JOIN dsh x ON x.doc_id = c.ida
-                  JOIN dsh y ON y.doc_id = c.idb AND x.s = y.s
-                  GROUP BY c.ida, c.idb)
+      Some(s"""${Dedup.shingleCte},${Dedup.rareShingleInterCteSql}
         SELECT ida, idb, ROUND(CAST(i AS DOUBLE) / (ca.n + cb.n - i), 6) AS jacc
         FROM inter JOIN card ca ON ida = ca.doc_id JOIN card cb ON idb = cb.doc_id
         WHERE ROUND(CAST(i AS DOUBLE) / (ca.n + cb.n - i), 6) >= 0.5
@@ -721,18 +710,7 @@ object TrainingOps {
             $"cont".as("containment"))
           .orderBy($"contained_id", $"container_id")
       },
-      Some(s"""${Dedup.shingleCte},
-        dsh AS (SELECT DISTINCT doc_id, s FROM sh),
-        df AS (SELECT s, COUNT(*) AS dfc FROM dsh GROUP BY s),
-        rare AS (SELECT dsh.doc_id, dsh.s FROM dsh JOIN df ON dsh.s = df.s WHERE df.dfc <= 8),
-        cand AS (SELECT a.doc_id AS ida, b.doc_id AS idb
-                 FROM rare a JOIN rare b ON a.s = b.s AND a.doc_id < b.doc_id
-                 GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-        card AS (SELECT doc_id, COUNT(*) AS n FROM dsh GROUP BY doc_id),
-        inter AS (SELECT c.ida, c.idb, COUNT(*) AS i FROM cand c
-                  JOIN dsh x ON x.doc_id = c.ida
-                  JOIN dsh y ON y.doc_id = c.idb AND x.s = y.s
-                  GROUP BY c.ida, c.idb),
+      Some(s"""${Dedup.shingleCte},${Dedup.rareShingleInterCteSql},
         scored AS (SELECT i.ida, i.idb, ca.n AS na, cb.n AS nb, i.i,
                      ROUND(CAST(i.i AS DOUBLE) / LEAST(ca.n, cb.n), 6) AS cont
                    FROM inter i JOIN card ca ON i.ida = ca.doc_id

@@ -15,13 +15,11 @@ import graft.types.AType
   * can only do collection-at-a-time.
   *
   * Buffer is the ordered field->[[AType]] vector — the typed lattice
-  * values themselves, NOT alias strings: `AType.forAlias` can't parse
-  * `struct<...>` aliases, so an alias round-trip mid-aggregation would
-  * silently degrade nested types to string. `AType` is Serializable and
-  * the buffer rides the kryo encoder, so no lossy re-parse ever
-  * happens; merge is `Schema.merge` (mongo2pq/schema.py:34-53). Output
-  * is the `!schema` YAML document, so `collect()`ing the result
-  * round-trips through [[SchemaYaml]].
+  * values themselves, NOT alias strings, so merging partial buffers
+  * never renders and re-parses a type. `AType` is Serializable and the
+  * buffer rides the kryo encoder; merge is `Schema.merge`
+  * (mongo2pq/schema.py:34-53). Output is the `!schema` YAML document,
+  * so `collect()`ing the result round-trips through [[SchemaYaml]].
   */
 class SchemaAggregator(name: String, nowEpochSec: Double)
     extends Aggregator[String, Vector[(String, AType)], String] {

@@ -27,6 +27,38 @@ class RegistrySmokeSpec extends SparkSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("every oracle defines each top-level CTE name at most once") {
+    // oracles are composed from shared CTE fragments; a fragment that
+    // redefines a name its caller already defines (a second `qv` or
+    // `fv`) is an error only DuckDB reports, so catch it here
+    val head = """(?is).*\b(\w+)\s+AS\s+(?:MATERIALIZED\s+)?\(""".r
+    def topLevelCtes(sql: String): Seq[String] = {
+      val names = Vector.newBuilder[String]
+      var depth = 0
+      var quoted = false
+      for (i <- sql.indices) sql(i) match {
+        case '\'' => quoted = !quoted
+        case '(' if !quoted =>
+          if (depth == 0) sql.substring(math.max(0, i - 120), i + 1) match {
+            case head(name) => names += name.toLowerCase
+            case _ =>
+          }
+          depth += 1
+        case ')' if !quoted => depth -= 1
+        case _ =>
+      }
+      names.result()
+    }
+    val q168 = topLevelCtes(SparkEntry.oracleSql("q168_ivf_sqrtn_recall"))
+    assert(Seq("nn", "e2", "c1n", "asg", "qv", "pr", "cand", "lv", "top", "hits", "vol")
+      .forall(q168.contains), q168)
+    val dups = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap { case (name, sql) =>
+      val twice = topLevelCtes(sql).groupBy(identity).collect { case (c, g) if g.size > 1 => c }
+      if (twice.isEmpty) None else Some(s"$name: ${twice.toSeq.sorted.mkString(", ")}")
+    }
+    assert(dups.isEmpty, dups.mkString("\n"))
+  }
+
   test("registry names are unique (a duplicate would shadow a query in the Map)") {
     val names = SparkEntry.registry.map(_.name)
     assert(names.distinct.size == names.size,

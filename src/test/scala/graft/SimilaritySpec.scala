@@ -820,4 +820,33 @@ class SimilaritySpec extends SparkSuite {
       assert(byRank.sliding(2).forall(p => p(0) >= p(1)))
     }
   }
+
+  test("the shared recall-by-nprobe tail counts levels, ties and the top-5 cut exactly") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    // (qid, cid, probe_rank, cosr): query 1 has candidates at all three
+    // probe ranks, query 2 at ranks 1 and 3, query 3 only at rank 2
+    val cand = Seq(
+      (1L, 10L, 1, 0.9), (1L, 11L, 1, 0.8),
+      (1L, 12L, 2, 0.95), (1L, 13L, 2, 0.1),
+      (1L, 14L, 3, 0.5), (1L, 15L, 3, 0.5), (1L, 16L, 3, 0.5),
+      (2L, 20L, 1, 0.7), (2L, 21L, 3, 0.99),
+      (3L, 30L, 2, 0.6)
+    ).toDF("qid", "cid", "probe_rank", "cosr")
+    // 16 is true but ties 14/15 at 0.5 and loses the cid tiebreak for
+    // query 1's fifth slot at np = 3; 99 and 31 are never candidates
+    val exact = Seq((1L, 10L), (1L, 12L), (1L, 14L), (1L, 16L), (1L, 99L),
+      (2L, 21L), (3L, 30L), (3L, 31L)).toDF("eqid", "ecid")
+    val out = graft.operators.Similarity.nprobeRecall(cand, exact,
+      lead = Seq(lit(7L).as("nlist")))
+    assert(out.columns.toSeq ==
+      Seq("nprobe", "nlist", "n_queries", "candidates", "hits", "recall_at_5"))
+    val got = out.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
+      r.getLong(3), r.getLong(4), r.getDouble(5))).toSeq
+    assert(got == Seq(
+      (1, 7L, 2L, 3L, 1L, 0.1),       // q1 {10, 11}, q2 {20}: hit 10
+      (2, 7L, 3L, 6L, 3L, 0.2),       // + q1 {12, 13}, q3 {30}: hits 10, 12, 30
+      (3, 7L, 3L, 10L, 5L, 0.333333)  // q1 top-5 12, 10, 11, 14, 15: hits 12, 10, 14; + 21, 30
+    ), got)
+  }
 }
