@@ -83,7 +83,7 @@ object Extras {
 
   /** Oracle tail: half-band join + popcount verify over `hashes`,
     * emitting the (ida, idb, hamming ≤ 1) pair rows — shared by the
-    * q195 and q198 oracles. */
+    * q195, q198 and q199 oracles. */
   private val hamming1PairsTailSql: String = """bands AS (
           SELECT media_id, phash, 0 AS band, CAST(u % 4294967296 AS BIGINT) AS half FROM hashes
           UNION ALL
@@ -1070,16 +1070,7 @@ object Extras {
       },
       Some(s"""
         WITH $phashOracleCte,
-        bands AS (
-          SELECT media_id, phash, 0 AS band, CAST(u % 4294967296 AS BIGINT) AS half FROM hashes
-          UNION ALL
-          SELECT media_id, phash, 1 AS band, CAST(u // 4294967296 AS BIGINT) AS half FROM hashes),
-        cand AS (
-          SELECT DISTINCT a.media_id AS ida, b.media_id AS idb, a.phash AS ha, b.phash AS hb
-          FROM bands a JOIN bands b ON a.band = b.band AND a.half = b.half AND a.media_id < b.media_id)
-        SELECT ida, idb, CAST(bit_count(xor(ha, hb)) AS INT) AS hamming
-        FROM cand WHERE bit_count(xor(ha, hb)) <= 1
-        ORDER BY ida, idb""")),
+        $hamming1PairsTailSql""")),
 
     // ---- layered media dedup: exact collapse, then near-dup (q197) ----
     // q195's media-id pair output is inherently quadratic on a
