@@ -1464,10 +1464,10 @@ object Similarity {
     * removed before ranking, eagerly pinned. */
   private def liveTruth(s: SparkSession, dir: String, tomb: DataFrame): DataFrame = {
     import s.implicits._
-    val ew2 = Window.partitionBy($"qid").orderBy($"cosr".desc, $"cid")
+    val w = Window.partitionBy($"qid").orderBy($"cosr".desc, $"cid")
     probeScored(s, dir)
       .join(tomb, Seq("cid"), "left_anti")
-      .withColumn("rank", row_number().over(ew2)).filter($"rank" <= 5)
+      .withColumn("rank", row_number().over(w)).filter($"rank" <= 5)
       .select($"qid".as("eqid"), $"cid".as("ecid"))
       .localCheckpoint(true)
   }
